@@ -5,13 +5,15 @@ queries()      — every implemented operator from SURVEY.md §2 as
                  (spark, sf_dir) -> DataFrame callables.
 oracle_sql()   — matching DuckDB SQL for the correctness gate.
 
-Implementation lives in predictor_spark/plans/catalog.py; this module is a
+Implementation lives in predictor_spark/plans/catalog*.py; this module is a
 thin stable shim.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 import sys
 from collections.abc import Callable
 
@@ -28,374 +30,23 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _load_catalog():
-    # importing the catalog modules populates the QUERIES/ORACLE registries
+    """Import every plans module that registers queries — each `catalog*`
+    module plus `champion` — populating the QUERIES/ORACLE registries.
+    A module that fails to import raises: it must not silently drop its
+    rows. A duplicate query name raises at registration (catalog.query)."""
+    import predictor_spark.plans as plans
     import predictor_spark.plans.catalog as catalog
-    import predictor_spark.plans.catalog_text  # noqa: F401
 
-    for mod in ("catalog_streaming", "catalog_multimodal", "catalog_forecast",
-                "catalog_analytics", "catalog_mllib", "catalog_parity",
-                "catalog_models", "catalog_search", "catalog_trading",
-                "catalog_e2e", "champion", "catalog_datapipe",
-                "catalog_behavior", "catalog_relational", "catalog_tsa",
-                "catalog_tpch", "catalog_mlprep", "catalog_indicators",
-                "catalog_drift", "catalog_sketches", "catalog_quality",
-                "catalog_featprep", "catalog_experiment", "catalog_robust",
-                "catalog_eval", "catalog_sampling", "catalog_graph2",
-                "catalog_tsfeat", "catalog_textstats", "catalog_stats2",
-                "catalog_integrity", "catalog_finance2", "catalog_recsys",
-                "catalog_concentration", "catalog_indicators2",
-                "catalog_behavior2", "catalog_regression",
-                "catalog_r7_attribution",
-                "catalog_r7_ireval",
-                "catalog_r7_causal",
-                "catalog_r7_governance",
-                "catalog_r7_linkanalysis",
-                "catalog_r7_lexical",
-                "catalog_r7_nonparam",
-                "catalog_r7_risk",
-                "catalog_r7_vol",
-                "catalog_r7_ops",
-                "catalog_r7_metrics2",
-                "catalog_r7_econ",
-                "catalog_r8_matrixprofile",
-                "catalog_r8_pq",
-                "catalog_r8_distdist",
-                "catalog_r8_models2",
-                "catalog_r8_scorecard",
-                "catalog_r8_inventory",
-                "catalog_r8_changepoint",
-                "catalog_r8_mcda",
-                "catalog_r8_forecast2",
-                "catalog_r8_dedupeval",
-                "catalog_r8_multimodal2",
-                "catalog_r8_estimation",
-                "catalog_r8_privacy",
-                "catalog_r8_sequential",
-                "catalog_r8_seqpred",
-                "catalog_r9_opsresearch",
-                "catalog_r10_funnel",
-                "catalog_r10_survival2",
-                "catalog_r10_profile",
-                "catalog_r10_candles",
-                "catalog_r10_bandit",
-                "catalog_r10_ltv",
-                "catalog_r10_graphmetrics",
-                "catalog_r11_forensic",
-                "catalog_r11_longmemory",
-                "catalog_r12_risk3",
-                "catalog_r12_statefilter",
-                "catalog_r12_outlier2",
-                "catalog_r12_ordinal",
-                "catalog_r12_isotonic",
-                "catalog_r12_cattests",
-                "catalog_r12_cointegration",
-                "catalog_r12_gof",
-                "catalog_r12_keyness",
-                "catalog_r12_textdiversity",
-                "catalog_r13_ranktests",
-                "catalog_r13_tails",
-                "catalog_r13_embeddiag",
-                "catalog_r13_regdiag",
-                "catalog_r13_grangerccf",
-                "catalog_r13_archtest",
-                "catalog_r14_partialcorr",
-                "catalog_r14_pagehinkley",
-                "catalog_r14_reliability",
-                "catalog_r14_blockranks",
-                "catalog_r15_hjorth",
-                "catalog_r15_complexity",
-                "catalog_r15_spatial",
-                "catalog_r15_clusterval",
-                "catalog_r15_seqinfo",
-                "catalog_r16_perfratios",
-                "catalog_r16_spectral",
-                "catalog_r16_inequality",
-                "catalog_r16_sax",
-                "catalog_r16_hopkins",
-                "catalog_r17_riskmore",
-                "catalog_r17_structbreak",
-                "catalog_r17_wavelet",
-                "catalog_r17_stump",
-                "catalog_r18_multipletest",
-                "catalog_r18_resample",
-                "catalog_r18_ebayes",
-                "catalog_r18_power",
-                "catalog_r18_editdist",
-                "catalog_r19_graphqual",
-                "catalog_r19_chainorder",
-                "catalog_r19_smoothing",
-                "catalog_r19_bradleyterry",
-                "catalog_r19_texteval",
-    ):
-        snap = dict(catalog.QUERIES)
-        try:
-            __import__(f"predictor_spark.plans.{mod}")
-        except ImportError:
-            continue
-        # shadow guard (shared with plans.staged.load_staged): a module
-        # that reuses an earlier registration's name silently overwrites
-        # it (the r19/r7 'degree_assortativity' collision). Lives HERE
-        # and in the staged loader, not in @query — catalog.py is in
-        # every module's closure hash, and editing it would mark every
-        # driver grade stale.  Runs UNCONDITIONALLY (ADVICE r9): a module
-        # whose registrations ALL collide leaves len(QUERIES) unchanged —
-        # exactly the silent-overwrite case — so gating on a length
-        # change skipped the guard when it mattered most.  On a cached
-        # re-import the dict is untouched and the check is a no-op scan.
-        from predictor_spark.plans.staged import assert_no_shadow
-
-        assert_no_shadow(snap, catalog.QUERIES)
-    # the snapshot guard above is blind to a duplicate @query name
-    # registered twice WITHIN one module (ADVICE r10): the snapshot
-    # predates both registrations, so the first is silently overwritten
-    # and len/identity checks see nothing.  Close it statically: scan
-    # every plans/*.py source for registration names and reject
-    # intra-file duplicates.  Lives HERE (unhashed) so the guard costs
-    # no driver-grade invalidation.
-    _assert_no_intra_module_duplicates()
+    for mod in pkgutil.iter_modules(plans.__path__):
+        if mod.name.startswith("catalog") or mod.name == "champion":
+            importlib.import_module(f"{plans.__name__}.{mod.name}")
     return catalog
 
 
-def _intra_module_duplicates(src: str) -> list[str]:
-    """Names registered more than once within ONE module's source.
-    AST walk over Call nodes named `query` with a literal first
-    argument — covers both registration forms, `@query("name", ...)`
-    decorations and programmatic `query("name", ...)(fn)` calls
-    (catalog_models.py uses the latter), while a docstring or comment
-    that merely MENTIONS query("name") can never count (ADVICE r11:
-    the raw-source regex made such a mention a false-positive hard
-    failure of the whole catalog). Validated to recover all 436
-    registered names exactly (tests/test_query_name_uniqueness.py)."""
-    import ast
-    from collections import Counter
-
-    names: list[str] = []
-    for node in ast.walk(ast.parse(src)):
-        if (isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Name)
-                and node.func.id == "query"
-                and node.args
-                and isinstance(node.args[0], ast.Constant)
-                and isinstance(node.args[0].value, str)):
-            names.append(node.args[0].value)
-    return sorted(n for n, c in Counter(names).items() if c > 1)
-
-
-def _assert_no_intra_module_duplicates() -> None:
-    """Reject a query name registered twice inside ONE plans module —
-    the case the import-time snapshot guard cannot see."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in glob.glob(os.path.join(here, "predictor_spark", "plans", "*.py")):
-        with open(path, errors="replace") as fh:
-            dups = _intra_module_duplicates(fh.read())
-        if dups:
-            raise ValueError(
-                f"intra-module duplicate query registration(s) {dups!r} "
-                f"in {os.path.basename(path)} — the later definition "
-                f"silently overwrites the earlier one")
-
-
-# The driver grades only the first ~50 registered queries per round, so
-# queries already verified green are rotated to the BACK of the registry:
-# never-graded and newly-added queries land inside the grading window first.
-# The rotation set is CONTENT-HASHED, not a static snapshot: a query rotates
-# back only if its current (function source + oracle SQL) hash matches the
-# hash recorded AT DRIVER-GRADE TIME (tools/driver_grades.json, written by
-# tools/sync_driver_grades.py at each round start from the committed
-# CORRECTNESS_r*.json files). Any edit to a query or its oracle after the
-# driver's grade invalidates the hash and moves it back toward the window
-# for re-grading — a local check_correctness.py --record run cannot rotate
-# an edited row out (VERDICT r7 #2).
-#
-# The hash covers the query FUNCTION's source, its oracle SQL, AND the
-# transitive predictor_spark module closure of the module defining the
-# function (ADVICE r3): an edit to a shared operator (e.g. trading.py)
-# automatically invalidates every dependent query's recorded hash and
-# moves it back into the driver's grading window — the rotation no longer
-# rests solely on the re-run-full---record discipline.
-_CLOSURE_CACHE: dict[str, str] = {}
-
-
-def _module_closure_hash(mod_name: str) -> str:
-    """sha256 over the source bytes of every predictor_spark module
-    transitively imported (statically, via regex over import statements —
-    catches function-local imports too) from mod_name."""
-    import hashlib
-    import re
-
-    if mod_name in _CLOSURE_CACHE:
-        return _CLOSURE_CACHE[mod_name]
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    def mod_path(name: str) -> str | None:
-        rel = name.replace(".", "/")
-        for cand in (f"{here}/{rel}.py", f"{here}/{rel}/__init__.py"):
-            if os.path.isfile(cand):
-                return cand
-        return None
-
-    seen: set[str] = set()
-    stack = [mod_name]
-    blobs: list[bytes] = []
-    pat = re.compile(r"(?:from|import)\s+(predictor_spark(?:\.\w+)*)")
-    while stack:
-        name = stack.pop()
-        if name in seen:
-            continue
-        seen.add(name)
-        path = mod_path(name)
-        if path is None:
-            continue
-        with open(path, "rb") as fh:
-            src = fh.read()
-        blobs.append(src)
-        stack.extend(pat.findall(src.decode(errors="replace")))
-    h = hashlib.sha256()
-    for b in sorted(blobs):
-        h.update(b)
-        h.update(b"\x00")
-    _CLOSURE_CACHE[mod_name] = h.hexdigest()
-    return _CLOSURE_CACHE[mod_name]
-
-
-def _query_hash(fn, oracle: str | None) -> str:
-    import hashlib
-    import inspect
-
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        src = repr(fn)
-    closure = _module_closure_hash(getattr(fn, "__module__", "") or "")
-    return hashlib.sha256(
-        (src + "\n\x00\n" + (oracle or "") + "\n\x00\n" + closure).encode()
-    ).hexdigest()
-
-
-def _green_hashes() -> dict[str, str]:
-    import json
-
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "tools", "graded_green.json")
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {}
-
-
-def _driver_grades() -> dict[str, dict]:
-    """name -> {"round": N, "hash": h} recorded at ROUND START by
-    tools/sync_driver_grades.py — the hash of the code the DRIVER graded
-    green, not of whatever the local sweep last saw.  Rotation out of the
-    grading window keys on THIS file (VERDICT r7 #2): an edit after the
-    driver's grade moves the row back toward the window even if a local
-    `check_correctness.py --record` re-verified it, because the local
-    record can no longer overwrite the grade-time hash."""
-    import json
-
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "tools", "driver_grades.json")
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {}
-
-
-#: Names forced to the head of the grading window regardless of grade
-#: history — for rows whose driver evidence must refresh THIS round:
-#: either the recorded grade was vacuous/degenerate, or the row's
-#: semantics changed after its last grade.  Remove once re-graded.
-#: (drawdown_duration: re-graded green in r08, removed.  The 8 r8
-#: stale-hash rows and the 4 r9 degeneracy re-parameterizations: all
-#: re-graded green in r09, removed.)
-#: Current: empty — squared_return_acf (the r9 orphan pinned through
-#: r10) got its driver grade in CORRECTNESS_r10 and rotated out.
-_FORCE_WINDOW: tuple[str, ...] = ()
-
-
-def _driver_green() -> frozenset[str]:
-    """Queries the DRIVER has already graded fully green (rows+schema+hash
-    all true) in ANY recorded round — parsed from the committed
-    CORRECTNESS_r*.json files, so the set updates itself as rounds land.
-    Only these are eligible to rotate out of the grading window: a query
-    that is merely locally-verified still needs its first driver grade."""
-    import glob
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    green: set[str] = set()
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rec.items():
-            if isinstance(row, dict) and row.get("rows_match") \
-                    and row.get("schema_match") and row.get("hash_match"):
-                green.add(name)
-    return frozenset(green)
-
-
-def _ordered(queries, oracle) -> list[str]:
-    grades = _driver_grades()
-    if grades:
-        driver_green = frozenset(grades)
-
-        def grade_hash(n: str):
-            return grades[n].get("hash") if n in grades else None
-    else:
-        # bootstrap fallback (driver_grades.json absent): the pre-r8
-        # mechanism — CORRECTNESS history for the green set, the local
-        # sweep's graded_green.json for the hash identity
-        green = _green_hashes()
-        driver_green = _driver_green()
-
-        def grade_hash(n: str):
-            return green.get(n)
-
-    def verified(n: str) -> bool:
-        # rotate back only if the driver graded it green AND the hash
-        # recorded AT GRADE TIME still matches the current (source +
-        # oracle + module closure) — new queries and queries edited
-        # since their last driver grade both stay in the window
-        return (n in driver_green
-                and grade_hash(n) == _query_hash(queries[n], oracle.get(n)))
-
-    def rank(n: str) -> int:
-        if n in _FORCE_WINDOW:
-            return -1
-        if not verified(n):
-            # grading-window priority: queries needing their FIRST driver
-            # grade outrank previously-driver-green rows whose content
-            # hash moved (append-only module growth invalidates whole-
-            # module closures, and those re-grades would otherwise crowd
-            # genuinely new rows out of the ~50-query window); within
-            # each class, oracle-backed before rows-only
-            never_graded = n not in driver_green
-            if n in oracle:
-                return 0 if never_graded else 1
-            return 2 if never_graded else 3
-        return 4 if n in oracle else 5
-    return sorted(queries, key=lambda n: (rank(n),))  # stable: keeps reg order
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    cat = _load_catalog()
-    return {n: cat.QUERIES[n] for n in _ordered(cat.QUERIES, cat.ORACLE)}
+    return dict(_load_catalog().QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     cat = _load_catalog()
-    return {n: cat.ORACLE[n] for n in _ordered(cat.QUERIES, cat.ORACLE) if n in cat.ORACLE}
-
-
-def query_content_hashes() -> dict[str, str]:
-    """name -> sha256(source + oracle) for every registered query — the
-    identity tools/check_correctness.py --record persists for the rotation."""
-    cat = _load_catalog()
-    return {n: _query_hash(cat.QUERIES[n], cat.ORACLE.get(n)) for n in cat.QUERIES}
+    return {n: cat.ORACLE[n] for n in cat.QUERIES if n in cat.ORACLE}

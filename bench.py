@@ -115,6 +115,87 @@ HEADLINE = [
     "stochastic_oscillator_14_3",
     "peak_concurrency",
     "durbin_watson_residuals",
+    # one row per catalog_r7_* .. catalog_r19_* family
+    "attribution_markov_removal",
+    "ndcg_at_10_brands",
+    "qini_curve_points",
+    "reid_risk_ladder",
+    "adamic_adar_links",
+    "trigram_hapax_share",
+    "spearman_qty_discount",
+    "capm_beta_by_type",
+    "realized_vol_7d",
+    "lead_time_percentiles",
+    "forecast_accuracy_battery",
+    "fisher_price_index",
+    "matrix_profile_4h",
+    "pq_adc_topk",
+    "energy_distance_drift",
+    "brier_decomposition",
+    "croston_forecast",
+    "binseg_second_split",
+    "topsis_supplier_ranking",
+    "theta_method_per_series",
+    "blocking_quality_report",
+    "audio_wav_roundtrip_features",
+    "gumbel_return_level",
+    "dp_histogram_laplace",
+    "sprt_purchase_rate",
+    "markov_next_event_accuracy",
+    "kingman_wait_estimate",
+    "funnel_abandonment_profile",
+    "logrank_signup_cohorts",
+    "table_profile_orders",
+    "candlestick_patterns_daily",
+    "ucb1_arm_scores",
+    "ltv_cohort_curves",
+    "local_clustering_coefficient",
+    "cents_digit_uniformity",
+    "hurst_rs_per_series",
+    "ulcer_index_by_type",
+    "kalman_level_daily",
+    "generalized_esd_stats",
+    "permutation_entropy_by_type",
+    "isotonic_conversion_curve",
+    "cochran_armitage_trend",
+    "engle_granger_pairs",
+    "jarque_bera_by_type",
+    "dunning_g2_terms",
+    "distinct_ngram_ratios",
+    "mann_whitney_value",
+    "hill_tail_index",
+    "intrinsic_dimension_twonn",
+    "cooks_distance_top",
+    "granger_causality_pairs",
+    "arch_lm_test",
+    "partial_correlation_qpd",
+    "page_hinkley_drift",
+    "weibull_mrr_fit",
+    "friedman_test_daily",
+    "hjorth_params_by_type",
+    "sample_entropy_by_type",
+    "morans_i_nation_balance",
+    "davies_bouldin_segments",
+    "markov_entropy_rate",
+    "information_ratio_by_type",
+    "spectral_entropy_by_type",
+    "theil_atkinson_by_region",
+    "sax_bigram_motifs",
+    "hopkins_statistic",
+    "pain_martin_by_type",
+    "chow_test_price_qty",
+    "haar_energy_levels",
+    "decision_stump_gain",
+    "pairwise_sign_tests_fdr",
+    "bootstrap_ci_mean_return",
+    "eb_shrunk_rates",
+    "ab_sample_size_plan",
+    "editdist_near_pairs",
+    "modularity_regions",
+    "markov_order_lr_test",
+    "good_turing_counts",
+    "bt_strengths",
+    "bleu_doc_pairs",
 ]
 
 # Heavyweight end-to-end rows: each is a full distributed training job,
@@ -165,14 +246,6 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
-
-    # flip-ready headlines: every REGISTERED FLIP_ORDER family headline
-    # joins HEADLINE (shared rule in plans/staged.py, also used by
-    # tools/scale_check.py), so tools/flip_staged.py auto-activates each
-    # family's bench row with zero bench.py edits
-    from predictor_spark.plans.staged import registered_headlines
-
-    HEADLINE[:] = registered_headlines(HEADLINE, qs)
 
     # drift attribution (VERDICT r10 #5): SPARK_GRAFT_BENCH_SUBSET=<path
     # to a prior BENCH_r*.json> restricts the sweep to that round's rows,

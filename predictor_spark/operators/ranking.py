@@ -20,11 +20,9 @@ reproduces the global row_number over the full ordering EXACTLY —
 ties are broken by the remaining order columns inside one bucket,
 never across buckets.
 
-Built in round 11 for the round-12 weibull_mrr_fit swap
-(VERDICT r10 #6); imported by NO registered catalog module until then,
-so it adds zero closure-hash churn while the re-grade queue drains.
-Reference behavior pinned by tests/test_r12_prototypes.py: exact
-equality of every rank against the single-window form at sf0.01.
+Built for the weibull_mrr_fit swap (VERDICT r10 #6). Reference
+behavior pinned by tests/test_r12_prototypes.py: exact equality of
+every rank against the single-window form.
 
 Scale contract: the driver-side collect is bounded by
 |distinct partition keys| x n_buckets rows (5 x 64 = 320 for
@@ -75,9 +73,10 @@ def two_phase_row_number(df: DataFrame, part_cols: list[str],
     passing boundaries skips the approxQuantile pass — which matters
     when `df` is an UN-CACHED join/pipeline, because every extra
     action recomputes it (measured: the 3-pass default was 2.7x
-    slower than the window it replaced on exactly such an input; see
-    plans/proto_r12.py). ANY boundary set is correct — boundaries
-    only balance bucket sizes, never affect rank values.
+    slower than the window it replaced on exactly such an input, the
+    weibull_mrr_fit orders-lineitem join). ANY boundary set is
+    correct — boundaries only balance bucket sizes, never affect rank
+    values.
     """
     if order_cols[0] != bucket_col:
         raise ValueError("bucket_col must lead order_cols")

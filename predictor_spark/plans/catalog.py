@@ -33,6 +33,10 @@ ORACLE: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None):
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(
+                f"duplicate query name {name!r}: {fn.__module__} would "
+                f"overwrite the one in {QUERIES[name].__module__}")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle

@@ -30,8 +30,8 @@ the global running sum C (one exchange + one sort feed both window
 functions); the per-block cumulative-deviation window the r11 version
 ran over the 3×-expanded tick set is gone — the block-base offset
 cnt·C_base cancels exactly inside max−min, so an unordered block
-window + one hash rollup finish the job (swapped r12 from
-plans/proto_r12.py, measured sf1 4.81 s → 4.26 s; long-overflow
+window + one hash rollup finish the job (swapped in r12, measured
+sf1 4.81 s → 4.26 s; long-overflow
 headroom |C·cnt| stays under 2^63 up to ~10^10 ticks per series at
 |x| ≤ 10^5). Everything after is ≤ |series|×|sizes| rows. The VR runs
 on the ≤30-row daily bar frame per series.
@@ -44,9 +44,7 @@ killing 1-ulp hash flakes — so for that one sub-expression the two
 engines agree by algebraic construction, not by independent
 derivation. The R/S statistic itself is validated independently:
 tests/test_staged_r11.py::test_hurst_matches_bruteforce_rs checks it
-against a brute-force pure-Python R/S on the same data, and
-tests/test_r12_prototypes.py pins the integer-devL plan against the
-r11 float-dev plan row-for-row.
+against a brute-force pure-Python R/S on the same data.
 """
 
 from __future__ import annotations

@@ -123,7 +123,7 @@ def weibull_mrr_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank i = row_number over (t, ok, ln_) per priority and the
     # per-priority total n, via the 2-pass discrete-key offset rank
     # (see module docstring) — EXACTLY equal to the window form
-    # (tests/test_r12_prototypes.py pins it at sf0.01/0.1/1)
+    # (tests/test_r12_prototypes.py::test_discrete_key_rank_matches_window)
     ranked = discrete_key_rank(lt, ["pri"], "t", ["ok", "ln_"],
                                rank_name="i", total_name="n")
     x9 = F.round(F.lit(1e9) * F.log(F.col("t").cast("double")), 0) \

@@ -13,12 +13,6 @@ SQL scalar expressions with seeded literal weights, evaluated by Spark as
 chained JVM projections (whole-stage codegen, zero Python) and by the
 DuckDB oracle as nested subqueries built from the IDENTICAL strings.
 
-Kept in a separate module from catalog_models so registering them does
-not move every existing *_forward_pass row's content hash (the rotation
-hashes a query's whole module closure; an append to catalog_models.py
-would push 8 already-driver-green rows back into the grading window and
-crowd out the r8 flip).
-
 Scale: expression-tree inference is the 100 TB serving shape — a
 scan-local projection over the window frame, no shuffle beyond the one
 window_tensorize pass both rows share with the rest of the family.

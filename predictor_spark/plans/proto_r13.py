@@ -1,6 +1,5 @@
 """Round-13 perf prototypes + swapped-out reference plans — NOT
-registered, NOT imported by any catalog module (zero closure-hash
-churn; same discipline as proto_r12.py).
+registered, NOT imported by any catalog module.
 
 r13 status: the three scheduled swaps LANDED in their live rows, in
 their final driver-side-prefix-sum form (zero unpartitioned windows;

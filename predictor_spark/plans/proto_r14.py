@@ -1,6 +1,5 @@
 """Round-14 swapped-out reference plans — NOT registered, NOT
-imported by any catalog module (zero closure-hash churn; the
-proto_r12/r13 discipline).
+imported by any catalog module (as proto_r13.py).
 
 r14 status: the a8_mmd cache swap LANDED in the live row
 (plans/catalog_analytics.py) — the three pairwise-kernel aggregates

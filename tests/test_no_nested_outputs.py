@@ -21,25 +21,13 @@ from tests.conftest import SF_DIR
 
 @pytest.mark.slow
 def test_no_registered_query_emits_nested_types(spark):
-    """Covers the registered surface AND the staged next-round rows —
-    a staged row must already satisfy the driver's canonicalizer
-    contract BEFORE the flip, or the flip re-introduces the class."""
     import __spark_entry__ as entry
-    import predictor_spark.plans.catalog as catalog
-    from predictor_spark.plans.staged import load_staged
     from tools.check_correctness import nested_output_columns
 
     offenders: dict[str, list[str]] = {}
     errors: dict[str, str] = {}
-    qs = dict(entry.queries())
+    qs = dict(entry._load_catalog().QUERIES)
     assert len(qs) >= 200
-    staged_names = load_staged()
-    # one row per staged module at minimum — the count shrinks at every
-    # flip (6 after the r8 flip), so pin consistency, not a magnitude
-    from predictor_spark.plans.staged import STAGED_MODULES
-    if STAGED_MODULES:
-        assert staged_names, "STAGED_MODULES non-empty but no rows loaded"
-    qs.update({n: catalog.QUERIES[n] for n in staged_names})
     for name, fn in qs.items():
         try:
             df = fn(spark, SF_DIR)

@@ -1,19 +1,18 @@
 """Every @query name must be defined EXACTLY once across all catalog
-modules — registered and staged together.
+modules.
 
-The `query` decorator writes into a shared dict, so a duplicate name
-silently OVERWRITES the earlier query for whoever imports the second
-module (round 7: three staged r10/r11 rows shadowed already-registered
-rows — nelson_aalen_hazard, degree_assortativity, benford_first_digit —
-and broke the originals' tests under --staged loads while the driver,
-which never imports staged modules, kept seeing the originals).  This
-scan is STATIC (source regex, import-order independent) so the
-collision is caught no matter which harness imports what.
+The registries are one shared dict, so a duplicate name would replace
+the earlier query for whoever imports the second module (round 7: three
+r10/r11 rows shadowed nelson_aalen_hazard, degree_assortativity and
+benford_first_digit). catalog.query rejects a duplicate at registration;
+the static scan below also catches one in a module nothing imports, and
+the registry must hold every name that scan finds.
 """
 
 from __future__ import annotations
 
 import glob
+import os
 import re
 from collections import Counter
 
@@ -38,57 +37,69 @@ def test_query_names_are_globally_unique():
             where.setdefault(n, []).append(path.rsplit("/", 1)[-1])
     dupes = {n: where[n] for n, c in counts.items() if c > 1}
     assert not dupes, f"duplicate @query names: {dupes}"
-    # sanity: the scan actually sees the catalog (registered + staged;
-    # a handful of rows register programmatically and are invisible to
-    # the literal scan, so the floor sits slightly below the registry)
+    # sanity: the scan actually sees the catalog (a handful of rows
+    # register programmatically and are invisible to the literal scan,
+    # so the floor sits slightly below the registry)
     assert len(counts) >= 340
 
 
 def test_intra_module_duplicate_guard():
-    """ADVICE r10: the import-time snapshot guard cannot see a name
-    registered twice WITHIN one module (the snapshot predates both
-    registrations).  _load_catalog closes that with a static per-file
-    scan; exercise its core on synthetic sources, both decorator and
-    programmatic registration forms."""
-    import sys
+    """catalog.query rejects a name that is already registered, in both
+    registration forms: the @query decorator and the programmatic
+    query(...)(fn) call. One check at registration covers a duplicate
+    within one module and across modules alike."""
+    import pytest
 
-    sys.path.insert(0, "/root/repo")
-    from __spark_entry__ import _intra_module_duplicates
+    import predictor_spark.plans.catalog as catalog
 
-    clean = '@query("a", oracle="SELECT 1")\ndef a(): ...\n' \
-            '@query(\n    "b",\n    oracle="SELECT 2")\ndef b(): ...\n' \
-            'query("c", oracle=sql)(fn)\n'
-    assert _intra_module_duplicates(clean) == []
-    dup_deco = clean + '@query("a")\ndef a2(): ...\n'
-    assert _intra_module_duplicates(dup_deco) == ["a"]
-    dup_prog = clean + 'query("c", oracle=other)(fn2)\n'
-    assert _intra_module_duplicates(dup_prog) == ["c"]
-    # attribute access named query( must NOT count as a registration
-    assert _intra_module_duplicates('df.query("a")\n' + clean) == []
-    # a docstring or comment that MENTIONS query("a") must not count
-    # either (ADVICE r11: the raw-source regex counted it and hard-
-    # failed every _load_catalog on a documentation edit)
-    mention = ('"""swap plan: paste over query("a") next round."""\n'
-               "# see query(\"a\") for the live row\n" + clean)
-    assert _intra_module_duplicates(mention) == []
+    def fn(spark, sf_dir):  # pragma: no cover - identity only
+        pass
+
+    names = ("__dup_test_deco", "__dup_test_prog")
+    try:
+        @catalog.query(names[0], oracle="SELECT 1")
+        def first(spark, sf_dir):  # pragma: no cover - identity only
+            pass
+
+        with pytest.raises(ValueError, match="duplicate query name"):
+            @catalog.query(names[0])
+            def second(spark, sf_dir):  # pragma: no cover - identity only
+                pass
+        assert catalog.QUERIES[names[0]] is first
+
+        catalog.query(names[1])(fn)
+        with pytest.raises(ValueError, match="duplicate query name"):
+            catalog.query(names[1], oracle="SELECT 2")(first)
+        assert catalog.QUERIES[names[1]] is fn
+        assert names[1] not in catalog.ORACLE
+    finally:
+        for n in names:
+            catalog.QUERIES.pop(n, None)
+            catalog.ORACLE.pop(n, None)
 
 
 def test_registry_scan_recovers_every_registered_name():
-    """The guard's regex must see every registration form in use: the
-    combined pattern recovers the FULL registry (436 names), including
-    the programmatic query(...)(fn) rows the decorator-only scan above
-    misses — if a new registration style appears, this fails first."""
-    import re
+    """The catalog registry holds every name the literal scan finds in
+    plans/*.py, and every plans module that calls query( is one that
+    _load_catalog discovers — no registering module is left unimported."""
     import sys
-    from collections import Counter
 
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as e
+    import __spark_entry__ as entry
 
-    pat = re.compile(r'(?<![\w.])query\(\s*\n?\s*(["\'])([^"\']+)\1')
-    names: Counter[str] = Counter()
-    for path in glob.glob("/root/repo/predictor_spark/plans/*.py"):
-        names.update(m[1] for m in pat.findall(open(path).read()))
-    cat = e._load_catalog()
-    missing = set(cat.QUERIES) - set(names)
-    assert not missing, f"registered names invisible to the static scan: {missing}"
+    cat = entry._load_catalog()
+    plans_dir = os.path.dirname(cat.__file__)
+    calls = re.compile(r"(^|[^a-z_.])query\(", re.M)
+    scanned: set[str] = set()
+    registering: set[str] = set()
+    for path in glob.glob(os.path.join(plans_dir, "*.py")):
+        src = open(path).read()
+        for pat in _PATTERNS:
+            scanned.update(pat.findall(src))
+        if calls.search(src.replace("def query(", "")):
+            registering.add(path.rsplit("/", 1)[-1][:-3])
+    assert len(scanned) >= 400
+    assert scanned <= set(cat.QUERIES), sorted(scanned - set(cat.QUERIES))
+    assert "catalog" in registering and "champion" in registering
+    for mod in registering:
+        assert mod.startswith("catalog") or mod == "champion", mod
+        assert f"predictor_spark.plans.{mod}" in sys.modules, mod

@@ -1,234 +1,88 @@
-"""The grading-window rotation (__spark_entry__._ordered) is load-bearing
-for the driver contract: it decides which queries land in the driver's
-~50-query grading window.  Pin its priority law:
+"""Catalog discovery and registry order behind __spark_entry__.
 
-  -1. _FORCE_WINDOW names (vacuous prior grades needing a real re-grade)
-   0. never-driver-graded, oracle-backed   (need their FIRST grade)
-   1. driver-green but content-hash moved since the DRIVER's grade
-   2/3. same classes without oracle
-   4/5. verified (driver-green + grade-time hash match) — rotated back
-
-stability (registration order preserved within a class), and the
-VERDICT r7 #2 property: the rotation keys on tools/driver_grades.json
-(hashes recorded at driver-grade time), so a local --record sweep after
-an edit can NOT rotate the edited row back out."""
+queries() and oracle_sql() return the catalog registries in registration
+order: a module's rows register, in source order, when _load_catalog
+imports it. Every discovered module must import, and a name registered
+a second time — from another module — is rejected at registration."""
 
 from __future__ import annotations
 
+import pkgutil
+import re
+import sys
+
+import pytest
+
 import __spark_entry__ as entry
 
-
-def _fake_fn(name):
-    def fn(spark, sf_dir):  # pragma: no cover - never called
-        raise AssertionError
-    fn.__name__ = name
-    return fn
+#: the @query("name", ...) decorator with the name on the same or next line
+_DECORATED = re.compile(r'@query\(\s*\n?\s*"([a-z0-9_]+)"')
 
 
-def _grades_for(queries, oracle, names, stale=()):
-    return {n: {"round": 7,
-                "hash": ("stale" if n in stale
-                         else entry._query_hash(queries[n], oracle.get(n)))}
-            for n in names}
+def _discovered() -> list[str]:
+    import predictor_spark.plans as plans
+
+    return [f"{plans.__name__}.{m.name}"
+            for m in pkgutil.iter_modules(plans.__path__)
+            if m.name.startswith("catalog") or m.name == "champion"]
 
 
-def test_rotation_priority_and_stability(monkeypatch):
-    queries = {n: _fake_fn(n) for n in
-               ["old_green_moved", "new_a", "old_green_ok",
-                "new_b", "old_green_moved2", "new_rows_only"]}
-    oracle = {n: f"SELECT 1 -- {n}" for n in queries if n != "new_rows_only"}
+def test_rotation_priority_and_stability():
+    """Order law: queries() is catalog.QUERIES in registration order, and
+    within one module its decorated rows keep their source order. A
+    repeat call (which re-runs _load_catalog) changes nothing."""
+    import predictor_spark.plans.catalog as catalog
 
-    monkeypatch.setattr(entry, "_driver_grades", lambda: _grades_for(
-        queries, oracle,
-        ["old_green_ok", "old_green_moved", "old_green_moved2"],
-        stale={"old_green_moved", "old_green_moved2"}))
-    monkeypatch.setattr(entry, "_FORCE_WINDOW", ())
+    qs = entry.queries()
+    assert list(qs) == list(catalog.QUERIES)
+    assert list(entry.queries()) == list(qs)
+    assert list(entry.oracle_sql()) == [n for n in qs if n in catalog.ORACLE]
 
-    got = entry._ordered(queries, oracle)
-    assert got == [
-        "new_a", "new_b",                       # first grades, oracle-backed
-        "old_green_moved", "old_green_moved2",  # re-grades (stable order)
-        "new_rows_only",                        # first grade, no oracle
-        "old_green_ok",                         # verified -> back
-    ]
-
-
-def test_edited_green_query_reenters_window_ahead_of_filler(monkeypatch):
-    """VERDICT r7 #3 'done' condition: a query edited after its driver
-    grade provably re-enters the window ahead of rotation filler, and a
-    simulated local re-record (which under the OLD mechanism overwrote
-    the rotation hash) cannot rotate it back out."""
-    queries = {n: _fake_fn(n) for n in ["edited", "untouched"]}
-    oracle = {n: f"SELECT 1 -- {n}" for n in queries}
-    grades = _grades_for(queries, oracle, ["edited", "untouched"])
-
-    monkeypatch.setattr(entry, "_driver_grades", lambda: grades)
-    monkeypatch.setattr(entry, "_FORCE_WINDOW", ())
-    assert entry._ordered(queries, oracle) == ["edited", "untouched"]
-
-    # "edit" the query: its content hash moves away from the grade-time one
-    queries["edited"] = _fake_fn("edited_v2")
-    assert entry._ordered(queries, oracle)[0] == "edited"
-
-    # a local --record sweep updates graded_green.json — which the rotation
-    # must IGNORE while driver_grades.json exists
-    monkeypatch.setattr(entry, "_green_hashes", lambda: {
-        "edited": entry._query_hash(queries["edited"], oracle["edited"]),
-        "untouched": entry._query_hash(queries["untouched"], oracle["untouched"]),
-    })
-    assert entry._ordered(queries, oracle)[0] == "edited"
-
-
-def test_force_window_outranks_everything(monkeypatch):
-    queries = {n: _fake_fn(n) for n in ["brand_new", "vacuous_green"]}
-    oracle = {n: f"SELECT 1 -- {n}" for n in queries}
-    monkeypatch.setattr(entry, "_driver_grades", lambda: _grades_for(
-        queries, oracle, ["vacuous_green"]))
-    monkeypatch.setattr(entry, "_FORCE_WINDOW", ("vacuous_green",))
-    assert entry._ordered(queries, oracle) == ["vacuous_green", "brand_new"]
-
-
-def test_rotation_fallback_without_driver_grades(monkeypatch):
-    """Bootstrap fallback: with driver_grades.json absent the pre-r8
-    mechanism applies (CORRECTNESS green set + local graded_green hash);
-    driver-green but never locally recorded -> stays in the window."""
-    queries = {"q": _fake_fn("q")}
-    oracle = {"q": "SELECT 1"}
-    monkeypatch.setattr(entry, "_driver_grades", lambda: {})
-    monkeypatch.setattr(entry, "_green_hashes", lambda: {})
-    monkeypatch.setattr(entry, "_driver_green", lambda: frozenset({"q"}))
-    monkeypatch.setattr(entry, "_FORCE_WINDOW", ())
-    assert entry._ordered(queries, oracle) == ["q"]
-
-
-def test_live_force_window_names_are_registered():
-    """_FORCE_WINDOW is a manual override list — a typo'd or since-
-    de-registered name would silently do nothing."""
-    cat = entry._load_catalog()
-    for n in entry._FORCE_WINDOW:
-        assert n in cat.QUERIES, n
+    checked = 0
+    for modname in {fn.__module__ for fn in qs.values()}:
+        literal = _DECORATED.findall(open(sys.modules[modname].__file__).read())
+        mine = set(literal)
+        got = [n for n, fn in qs.items()
+               if n in mine and fn.__module__ == modname]
+        assert got == [n for n in literal if n in set(got)], modname
+        checked += len(got)
+    assert checked >= 400
 
 
 def test_every_catalog_module_imports_cleanly():
-    """_load_catalog swallows ImportError so a partial tree still
-    serves its working queries — but on a COMPLETE tree every module in
-    its list must import, or queries silently vanish from the driver's
-    grading window (a coverage loss nothing else would catch)."""
-    import ast
-    import importlib
-    import inspect
-
-    import __spark_entry__ as entry
-
-    src = inspect.getsource(entry._load_catalog)
-    names = [c.value for c in ast.walk(ast.parse(src))
-             if isinstance(c, ast.Constant) and isinstance(c.value, str)
-             and c.value.startswith("catalog") or
-             (isinstance(c, ast.Constant) and c.value == "champion")]
-    assert len(names) >= 25
-    for mod in names:
-        importlib.import_module(f"predictor_spark.plans.{mod}")
-
-
-def test_no_registered_row_is_both_ungraded_and_unqueued():
-    """VERDICT r9 #8 (the squared_return_acf class of gap): on the LIVE
-    registry, every query must be either already driver-graded (present
-    in tools/driver_grades.json) or inside the head of the current
-    ordering — the ~50-slot grading window the driver will actually
-    sweep next round.  A row failing both is registered yet invisible:
-    never graded, and positioned where the driver never looks."""
-    WINDOW = 50  # the driver's observed per-round grading budget
-    from predictor_spark.plans.staged import STAGED_MODULES
-
+    """_load_catalog imports each discovered module and lets an import
+    error propagate; on the complete tree every module loads and each
+    registered row comes from one of them."""
     cat = entry._load_catalog()
-    # catalog.QUERIES is a shared registry: another test in the session
-    # may have run load_staged(), adding staged rows the DRIVER never
-    # sees (it imports only _load_catalog's tuple) — scope to the
-    # driver's view or the window arithmetic is off by |staged|
-    staged_mods = {f"predictor_spark.plans.{m}" for m in STAGED_MODULES}
-    queries = {n: fn for n, fn in cat.QUERIES.items()
-               if fn.__module__ not in staged_mods}
-    oracle = {n: s for n, s in cat.ORACLE.items() if n in queries}
-    ordered = entry._ordered(queries, oracle)
-    graded = set(entry._driver_grades())
-    head = set(ordered[:WINDOW])
-    orphans = [n for n in ordered if n not in graded and n not in head]
-    assert not orphans, (
-        f"{len(orphans)} registered rows are ungraded AND outside the "
-        f"{WINDOW}-slot window head: {orphans[:10]} — either pin them in "
-        "_FORCE_WINDOW, stage fewer flips, or wait a round before "
-        "registering more")
+    mods = _discovered()
+    assert len(mods) >= 120
+    assert "predictor_spark.plans.champion" in mods
+    assert all(m in sys.modules for m in mods)
+    assert {fn.__module__ for fn in cat.QUERIES.values()} <= set(mods)
 
 
 def test_shadow_guard_detects_duplicate_registration():
-    """assert_no_shadow (shared by load_staged and _load_catalog) must
-    fire when a later module overwrites an earlier registration's name
-    — the r19/r7 'degree_assortativity' collision class — and stay
-    silent on pure additions."""
-    import pytest
+    """A second module registering an already-registered name would
+    shadow the first row for every caller; catalog.query raises instead
+    and the first registration stays."""
+    import predictor_spark.plans.catalog as catalog
 
-    from predictor_spark.plans.staged import assert_no_shadow
-
-    def f1(spark, sf):  # pragma: no cover - identity only
+    def first(spark, sf_dir):  # pragma: no cover - identity only
         pass
 
-    def f2(spark, sf):  # pragma: no cover - identity only
+    def second(spark, sf_dir):  # pragma: no cover - identity only
         pass
 
-    before = {"a": f1}
-    # pure addition: fine
-    assert_no_shadow(before, {"a": f1, "b": f2})
-    # same-name overwrite: loud failure naming the shadowing module
-    with pytest.raises(ValueError, match="shadowed query 'a'"):
-        assert_no_shadow(before, {"a": f2, "b": f2})
-
-
-def test_rotation_priority_law_property(monkeypatch):
-    """Property form of the priority law: for ANY mix of graded /
-    stale-hash / oracle-less / force-pinned queries, _ordered must (a)
-    be a permutation of the registry, (b) respect the rank order
-    -1 < 0 < 1 < 2 < 3 < 4/5, and (c) keep registration order inside
-    each rank class (stability)."""
-    from hypothesis import given, settings, strategies as st
-
-    @settings(max_examples=50, deadline=None)
-    @given(st.lists(
-        st.tuples(st.booleans(),   # has oracle
-                  st.sampled_from(["never", "stale", "ok"])),  # grade state
-        min_size=1, max_size=24),
-        st.data())
-    def check(specs, data):
-        queries = {f"q{i}": _fake_fn(f"q{i}") for i in range(len(specs))}
-        oracle = {f"q{i}": f"SELECT {i}" for i, (has_o, _) in
-                  enumerate(specs) if has_o}
-        grades = _grades_for(
-            queries, oracle,
-            [f"q{i}" for i, (_, g) in enumerate(specs) if g != "never"],
-            stale={f"q{i}" for i, (_, g) in enumerate(specs)
-                   if g == "stale"})
-        forced = tuple(data.draw(st.sets(
-            st.sampled_from(sorted(queries)), max_size=3)))
-        monkeypatch.setattr(entry, "_driver_grades", lambda: grades)
-        monkeypatch.setattr(entry, "_FORCE_WINDOW", forced)
-
-        got = entry._ordered(queries, oracle)
-        assert sorted(got) == sorted(queries)          # permutation
-
-        def rank(n):
-            if n in forced:
-                return -1
-            i = int(n[1:])
-            has_o, g = specs[i]
-            if g == "never":
-                return 0 if has_o else 2
-            if g == "stale":
-                return 1 if has_o else 3
-            return 4 if has_o else 5
-
-        ranks = [rank(n) for n in got]
-        assert ranks == sorted(ranks), (got, ranks)    # rank order
-        for r in set(ranks):                           # stability
-            cls = [int(n[1:]) for n, k in zip(got, ranks) if k == r]
-            assert cls == sorted(cls), (r, got)
-
-    check()
+    first.__module__ = "predictor_spark.plans.catalog_shadow_a"
+    second.__module__ = "predictor_spark.plans.catalog_shadow_b"
+    name = "__shadow_test"
+    try:
+        catalog.query(name, oracle="SELECT 1")(first)
+        with pytest.raises(ValueError, match="catalog_shadow_b would "
+                           "overwrite the one in .*catalog_shadow_a"):
+            catalog.query(name, oracle="SELECT 2")(second)
+        assert catalog.QUERIES[name] is first
+        assert catalog.ORACLE[name] == "SELECT 1"
+    finally:
+        catalog.QUERIES.pop(name, None)
+        catalog.ORACLE.pop(name, None)

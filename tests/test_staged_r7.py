@@ -1,17 +1,12 @@
-"""Tests for the STAGED round-7 catalog families (plans/staged.py).
+"""Tests for the round-7 catalog families (the catalog_r7_* modules).
 
-Staged modules are fully implemented and oracle-verified but not yet
-registered for the driver (window arithmetic, VERDICT r5 #5). These
-tests (a) pin the staging contract — staged modules must NOT be
-reachable from __spark_entry__._load_catalog — and (b) verify each
-family against an independent pure-pandas reimplementation of the
-metric spec (the DuckDB oracle proves Spark == SQL replay; this proves
-both match the MATH)."""
+Each family is checked against an independent pure-pandas
+reimplementation of the metric spec (the DuckDB oracle proves Spark ==
+SQL replay; this proves both match the MATH)."""
 
 from __future__ import annotations
 
 import math
-import os
 import re
 
 import duckdb
@@ -20,37 +15,23 @@ import pytest
 
 from tests.conftest import SF_DIR
 
-ENTRY = "/root/repo/__spark_entry__.py"
 
+def _r7_rows() -> list[str]:
+    """Names of every query the catalog_r7_* modules register."""
+    import __spark_entry__ as entry_mod
 
-def test_staged_modules_not_registered_for_driver():
-    """The driver must not see staged modules: none of their names may
-    appear in __spark_entry__.py (the _load_catalog tuple is the only
-    registration path)."""
-    from predictor_spark.plans.staged import STAGED_MODULES
-
-    with open(ENTRY) as fh:
-        src = fh.read()
-    for mod in STAGED_MODULES:
-        assert mod not in src, f"staged module {mod} leaked into the driver"
+    cat = entry_mod._load_catalog()
+    return [n for n, fn in cat.QUERIES.items()
+            if fn.__module__.startswith("predictor_spark.plans.catalog_r7_")]
 
 
 def test_load_staged_registers_oracle_backed_rows():
     import predictor_spark.plans.catalog as catalog
-    from predictor_spark.plans.staged import load_staged
 
-    names = load_staged()
-    # flip-proof: a staged family moves into the registry when flipped,
-    # so assert full-registry membership (always true) rather than
-    # staging membership (true only until its flip round)
-    import __spark_entry__ as entry_mod
-
-    entry_mod._load_catalog()
-    assert "ndcg_at_10_brands" in catalog.QUERIES
-    assert "ndcg_at_10_brands" in catalog.ORACLE
+    names = _r7_rows()
+    assert "ndcg_at_10_brands" in names
     for n in names:
-        assert n in catalog.QUERIES
-        assert n in catalog.ORACLE, f"staged row {n} has no oracle"
+        assert n in catalog.ORACLE, f"round-7 row {n} has no oracle"
 
 
 @pytest.fixture(scope="module")
@@ -105,17 +86,10 @@ def ireval_expected():
 
 
 def _run(spark, name):
-    from predictor_spark.plans.staged import load_staged
-    import predictor_spark.plans.catalog as catalog
+    import __spark_entry__ as entry_mod
 
-    load_staged()
-    if name not in catalog.QUERIES:
-        # the family was flipped out of staging into the driver registry
-        # (tools/flip_staged.py) — load the registered catalog too
-        import __spark_entry__ as entry_mod
-
-        entry_mod._load_catalog()
-    return catalog.QUERIES[name](spark, SF_DIR).toPandas()
+    cat = entry_mod._load_catalog()
+    return cat.QUERIES[name](spark, SF_DIR).toPandas()
 
 
 @pytest.mark.parametrize("qname,col", [
@@ -141,21 +115,19 @@ def test_staged_rows_have_no_nested_outputs(spark):
     sys.path.insert(0, "/root/repo/tools")
     from check_correctness import nested_output_columns
     import predictor_spark.plans.catalog as catalog
-    from predictor_spark.plans.staged import load_staged
 
-    for name in load_staged():
+    for name in _r7_rows():
         df = catalog.QUERIES[name](spark, SF_DIR)
         assert nested_output_columns(df) == [], name
 
 
 def test_staged_oracles_quantize_before_mean():
-    """Every staged ranking oracle must carry the micro-unit floor (the
+    """Every round-7 ranking oracle must carry the micro-unit floor (the
     determinism contract documented in the module): a raw float mean
     over users would be summation-order sensitive."""
     import predictor_spark.plans.catalog as catalog
-    from predictor_spark.plans.staged import load_staged
 
-    for name in load_staged():
+    for name in _r7_rows():
         if name.endswith("_brands"):
             assert re.search(r"floor|//", catalog.ORACLE[name]), name
 

@@ -1023,99 +1023,3 @@ class TestOpsResearch:
         assert row["kingman_wq_min"] == pytest.approx(wq, rel=1e-4)
         assert 0 < row["utilization"] < 1  # the derived m keeps it so
 
-
-class TestFlipOrder:
-    def test_flip_order_matches_registry(self):
-        """FLIP_ORDER must cover every staged module exactly once with
-        the TRUE row count (tools/flip_staged.py budgets on these), and
-        every bench headline must be a real query in its module."""
-        import predictor_spark.plans.catalog as catalog
-        from predictor_spark.plans.staged import (FLIP_ORDER,
-                                                  STAGED_MODULES,
-                                                  load_staged)
-
-        load_staged()
-        from collections import Counter
-
-        cnt = Counter()
-        mod_of = {}
-        for name, fn in catalog.QUERIES.items():
-            mod = fn.__module__.rsplit(".", 1)[-1]
-            if mod in STAGED_MODULES:
-                cnt[mod] += 1
-                mod_of[name] = mod
-        flip_mods = [m for m, _, _ in FLIP_ORDER]
-        assert sorted(flip_mods) == sorted(set(flip_mods)), "duplicates"
-        assert set(flip_mods) >= set(STAGED_MODULES), \
-            "staged module missing from FLIP_ORDER"
-        for mod, n, bench in FLIP_ORDER:
-            if mod not in STAGED_MODULES:
-                continue  # flipped in an earlier round
-            assert cnt[mod] == n, f"{mod}: FLIP_ORDER says {n}, " \
-                f"registry has {cnt[mod]}"
-            assert mod_of.get(bench) == mod, \
-                f"bench headline {bench} not a query of {mod}"
-
-    def test_flip_tool_budget_selection(self):
-        """The planner takes whole families in order and never exceeds
-        the budget."""
-        # tools/ is not a package; load the module by path
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "flip_staged", "/root/repo/tools/flip_staged.py")
-        m = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(m)
-        for budget in (0, 5, 23, 50, 1000):
-            chosen, used = m.plan(budget)
-            assert used <= budget
-            # in-order whole-family prefix (skipping over-budget stops)
-            from predictor_spark.plans.staged import FLIP_ORDER
-            order = [x[0] for x in FLIP_ORDER]
-            idx = [order.index(c[0]) for c in chosen]
-            assert idx == sorted(idx)
-
-    def test_flip_apply_is_idempotent_syntax(self, tmp_path):
-        """Two successive --apply rounds must leave __spark_entry__.py
-        compilable (ADVICE r6: the first apply leaves the tuple ending
-        with ',\\n    ' and a second blind ',\\n' insert wrote
-        ',\\n    ,' — a SyntaxError that broke the whole entry module)."""
-        import importlib.util
-        import shutil
-
-        spec = importlib.util.spec_from_file_location(
-            "flip_staged", "/root/repo/tools/flip_staged.py")
-        m = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(m)
-
-        entry_copy = tmp_path / "entry.py"
-        staged_copy = tmp_path / "staged.py"
-        shutil.copy("/root/repo/__spark_entry__.py", entry_copy)
-        staged_src = open("/root/repo/predictor_spark/plans/staged.py").read()
-        # seed the fake families into the staged list so apply() has
-        # real entries to remove (ADVICE r7: removal is asserted now)
-        staged_src = staged_src.replace(
-            "STAGED_MODULES: tuple[str, ...] = (\n",
-            'STAGED_MODULES: tuple[str, ...] = (\n'
-            '    "fake_family_one",\n    "fake_family_two",\n')
-        staged_copy.write_text(staged_src)
-        m.ENTRY = str(entry_copy)
-        m.STAGED = str(staged_copy)
-
-        m.apply([("fake_family_one", 3, "b1")])
-        compile(entry_copy.read_text(), "entry.py", "exec")
-        m.apply([("fake_family_two", 2, "b2")])
-        src = entry_copy.read_text()
-        compile(src, "entry.py", "exec")  # the r6 bug died here
-        assert '"fake_family_one",' in src and '"fake_family_two",' in src
-        left = staged_copy.read_text()
-        assert '"fake_family_one"' not in left
-        assert '"fake_family_two"' not in left
-
-        # ADVICE r7 guard: a name NOT in the staged list (or drifted
-        # formatting) must abort loudly BEFORE writing either file
-        before_entry = entry_copy.read_text()
-        with pytest.raises(SystemExit, match="not found in the expected"):
-            m.apply([("fake_family_ghost", 1, "b3")])
-        assert entry_copy.read_text() == before_entry, \
-            "guard fired but the entry tuple was already edited"

@@ -5,19 +5,7 @@ given scale factor, compares row count, sorted column names, and an
 order-insensitive value comparison. Exact comparison after in-query
 rounding — stricter than any hash the driver could use.
 
-Usage: python tools/check_correctness.py [--record] [--staged] [sf_dir] [query ...]
-
---staged: also load the staged next-round catalog modules
-(predictor_spark/plans/staged.py) so their rows can be verified before
-they are registered for the driver. Mutually exclusive with --record —
-staged rows must never enter the rotation's green-hash file.
-
---record: after the sweep, write tools/graded_green.json mapping every
-PASSING oracle-backed query to its content hash (source + oracle SQL).
-__spark_entry__.py rotates only hash-matching queries out of the driver's
-grading window, so a later edit to a query or oracle automatically moves it
-back to the front for re-grading (ADVICE r2: the static round-1 rotation
-set hid behavior-affecting changes from the driver).
+Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -141,29 +129,14 @@ def degenerate_numeric(sdf: pd.DataFrame) -> str | None:
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a not in ("--record", "--staged")]
-    record = "--record" in sys.argv[1:]
-    staged = "--staged" in sys.argv[1:]
-    if record and staged:
-        print("--record and --staged are mutually exclusive: staged rows "
-              "must not enter the rotation's green-hash file")
-        return 2
+    argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
     import __spark_entry__ as entry_mod
 
-    if staged:
-        from predictor_spark.plans.staged import load_staged
-
-        staged_names = load_staged()
-        print(f"loaded {len(staged_names)} staged queries: "
-              + " ".join(staged_names))
-        if not only:
-            only = set(staged_names)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    passed: list[str] = []
 
     spark = get_spark("check_correctness")
 
@@ -250,19 +223,8 @@ def main() -> int:
         else:
             print(f"PASS  {name} ({len(sdf)} rows) [{time.time()-t0:.1f}s]")
             n_pass += 1
-            passed.append(name)
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} no-oracle")
-    if record and not only:
-        import json
-        import os
-
-        hashes = entry_mod.query_content_hashes()
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "graded_green.json")
-        with open(path, "w") as fh:
-            json.dump({n: hashes[n] for n in sorted(passed)}, fh, indent=1)
-        print(f"recorded {len(passed)} green hashes -> {path}")
     return 1 if n_fail else 0
 
 

@@ -13,12 +13,7 @@ oracle; see the cube_orders_profile half-cent flake, VERIFICATION_r5
 (integer-exact sums or in-query rounding); this harness checks that
 claim for all of them.
 
-Usage: python tools/determinism_check.py [--staged] [sf_dir] [query ...]
-
---staged: also load the staged next-round catalog modules
-(predictor_spark/plans/staged.py) and check ONLY their rows, so a
-staged family's run-to-run stability is pinned before it enters the
-driver window.
+Usage: python tools/determinism_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -33,23 +28,13 @@ from tools.check_correctness import normalize_pdf  # noqa: E402
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--staged"]
-    staged = "--staged" in sys.argv[1:]
+    argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
     import __spark_entry__ as entry_mod
 
-    if staged:
-        # the staged path never needs entry.queries() (whose rotation
-        # ordering sha256-hashes every registered query's source)
-        from predictor_spark.plans.staged import load_staged
-        import predictor_spark.plans.catalog as catalog
-
-        entry_mod._load_catalog()
-        qs = {n: catalog.QUERIES[n] for n in load_staged()}
-    else:
-        qs = entry_mod.queries()
+    qs = entry_mod.queries()
     spark = get_spark("determinism_check")
     n_pass = n_fail = 0
     for name, fn in qs.items():

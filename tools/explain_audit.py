@@ -836,11 +836,6 @@ EXPECT: dict[str, dict[str, list[str]]] = {
         "not": ["CartesianProduct", "SortMergeJoin"],
         "max_scans": 2,
     },
-}
-
-#: expectations for STAGED (next-round) rows — audited via --staged so a
-#: staged family's plan shape is pinned BEFORE it enters the driver window
-EXPECT_STAGED: dict[str, dict[str, list[str]]] = {
     # ranked-retrieval eval: cached fact join (InMemoryTableScan), dims
     # and the 25-row ranking broadcast; the per-customer metric joins are
     # large-large on the SAME key (o_custkey) coming out of groupBys, so
@@ -1538,7 +1533,7 @@ EXPECT_STAGED: dict[str, dict[str, list[str]]] = {
         "not": ["CartesianProduct", "SortMergeJoin"],
         "max_scans": 1,
     },
-    # --- r12 families (staged for round 9) ---
+    # --- r12 families ---
     # risk3: one daily rollup + (returns lag window | running-peak
     # window) + a 5-group moment aggregate; never a join
     "omega_ratio_by_type": {
@@ -2120,22 +2115,12 @@ EXPECT_STAGED: dict[str, dict[str, list[str]]] = {
 
 
 def main() -> int:
-    argv = sys.argv[1:]
-    staged = "--staged" in argv
-    only = set(a for a in argv if a != "--staged")
+    only = set(sys.argv[1:])
     spark = get_spark("explain_audit")
     import __spark_entry__ as entry_mod
 
     expect = dict(EXPECT)
-    import predictor_spark.plans.catalog as catalog
-
-    entry_mod._load_catalog()
-    if staged:
-        from predictor_spark.plans.staged import load_staged
-
-        load_staged()
-        expect.update(EXPECT_STAGED)
-    qs = catalog.QUERIES
+    qs = entry_mod.queries()
     # FLOOR audit for every registered row WITHOUT an explicit
     # expectation (r10: 91 of 428 had none, so a catastrophic plan —
     # cartesian product, row-at-a-time Python UDF, unbounded scan
@@ -2156,10 +2141,7 @@ def main() -> int:
         if only and name not in only:
             continue
         if name not in qs:
-            if not staged and name in EXPECT_STAGED:
-                # staged-only rows are invisible without --staged
-                continue
-            # anything else is a stale/typo'd expectation key — fail
+            # a stale/typo'd expectation key — fail
             # LOUDLY so a renamed query can't silently lose its audit
             print(f"FAIL {name}: expectation key not in the registry")
             failures += 1

@@ -46,32 +46,9 @@ def main() -> None:
             f"| {name} | {mod} | {'yes' if name in oracles else '—'} "
             f"| {summary} |")
 
-    # staged (next-window) rows — implemented + oracle-backed but not
-    # yet visible to the driver (plans/staged.py window arithmetic)
-    import predictor_spark.plans.catalog as catalog
-    from predictor_spark.plans.staged import load_staged
-
-    staged_names = load_staged()
-    lines += [
-        "",
-        f"## Staged for the next grading window ({len(staged_names)} "
-        "rows — plans/staged.py)",
-        "",
-        "| query | module | oracle | summary |",
-        "|---|---|---|---|",
-    ]
-    for name in sorted(staged_names):
-        fn = catalog.QUERIES[name]
-        mod = fn.__module__.rsplit(".", 1)[-1]
-        summary = first_sentence(fn.__doc__).replace("|", "\\|")
-        lines.append(
-            f"| {name} | {mod} "
-            f"| {'yes' if name in catalog.ORACLE else '—'} "
-            f"| {summary} |")
     with open(os.path.join(ROOT, "QUERIES.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
-    print(f"wrote QUERIES.md ({len(qs)} registered "
-          f"+ {len(staged_names)} staged rows)")
+    print(f"wrote QUERIES.md ({len(qs)} queries)")
 
 
 if __name__ == "__main__":

@@ -34,16 +34,8 @@ def main() -> None:
 
     build(SF1_DIR)  # no-op when already present
     qs = entry_mod.queries()
-    # every REGISTERED family headline from FLIP_ORDER joins the table
-    # (shared rule in plans/staged.py, also used by bench.main() —
-    # ADVICE r7: the inline copies could desync; without the rule,
-    # freshly flipped families were invisible to SCALING.md — the r7
-    # regeneration missed all 15 flipped headlines)
-    from predictor_spark.plans.staged import registered_headlines
-
-    headline = registered_headlines(HEADLINE, qs)
     # warm-up once per sf dir (parquet footers), plus codegen warm-up
-    timings: dict[str, list[float]] = {n: [] for n in headline}
+    timings: dict[str, list[float]] = {n: [] for n in HEADLINE}
     for sf in SFS:
         # FRESH SparkSession per scale factor: a single session aging
         # across 4 SFs x |HEADLINE| x 2 runs accumulates GC/python-worker
@@ -61,7 +53,7 @@ def main() -> None:
             except Exception:
                 pass
         materialize(qs["q1_pricing_summary"](spark, sf))
-        for name in headline:
+        for name in HEADLINE:
             best = None
             for _ in range(2):  # min-of-2, like bench.py: single shots at
                 # these sizes are GC/scheduler noise, not plan signal
