@@ -403,37 +403,10 @@ def main() -> None:
     emit["queries"] = dict(timings)
     emit["n_queries"] = len(timings)
     emit["full"] = out_name
-    # Drop order (r15, VERDICT r14 #5 — measurement-REPORTING fix, no
-    # timing change): dropping fastest-first made the stdout set "the
-    # slowest ~44 in THIS round", so rows that improved a lot rotated
-    # OUT of the driver's round-over-round common set and rows that
-    # slowed rotated IN — both tails invisible, geomean biased against
-    # real wins (PERF_r14: n_common 33, 11 improved rows "dropped").
-    # Rows present in the PREVIOUS round's driver-parsed stdout map are
-    # now kept preferentially (dropped last), so the common set is
-    # maximal and stable; within each class the fastest still go first.
-    # Every timing and `value` (the total over ALL rows) is unchanged;
-    # the complete map still lands in BENCH_FULL.json, and the dropped
-    # rows' summed seconds are reported as omitted_total_sec so the
-    # stdout line still decomposes the total.
-    prev_stdout: set[str] = set()
-    try:
-        import re as _re
-
-        rounds = []
-        for f in os.listdir(here):
-            m = _re.fullmatch(r"BENCH_r(\d+)\.json", f)
-            if m:
-                rounds.append((int(m.group(1)), f))
-        if rounds:
-            with open(os.path.join(here, max(rounds)[1])) as fh:
-                prec = json.load(fh)
-            prev_stdout = set(((prec.get("parsed") or {}).get("queries"))
-                              or prec.get("queries") or {})
-    except Exception:
-        prev_stdout = set()
-    by_speed = sorted(
-        timings, key=lambda n: (n in prev_stdout, timings[n], n))
+    # Drop order: fastest rows first (the heavy rows are the perf
+    # signal); the dropped rows' summed seconds are reported as
+    # omitted_total_sec so the stdout line still decomposes the total.
+    by_speed = sorted(timings, key=lambda n: (timings[n], n))
     dropped = 0
     line = json.dumps(emit, separators=(",", ":"))
     while len(line) > line_budget and dropped < len(by_speed):

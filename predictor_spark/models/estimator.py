@@ -240,125 +240,3 @@ def nbeats_fit_predict_per_series(
         emit_train=emit_train,
     )
 
-
-def transformer_fit_predict_per_series(
-    df: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    series_col: str = "user_id",
-    train_end: str = "2024-01-22 00:00:00",
-    window: int = 8,
-    horizons: tuple[int, ...] = (1,),
-    d_model: int = 8,
-    n_heads: int = 2,
-    d_ff: int = 16,
-    epochs: int = 40,
-    lr: float = 5e-3,
-    weight_decay: float = 3e-2,
-    mc_samples: int = 0,
-    dropout_rate: float = 0.1,
-    seed: int = 0,
-) -> DataFrame:
-    """Transformer-encoder instantiation of ``fit_predict_per_series``
-    (models/transformer.py; reference predictor_plugin_transformer.py)."""
-    from predictor_spark.models import transformer
-
-    return fit_predict_per_series(
-        df, transformer, value_col, ts_col, series_col, train_end, window,
-        horizons,
-        train_kwargs=dict(d_model=d_model, n_heads=n_heads, d_ff=d_ff,
-                          epochs=epochs, lr=lr, weight_decay=weight_decay),
-        mc_samples=mc_samples, dropout_rate=dropout_rate, seed=seed,
-    )
-
-
-def tft_fit_predict_per_series(
-    df: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    series_col: str = "user_id",
-    train_end: str = "2024-01-22 00:00:00",
-    window: int = 8,
-    horizons: tuple[int, ...] = (1,),
-    d_model: int = 8,
-    conv_taps: int = 3,
-    epochs: int = 40,
-    lr: float = 5e-3,
-    weight_decay: float = 3e-2,
-    mc_samples: int = 0,
-    dropout_rate: float = 0.1,
-    seed: int = 0,
-) -> DataFrame:
-    """TFT-lite instantiation of ``fit_predict_per_series``
-    (models/tft.py; reference predictor_plugin_tft.py)."""
-    from predictor_spark.models import tft
-
-    return fit_predict_per_series(
-        df, tft, value_col, ts_col, series_col, train_end, window, horizons,
-        train_kwargs=dict(d_model=d_model, conv_taps=conv_taps,
-                          epochs=epochs, lr=lr, weight_decay=weight_decay),
-        mc_samples=mc_samples, dropout_rate=dropout_rate, seed=seed,
-    )
-
-
-def lstm_fit_predict_per_series(
-    df: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    series_col: str = "user_id",
-    train_end: str = "2024-01-22 00:00:00",
-    window: int = 8,
-    horizons: tuple[int, ...] = (1,),
-    d_model: int = 8,
-    n_heads: int = 2,
-    units: int = 8,
-    epochs: int = 30,
-    lr: float = 5e-3,
-    weight_decay: float = 3e-2,
-    mc_samples: int = 0,
-    dropout_rate: float = 0.1,
-    seed: int = 0,
-) -> DataFrame:
-    """BiLSTM+attention instantiation of ``fit_predict_per_series``
-    (models/lstm.py; reference predictor_plugin_lstm.py)."""
-    from predictor_spark.models import lstm
-
-    return fit_predict_per_series(
-        df, lstm, value_col, ts_col, series_col, train_end, window, horizons,
-        train_kwargs=dict(d_model=d_model, n_heads=n_heads, units=units,
-                          epochs=epochs, lr=lr, weight_decay=weight_decay),
-        mc_samples=mc_samples, dropout_rate=dropout_rate, seed=seed,
-    )
-
-
-def mimo_fit_predict_per_series(
-    df: DataFrame,
-    horizons: tuple[int, ...] = (1, 3),
-    **kw,
-) -> DataFrame:
-    """MIMO instantiation (models/mimo.py; reference
-    predictor_plugin_mimo.py): every horizon decoded jointly from one
-    shared encoder via per-horizon cross-attention embeddings."""
-    from predictor_spark.models import mimo
-
-    train_kwargs = {k: kw.pop(k) for k in
-                    ("d_model", "conv_taps", "d_ff", "epochs", "lr",
-                     "weight_decay") if k in kw}
-    return fit_predict_per_series(df, mimo, horizons=horizons,
-                                  train_kwargs=train_kwargs, **kw)
-
-
-def composite_fit_predict_per_series(
-    df: DataFrame,
-    horizons: tuple[int, ...] = (1,),
-    **kw,
-) -> DataFrame:
-    """Composite multi-branch instantiation (models/composite.py;
-    reference predictor_plugin_composite.py)."""
-    from predictor_spark.models import composite
-
-    train_kwargs = {k: kw.pop(k) for k in
-                    ("branch_units", "merged_units", "epochs", "lr",
-                     "weight_decay") if k in kw}
-    return fit_predict_per_series(df, composite, horizons=horizons,
-                                  train_kwargs=train_kwargs, **kw)

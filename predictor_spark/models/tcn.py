@@ -76,15 +76,6 @@ def init_params(
     return p
 
 
-def _shift_right(x: np.ndarray, s: int) -> np.ndarray:
-    """out[:, t, :] = x[:, t-s, :], zero-filled below t=s (causal pad)."""
-    if s == 0:
-        return x
-    out = np.zeros_like(x)
-    out[:, s:, :] = x[:, :-s, :]
-    return out
-
-
 def forward(
     p: dict[str, np.ndarray],
     X: np.ndarray,

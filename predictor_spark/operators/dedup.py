@@ -26,6 +26,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
 from predictor_spark.operators.text import portable_hash, shingles_col
 
 #: modulus for the universal-hash family (a*h + b) % MOD; prime, and small
@@ -146,8 +147,18 @@ def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
 #: — the 16 transform-lambda constructions cost 0.4-0.8 s of py4j
 #: round-trips per LSH invocation, measured r15). Keyed by
 #: applicationId so a restarted session never sees another gateway's
-#: stale handles.
+#: stale handles; an insert evicts every other application's entries,
+#: so the memo holds one application's handful of trees at most.
 _SIG_MEMO: dict = {}
+
+
+def _memo_put(key: tuple, built):
+    """Insert ``built`` under ``key`` (key[0] = applicationId), first
+    evicting the entries of any other application."""
+    for stale in [k for k in _SIG_MEMO if k[0] != key[0]]:
+        del _SIG_MEMO[stale]
+    _SIG_MEMO[key] = built
+    return built
 
 
 def _sig_array(sh_col, num_perm: int):
@@ -174,32 +185,7 @@ def _sig_array(sh_col, num_perm: int):
             for a, b in _perm_params(num_perm)
         ])
 
-    built = F.element_at(F.transform(F.array(hashes), mins), 1)
-    _SIG_MEMO[key] = built
-    return built
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 16,
-) -> DataFrame:
-    """MinHash signatures: sig_k = min over shingles of (a_k*h + b_k) % MOD.
-
-    Fully map-side: shingle -> 28-bit portable hash -> per-permutation
-    array_min, all array expressions inside one projection — zero shuffle,
-    scan-bound at 100 TB. (min over the distinct-shingle array equals min
-    over the exploded set.) Swap portable_hash -> xxhash64 & a wider MOD
-    for the pure-scale path."""
-    doc = _doc_shingles(df, id_col, text_col, n)
-    sig = doc.select(F.col(id_col), _sig_array(F.col("sh"), num_perm).alias("sig"))
-    # two-step projection on purpose: CollapseProject keeps the non-cheap
-    # sig expression un-inlined, so it evaluates once for all mh_k columns
-    return sig.select(
-        F.col(id_col), *[F.element_at("sig", k + 1).alias(f"mh_{k}") for k in range(num_perm)]
-    )
+    return _memo_put(key, F.element_at(F.transform(F.array(hashes), mins), 1))
 
 
 def minhash_lsh_pairs(
@@ -255,14 +241,13 @@ def minhash_lsh_pairs(
              "bands", num_perm, bands)
     band_structs = _SIG_MEMO.get(_bkey)
     if band_structs is None:
-        band_structs = F.array(*[
+        band_structs = _memo_put(_bkey, F.array(*[
             F.struct(
                 F.lit(bi).alias("band"),
                 F.concat_ws("_", *[F.element_at("sig", bi * rows_per_band + r + 1) for r in range(rows_per_band)]).alias("bkey"),
             )
             for bi in range(bands)
-        ])
-        _SIG_MEMO[_bkey] = band_structs
+        ]))
 
     banded = sig.select(F.col(id_col), F.explode(band_structs).alias("x")).select(
         id_col, "x.band", "x.bkey"
@@ -400,18 +385,6 @@ def connected_components(
     return labels.select(F.col("vertex"), F.col("label").alias("component"))
 
 
-def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Distinct (hi, lo) orientation, self-loops dropped."""
-    return (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-    )
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "id_a",
@@ -459,12 +432,12 @@ def connected_components_star(
     )
 
     def signature(e: DataFrame) -> tuple:
-        row = e.agg(
+        row = collect_bounded(e.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
                 F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")), F.lit(0)
             ).alias("h"),
-        ).collect()[0]
+        ), ONE_ROW, "connected-components signature")[0]
         return (row["n"], row["h"])
 
     # r15: no up-front signature job — the first round can never match a

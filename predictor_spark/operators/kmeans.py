@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from predictor_spark.operators.localrel import collect_bounded
 from predictor_spark.operators.similarity import as_double_vec
 
 
@@ -86,10 +87,10 @@ def kmeans_fit(
     engines, so partial-aggregation summation-order ulps cannot cascade
     into different assignments (engine convention: rank over rounded
     measures)."""
-    init = (
-        df.orderBy(id_col).limit(k)
-        .select(as_double_vec(vec_col).alias("v")).collect()
-    )
+    # bounds from the schema: k centroids, one row per cluster
+    init = collect_bounded(
+        df.orderBy(id_col).limit(k).select(as_double_vec(vec_col).alias("v")),
+        k, "kmeans init centroids")
     centroids = [list(r["v"]) for r in init]
     for _ in range(n_iter):
         assigned = assign_clusters(df, centroids, id_col, vec_col, round_dp=assign_dp)
@@ -97,9 +98,9 @@ def kmeans_fit(
         if centroid_dp is not None:
             aggs = [F.round(F.avg(F.element_at("v", d + 1)), centroid_dp).alias(f"m{d}")
                     for d in range(dim)]
-        rows = assigned.groupBy("cluster").agg(
+        rows = collect_bounded(assigned.groupBy("cluster").agg(
             F.count(F.lit(1)).alias("n"), *aggs,
-        ).collect()
+        ), k, "kmeans centroid update")
         new = {r["cluster"]: [r[f"m{d}"] for d in range(dim)] for r in rows}
         centroids = [new.get(c, centroids[c]) for c in range(k)]
     return centroids, assign_clusters(df, centroids, id_col, vec_col, round_dp=assign_dp)

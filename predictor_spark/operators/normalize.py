@@ -20,6 +20,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
+
 # stats dict shape matches the reference's normalization JSON (FIXTURES F3):
 #   {"col": {"mean": m, "std": s}}  or  {"col": {"min": a, "max": b}}
 Stats = Mapping[str, Mapping[str, float]]
@@ -33,7 +35,7 @@ def fit_zscore(df: DataFrame, cols: Sequence[str]) -> dict[str, dict[str, float]
     aggs = []
     for c in cols:
         aggs += [F.avg(c).alias(f"{c}__mean"), F.stddev_samp(c).alias(f"{c}__std")]
-    row = df.agg(*aggs).collect()[0].asDict()
+    row = collect_bounded(df.agg(*aggs), ONE_ROW, "zscore fit")[0].asDict()
     out: dict[str, dict[str, float]] = {}
     for c in cols:
         std = row[f"{c}__std"]
@@ -46,7 +48,7 @@ def fit_minmax(df: DataFrame, cols: Sequence[str]) -> dict[str, dict[str, float]
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-    row = df.agg(*aggs).collect()[0].asDict()
+    row = collect_bounded(df.agg(*aggs), ONE_ROW, "minmax fit")[0].asDict()
     return {c: {"min": float(row[f"{c}__min"]), "max": float(row[f"{c}__max"])} for c in cols}
 
 
@@ -97,10 +99,9 @@ def looks_denormalized(df: DataFrame, col: str, stats: Mapping[str, float]) -> b
     (mean/std distance) or >95% of values already fall inside the
     denormalized [min,max] band. Prefer the explicit ``assume_normalized``
     flag; this exists for parity testing only."""
-    row = df.agg(
-        F.avg(col).alias("m"),
-        F.stddev_samp(col).alias("s"),
-    ).collect()[0]
+    row = collect_bounded(
+        df.agg(F.avg(col).alias("m"), F.stddev_samp(col).alias("s")),
+        ONE_ROW, "denormalization check")[0]
     m = row["m"] or 0.0
     s = row["s"] or 1.0
     # distance from standard-normal profile (stl_norm.py:46-63)

@@ -35,7 +35,12 @@ import math
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, Window, functions as F
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the data: distinct (part, key) groups or support keys whose
+# counts table is collected for a driver-side offset/span finish; the
+# same value ntile_spans and discrete_key_rank already enforced
+MAX_KEYS = 200_000
 
 
 def _assert_no_null_groups(cnt_rows, cols, op_name: str) -> None:
@@ -100,7 +105,8 @@ def two_phase_row_number(df: DataFrame, part_cols: list[str],
     d2 = df.withColumn("__bkt", bucket)
 
     # tiny counts table -> driver -> per-(part, bucket) prefix offsets
-    cnt_rows = d2.groupBy(*part_cols, "__bkt").count().collect()
+    cnt_rows = collect_bounded(d2.groupBy(*part_cols, "__bkt").count(),
+                               MAX_KEYS, "two_phase_row_number counts")
     if not cnt_rows:
         # empty input: createDataFrame([], [names]) cannot infer a
         # schema, so short-circuit to the window form's result — an
@@ -141,7 +147,7 @@ def two_phase_row_number(df: DataFrame, part_cols: list[str],
 def discrete_key_rank(df: DataFrame, part_cols: list[str],
                       key_col: str, tiebreak_cols: list[str],
                       rank_name: str = "i",
-                      max_keys: int = 200_000,
+                      max_keys: int = MAX_KEYS,
                       total_name: str | None = None) -> DataFrame:
     """row_number over Window.partitionBy(*part_cols)
     .orderBy(key_col, *tiebreak_cols) for a LOW-CARDINALITY leading
@@ -161,11 +167,9 @@ def discrete_key_rank(df: DataFrame, part_cols: list[str],
     column of that name — it falls out of the same counts table, so
     callers needing `count().over(partitionBy(part))` (another
     single-task-per-part window) get it for free."""
-    cnt_rows = df.groupBy(*part_cols, key_col).count().collect()
-    if len(cnt_rows) > max_keys:
-        raise ValueError(
-            f"{len(cnt_rows)} distinct (part, key) groups exceeds "
-            f"max_keys={max_keys}; use two_phase_row_number instead")
+    cnt_rows = collect_bounded(
+        df.groupBy(*part_cols, key_col).count(), max_keys,
+        "discrete_key_rank (part, key) groups; use two_phase_row_number")
     spark = df.sparkSession
     if not cnt_rows:
         # empty input: mirror the window form (empty frame + columns)
@@ -215,7 +219,7 @@ def _tile_of_py(p: int, base: int, rem: int) -> int:
 
 
 def ntile_spans(counts, n_tiles: int, *, op_name: str = "ntile_spans",
-                max_keys: int = 200_000):
+                max_keys: int = MAX_KEYS):
     """Driver-side span/tile assignment from a COLLECTED (key, count)
     histogram — the bounded-collect idiom (r12 hybrid_rrf /
     discrete_key_rank precedent) applied to the support-histogram
@@ -334,7 +338,8 @@ def exact_ntile(df: DataFrame, key_col: str, tiebreak_cols: list[str],
         from pyspark.sql import types as T
 
         k_type = d2.schema["__k"].dataType
-        counts = [(r["__k"], r["__c"]) for r in sup.collect()]
+        counts = [(r["__k"], r["__c"])
+                  for r in collect_bounded(sup, MAX_KEYS, "exact_ntile support")]
         int_rows, strad_rows, base, rem, _tot = ntile_spans(
             counts, n_tiles, op_name="exact_ntile")
         spark = df.sparkSession

@@ -28,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from predictor_spark.operators.localrel import collect_bounded
+
 
 def fft_window_features_expr(
     df: DataFrame,
@@ -199,10 +201,11 @@ def fft_window_features_chunked(
         .withColumn("__pid", F.spark_partition_id())
         .cache()
     )
+    # bound from the plan: one row per range partition
     counts = dict(
-        part.groupBy("__pid").agg(F.count(F.lit(1)).alias("c"))
-        .toPandas().itertuples(index=False, name=None)
-    )
+        (r["__pid"], r["c"]) for r in collect_bounded(
+            part.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")),
+            n_parts, "ssa partition counts"))
     offsets, acc = {}, 0
     for pid in range(max(counts, default=-1) + 1):
         offsets[pid] = acc

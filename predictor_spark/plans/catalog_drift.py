@@ -22,9 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from predictor_spark.operators.ranking import _tile_of, ntile_spans
+from predictor_spark.operators.ranking import MAX_KEYS, _tile_of, ntile_spans
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded, local_df
 
 _SPLIT = "DATE '2024-01-16'"
 
@@ -139,9 +139,9 @@ def psi_value_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("value", (F.sum("c").over(wv) / F.col("n")).alias("cd")))
     # all 9 edges in ONE aggregate (conditional mins), one job — not a
     # collect per quantile
-    edge_row = cum.agg(*[
+    edge_row = collect_bounded(cum.agg(*[
         F.min(F.when(F.col("cd") >= q, F.col("value"))).alias(f"e{i}")
-        for i, q in enumerate(qs)]).collect()[0]
+        for i, q in enumerate(qs)]), ONE_ROW, "psi_value_stability edges")[0]
     edges = [edge_row[f"e{i}"] for i in range(len(qs))]
     bin_expr = (1 + sum((F.lit(e) < F.col("value")).cast("int")
                         for e in edges)).alias("bin")
@@ -240,9 +240,9 @@ def mutual_info_value_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    max_keys-guarded), and computing the prefix sums here instead
     #    of in an unpartitioned support window removes the plan's last
     #    `No Partition Defined` WindowExec
-    sup_rows = [(r["value"], r["c"]) for r in
-                ev.groupBy("value").agg(F.count(F.lit(1)).alias("c"))
-                .collect()]
+    sup_rows = [(r["value"], r["c"]) for r in collect_bounded(
+        ev.groupBy("value").agg(F.count(F.lit(1)).alias("c")),
+        MAX_KEYS, "mutual_info_value_type support")]
     int_rows, strad_rows, base, rem, _n = ntile_spans(
         sup_rows, 10, op_name="mutual_info_value_type")
 

@@ -32,7 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the schema: ntile(10) yields at most 10 decile groups
+_N_DECILES = 10
 
 _SPLIT = "TIMESTAMP '2024-01-16 00:00:00'"
 
@@ -299,11 +302,11 @@ def lift_gain_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are exact integer arithmetic on the collected rows, and the final
     # 10-row frame is a local relation carrying the exact integers with
     # the SAME Spark float expressions (lift/cum_gain identical).
-    agg_rows = sorted(
+    agg_rows = sorted(collect_bounded(
         dec.select("label", "decile")
         .groupBy("decile")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos"))
-        .collect(), key=lambda r: r["decile"])
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")),
+        _N_DECILES, "lift deciles"), key=lambda r: r["decile"])
     nt = sum(int(r["n"]) for r in agg_rows)
     pt_vals = [int(r["pos"]) for r in agg_rows if r["pos"] is not None]
     pt = sum(pt_vals) if pt_vals else None

@@ -30,7 +30,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df, spark_round
+
+# from the schema: nation is a fixed 25-row dimension
+_NATIONS = 25
+# from the query: bpe_train_merges learns 3 merges (its _BPE_ITERS)
+_BPE_MERGES = 3
+# from the query: the BM25 cut is a top-20
+_BM25_CUT = 20
 
 _US = "\x1f"  # unit separator: the BPE symbol delimiter (catalog_text)
 
@@ -141,7 +148,8 @@ def bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merges = sorted(
         ((r["merge_rank"], r["left_sym"], r["right_sym"])
-         for r in bpe_train_merges(spark, sf_dir).collect()))
+         for r in collect_bounded(bpe_train_merges(spark, sf_dir),
+                                  _BPE_MERGES, "bpe merges")))
     docs = _t(spark, sf_dir, "documents")
     dw = (docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
@@ -529,9 +537,6 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    from predictor_spark.operators.localrel import local_df
-    from predictor_spark.plans.catalog_r8_pq import _Q9, _round_half_up
-
     # r15 (guide §1.2, the pca/bt idiom): the normalized edge frame is
     # ≤ |nations|² = 625 rows BOUNDED BY DESIGN (nation is a fixed
     # 25-row dimension at any SF), so ONE collect replaces the r14
@@ -542,14 +547,15 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Float semantics: per-dst contribution sums run in ascending-src
     # order (Spark's partial-agg order over ≤ 25 terms was never
     # pinned either) and every iteration re-rounds to 9 dp with
-    # Spark's exact double rounding (_round_half_up), the same
+    # Spark's exact double rounding (spark_round), the same
     # engine-synchronization step as before; oracle-verified at
     # sf0.001/0.01/0.1.
-    p_rows = edges.select(
+    p_rows = collect_bounded(edges.select(
         "src", "dst",
         (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
-    ).collect()
-    names = sorted(r["n_name"] for r in nat.select("n_name").collect())
+    ), _NATIONS * _NATIONS, "pagerank nation edges")
+    names = sorted(r["n_name"] for r in collect_bounded(
+        nat.select("n_name"), _NATIONS, "pagerank nations"))
     in_edges: dict = {n: [] for n in names}
     for r in p_rows:
         in_edges[r["dst"]].append((r["src"], r["p"]))
@@ -561,7 +567,7 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = 0.0
             for src, pv in sorted(in_edges[n]):
                 acc += ranks[src] * pv
-            new[n] = _round_half_up(base + _PR_DAMP * acc, _Q9)
+            new[n] = spark_round(base + _PR_DAMP * acc, 9)
         ranks = new
     return (local_df(spark,
                      [(n, ranks[n]) for n in names],
@@ -661,8 +667,8 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     top = (bm25_scores(docs, ["hash", "join", "scan"])
            .select("doc_id", F.round("score", 6).alias("s"))
-           .orderBy(F.col("s").desc(), "doc_id").limit(20))
-    cut = top.collect()
+           .orderBy(F.col("s").desc(), "doc_id").limit(_BM25_CUT))
+    cut = collect_bounded(top, _BM25_CUT, "hybrid_rrf_fusion BM25 cut")
     if any(r["s"] is None or r["doc_id"] is None for r in cut):
         raise ValueError(
             "hybrid_rrf_fusion: NULL score or doc_id in the collected "

@@ -222,24 +222,6 @@ def nbeats_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOT @query-registered — same rationale as nbeats_train_eval above.
-def nbeats_mc_uncertainty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MC-dropout uncertainty through the same Estimator (16 seeded dropout
-    forward passes per window, Welford-folded to mean/std — the numpy
-    analog of the reference's predict_mc_welford, common/base.py:350-352),
-    summarized as the A4/A5 metric pair (avg uncertainty + SNR)."""
-    ev = _t(spark, sf_dir, "events")
-    scored = nbeats_fit_predict_per_series(
-        ev, train_end=_CUTOFF, window=8, horizons=(1,),
-        mc_samples=16, dropout_rate=0.1, seed=0,
-    )
-    return scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("unc_h1"), 4).alias("avg_uncertainty"),
-        F.round(F.avg(F.abs(F.col("pred_h1"))) / F.avg("unc_h1"), 4).alias("snr"),
-    )
-
-
 @query(
     "loss_family_per_series",
     oracle="""

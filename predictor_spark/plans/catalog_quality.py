@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
 from predictor_spark.plans.catalog_drift import _qdisc
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
 
 _SPLIT = "DATE '2024-01-16'"
 
@@ -101,9 +102,10 @@ def js_divergence_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 = sup.agg(F.sum("c").alias("n"))
     cum = (sup.crossJoin(F.broadcast(n1))
            .select("value", (F.sum("c").over(wv) / F.col("n")).alias("cd")))
-    edge_row = cum.agg(*[
+    edge_row = collect_bounded(cum.agg(*[
         F.min(F.when(F.col("cd") >= q, F.col("value"))).alias(f"e{i}")
-        for i, q in enumerate(qs)]).collect()[0]
+        for i, q in enumerate(qs)]),
+        ONE_ROW, "js_divergence_value_drift edges")[0]
     edges = [edge_row[f"e{i}"] for i in range(len(qs))]
     bin_expr = (1 + sum((F.lit(e) < F.col("value")).cast("int")
                         for e in edges)).alias("bin")

@@ -41,7 +41,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the data: distinct whole-second view->purchase latencies,
+# ~15,000 per SF (15 / 150 / 1,497 at sf0.001 / 0.01 / 0.1): hit past SF ~13
+_LATENCY_SUPPORT = 200_000
 
 @query(
     "funnel_abandonment_profile",
@@ -226,15 +230,11 @@ def funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("user_id",
                    F.floor((F.unix_micros("mp") - F.unix_micros("mv"))
                            / F.lit(1e6)).cast("long").alias("lat_s")))
-    sup_rows = (lat.groupBy("lat_s").agg(F.count(F.lit(1)).alias("c"))
-                .collect())
-    if len(sup_rows) > 200_000:
-        raise ValueError(
-            "funnel_latency_quantiles: latency support has "
-            f"{len(sup_rows)} distinct whole-second values > "
-            "max 200000 — the bounded-collect contract no longer "
-            "holds; widen the latency bucket (e.g. whole minutes) or "
-            "use a distributed rank form")
+    sup_rows = collect_bounded(
+        lat.groupBy("lat_s").agg(F.count(F.lit(1)).alias("c")),
+        _LATENCY_SUPPORT,
+        "funnel_latency_quantiles latency support (widen the latency "
+        "bucket, e.g. whole minutes, or use a distributed rank form)")
     sup = sorted((r["lat_s"], r["c"]) for r in sup_rows)
     n = sum(c for _, c in sup)
     k50, k90 = (n + 1) // 2, (9 * n + 9) // 10

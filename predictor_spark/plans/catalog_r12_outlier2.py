@@ -37,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the data: (event_type, day) bars, 150 at sf0.001, 0.01 and 0.1
+# (5 types x 30 days); SF does not grow it
+_MAX_BARS = 200_000
 
 _MZ_THRESH = 3.5   # Iglewicz & Hoaglin's recommended cutoff
 _ESD_ROUNDS = 3
@@ -187,13 +191,10 @@ def generalized_esd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only distributed work left is the one events scan -> bars rollup.
     import decimal
 
-    bar_rows = _bars(spark, sf_dir).collect()
-    if len(bar_rows) > 200_000:
-        raise ValueError(
-            f"generalized_esd_stats: {len(bar_rows)} (event_type, day) "
-            "bars exceed the 200000-row bounded-collect contract — "
-            "aggregate to a coarser grain or restore the distributed "
-            "unrolled form")
+    bar_rows = collect_bounded(
+        _bars(spark, sf_dir), _MAX_BARS,
+        "generalized_esd_stats (event_type, day) bars (aggregate to a "
+        "coarser grain or restore the distributed unrolled form)")
     by_type: dict[str, list] = {}
     for r in bar_rows:
         by_type.setdefault(r["event_type"], []).append(

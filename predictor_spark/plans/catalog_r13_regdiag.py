@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded, local_df
 
 _TOPK = 5
 
@@ -201,11 +201,13 @@ def cooks_distance_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them as one-row LOCAL relations; every float (a, b, leverage,
     # Cook's D) is still computed by the identical Spark expressions,
     # so the output is bit-identical with exactly 3 scans.
-    mom_row = raw.agg(F.count(F.lit(1)).alias("n"),
-                      F.sum(dec("x")).alias("sx"),
-                      F.sum(dec("y")).alias("sy"),
-                      F.sum(dec("x") * F.col("x")).alias("sxx"),
-                      F.sum(dec("x") * F.col("y")).alias("sxy")).collect()[0]
+    mom_row = collect_bounded(
+        raw.agg(F.count(F.lit(1)).alias("n"),
+                F.sum(dec("x")).alias("sx"),
+                F.sum(dec("y")).alias("sy"),
+                F.sum(dec("x") * F.col("x")).alias("sxx"),
+                F.sum(dec("x") * F.col("y")).alias("sxy")),
+        ONE_ROW, "cooks_distance_top moments")[0]
     mom = local_df(spark, 
         [mom_row],
         "n long, sx decimal(38,0), sy decimal(38,0), "
@@ -224,7 +226,8 @@ def cooks_distance_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n"), F.max("sx").alias("sx"),
         F.max("sxx").alias("sxx"),
         F.sum(F.col("e").cast("decimal(38,0)") * F.col("e"))
-        .alias("rss")).collect()[0]
+        .alias("rss"))
+    rss_row = collect_bounded(rss_row, ONE_ROW, "cooks_distance_top rss")[0]
     rss = local_df(spark, 
         [rss_row],
         "n long, sx decimal(38,0), sxx decimal(38,0), rss decimal(38,0)")

@@ -30,7 +30,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from predictor_spark.plans.catalog import query, _t  # noqa: F401
 from predictor_spark.plans.catalog_r7_risk import _RET_BASE, _rets
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the data: directed (i, j) event-type pairs, |types|^2 - |types|.
+# The generator writes 5 types at every SF (20 pairs at sf0.001, 0.01 and
+# 0.1), so no SF reaches the bound; it is hit only past 100 event types
+MAX_TYPE_PAIRS = 100 * 99
 
 _ITERS = 3
 
@@ -99,11 +104,11 @@ def _bt_strengths(spark: SparkSession, sf_dir: str):
                  F.col("r").alias("ra"))
     b = r.select(F.col("event_type").alias("j"), "ddate",
                  F.col("r").alias("rb"))
-    win_rows = (a.join(b, "ddate")
-                .filter((F.col("i") != F.col("j"))
-                        & (F.col("ra") > F.col("rb")))
-                .groupBy("i", "j").agg(F.count(F.lit(1)).alias("w"))
-                .collect())
+    win_rows = collect_bounded(
+        a.join(b, "ddate")
+        .filter((F.col("i") != F.col("j")) & (F.col("ra") > F.col("rb")))
+        .groupBy("i", "j").agg(F.count(F.lit(1)).alias("w")),
+        MAX_TYPE_PAIRS, "bt_strengths directed win counts")
     w = {(rw["i"], rw["j"]): int(rw["w"]) for rw in win_rows}
     types = sorted({i for i, _ in w})
     wtot = {t: sum(c for (i, _), c in w.items() if i == t) for t in types}

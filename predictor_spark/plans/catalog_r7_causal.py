@@ -41,7 +41,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the schema: ntile(10) yields at most 10 decile groups
+_N_DECILES = 10
 
 _SPLIT = "TIMESTAMP '2024-01-16 00:00:00'"
 
@@ -279,7 +282,7 @@ def _decile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     order cannot change any value).  Equality re-pinned against the
     archived window form by tests/test_r13_prototypes.py; oracle-
     verified sf0.001/0.01/0.1."""
-    from predictor_spark.operators.ranking import _tile_of, ntile_spans
+    from predictor_spark.operators.ranking import MAX_KEYS, _tile_of, ntile_spans
 
     base = _user_base(spark, sf_dir).cache()
     t = F.col("treat") == 1
@@ -294,8 +297,8 @@ def _decile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_key = (base.select((-F.col("pre_activity")).alias("__k"),
                            "treat", "label")
                .groupBy("__k")
-               .agg(F.count(F.lit(1)).alias("c"), *arm_aggs)
-               .collect())
+               .agg(F.count(F.lit(1)).alias("c"), *arm_aggs))
+    per_key = collect_bounded(per_key, MAX_KEYS, "_decile_agg support")
     interior, strad, tbase, trem, _tot = ntile_spans(
         [(r["__k"], r["c"]) for r in per_key], 10,
         op_name="_decile_agg")
@@ -325,8 +328,8 @@ def _decile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      + F.col("__rn"),
                                      F.lit(tbase).cast("long"),
                                      F.lit(trem).cast("long")))
-                .groupBy("tile").agg(*arm_aggs)
-                .collect())
+                .groupBy("tile").agg(*arm_aggs))
+        edge = collect_bounded(edge, _N_DECILES, "_decile_agg straddling tiles")
         for r in edge:
             _add(r["tile"], r["nt"], r["nc"], r["pt"], r["pc"])
     base.unpersist()
@@ -407,7 +410,8 @@ def qini_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     with otherwise(0) over non-empty decile groups)."""
     agg = _decile_agg(spark, sf_dir)
     cum_rows, ct, cc, cpt, cpc = [], 0, 0, 0, 0
-    for r in sorted(agg.collect(), key=lambda r: r["decile"]):
+    for r in sorted(collect_bounded(agg, _N_DECILES, "qini deciles"),
+                    key=lambda r: r["decile"]):
         ct += int(r["nt"])
         cc += int(r["nc"])
         cpt += int(r["pt"])

@@ -35,13 +35,11 @@ IVF row's probed lists (IVFADC).
 
 from __future__ import annotations
 
-import decimal
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.operators.similarity import as_double_vec
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df, spark_round
 
 _M, _SUB, _K, _ITER = 16, 4, 16, 2
 _SHORT = 50  # ADC shortlist size before the exact re-rank
@@ -91,12 +89,10 @@ def _dkey(dist):
     NaN contract (ADVICE r14): CAST(NaN AS LONG) is 0 in Spark, so a
     NaN distance would WIN this argmin where the old min(struct)
     ordered NaN last.  That divergence needs a NaN in an embedding;
-    the graded tables' embeddings are finite by construction (the
-    deterministic generator emits bounded doubles; the _fit_sample /
-    oracle replay would already diverge engine-to-engine on NaN input
-    long before this key).  A general-purpose port should wrap the
-    distance in F.when(F.isnan(dist), F.lit(None)) to keep NaN rows
-    out of the min, matching the repo's fail-fast convention."""
+    the reference tables' embeddings are finite by construction, so
+    the guard below changes no result there: a NaN distance maps to a
+    NULL key, which min() skips, so a NaN centroid can never win."""
+    dist = F.when(~F.isnan(dist), dist)
     return (F.round(F.round(dist, 6) * 1e6, 0).cast("long") * _K
             + F.col("c"))
 
@@ -139,24 +135,6 @@ def _fit_sample(emb_v: DataFrame) -> DataFrame:
             .orderBy("h", "vec_id").limit(_FIT_N).drop("h"))
 
 
-def _round_half_up(x: float, exp) -> float:
-    """EXACTLY Spark's ``round(double, n)``: Spark routes doubles
-    through scala BigDecimal(d) == java BigDecimal.valueOf(d), i.e. the
-    SHORTEST decimal representation (Double.toString), then setScale
-    HALF_UP.  Python's repr() is the same shortest round-trip decimal,
-    so Decimal(repr(x)) reproduces the digit string Spark rounds —
-    empirically pinned: round(lit(0.12345649999999999), 6) = 0.123457
-    on Spark 4.1 and here (an exact-binary Decimal(x) would give
-    0.123456)."""
-    return float(decimal.Decimal(repr(x)).quantize(
-        exp, rounding=decimal.ROUND_HALF_UP))
-
-
-_Q6 = decimal.Decimal("0.000001")
-_Q8 = decimal.Decimal("0.00000001")
-_Q9 = decimal.Decimal("0.000000001")
-
-
 def _fit_codebooks(spark: SparkSession, fit_rows: list) -> list:
     """Deterministic Lloyd's fit for ALL _M subspaces at once —
     kmeans_fit's exact semantics (lowest-id init, 6-dp assignment
@@ -171,7 +149,7 @@ def _fit_codebooks(spark: SparkSession, fit_rows: list) -> list:
     PER iteration, ~0.9 s each at local[32] for 4096 local rows.  Float
     semantics are preserved operation for operation: squared distances
     accumulate in the same d = 0..3 fold order as _subdist, assignment
-    compares (round6(d2), centroid) exactly (_round_half_up is Spark's
+    compares (round6(d2), centroid) exactly (spark_round is Spark's
     double rounding bit-for-bit), and centroid updates are
     round8(sum/count) with the sum in ascending-vec_id order (the
     Spark/DuckDB partial-agg orders were never pinned to each other
@@ -203,7 +181,7 @@ def _fit_codebooks(spark: SparkSession, fit_rows: list) -> list:
                         d2 = t if d2 is None else d2 + t
                     d2s.append(d2)
                 dmin = min(d2s)
-                code = min((_round_half_up(d2, _Q6), c)
+                code = min((spark_round(d2, 6), c)
                            for c, d2 in enumerate(d2s)
                            if d2 <= dmin + 2e-6)[1]
                 key = (m, code)
@@ -215,7 +193,7 @@ def _fit_codebooks(spark: SparkSession, fit_rows: list) -> list:
                 else:
                     counts[key] = 1
                     sums[key] = list(sv)
-        books = [[[_round_half_up(sums[(m, c)][d] / counts[(m, c)], _Q8)
+        books = [[[spark_round(sums[(m, c)][d] / counts[(m, c)], 8)
                    for d in range(_SUB)]
                   if (m, c) in counts else books[m][c]
                   for c in range(_K)]
@@ -344,7 +322,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full table (VERDICT r7 #6).  r14: collect the bounded sample ONCE
     # (a single map-side TakeOrderedAndProject job) and run the fit
     # over local relations — see _fit_codebooks.
-    fit_rows = _fit_sample(emb_v).collect()
+    fit_rows = collect_bounded(_fit_sample(emb_v), _FIT_N, "pq fit sample")
     books = _fit_codebooks(spark, fit_rows)
     ex = _exploded(emb_v)
 

@@ -38,6 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
+
+# from the query: 63 range bounds split session starts into <= 64 buckets
+_GAP_BUCKETS = 64
 
 _CR_NUM, _CR_DEN = 8, 10   # critical ratio 0.8 = cu/(cu+co), cu=4 co=1
 _K_ERLANG = 8              # Erlang-B server count
@@ -287,7 +291,8 @@ def kingman_wait_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("dur_ms").cast("decimal(38,0)")
               * F.col("dur_ms")).alias("ss2"),
         (F.max(F.col("start_ms") + F.col("dur_ms"))
-         - F.min("start_ms")).alias("span_ms")).collect()[0]
+         - F.min("start_ms")).alias("span_ms"))
+    head = collect_bounded(head, ONE_ROW, "kingman_wait_estimate span")[0]
     lo, hi = head["lo"], head["hi"]
     step = max(1, ((hi - lo) // 64) if hi is not None else 1)
     bounds = ([float(lo + i * step) for i in range(1, 64)]
@@ -323,8 +328,9 @@ def kingman_wait_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.min(F.struct("start_ms", "user_id", "session_id"))
                        .alias("first"),
                        F.max(F.struct("start_ms", "user_id", "session_id"))
-                       .alias("last"))
-                  .collect())
+                       .alias("last")))
+    per_bucket = collect_bounded(per_bucket, _GAP_BUCKETS,
+                                 "kingman_wait_estimate gap buckets")
     per_bucket.sort(key=lambda r: r["bkt"])
     ng_t, sg_t, sg2_t = 0, 0, 0
     prev_last = None

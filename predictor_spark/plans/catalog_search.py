@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import _t, query
 from predictor_spark.plans.ga import ga_search
-from predictor_spark.plans.neat import neat_search
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded, local_df
 
 _CUTOFF = "2024-01-22 00:00:00"
 
@@ -127,9 +126,9 @@ def ga_fitness_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     def evaluate(params: dict) -> float:
         lag, shrink = int(params["lag"]), float(params["shrink"])
         pred = (1.0 - shrink) * F.col("mu") + shrink * F.col("value")
-        row = base.filter(F.col(f"t{lag}").isNotNull()).agg(
+        row = collect_bounded(base.filter(F.col(f"t{lag}").isNotNull()).agg(
             F.avg(F.abs(pred - F.col(f"t{lag}"))).alias("mae")
-        ).collect()[0]
+        ), ONE_ROW, "ga candidate mae")[0]
         return float(row["mae"])
 
     res = ga_search(
@@ -145,60 +144,6 @@ def ga_fitness_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     return local_df(spark, 
         rows, "generation int, best_fitness double, mean_fitness double, "
               "best_lag int, best_shrink double",
-    )
-
-
-# NOT @query-registered — same rationale as ga_fitness_trajectory above;
-# the NEAT loop is pytest-verified against a pure-Python replay
-# (tests/test_neat.py).
-def neat_fitness_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded NEAT search (pop 8, 4 generations, parameters-as-genes:
-    speciation + fitness sharing + structural add/remove mutation,
-    plans/neat.py; ref optimizer_plugins/neat_optimizer.py:93-364) over
-    the same shrunk-persistence forecaster as ga_fitness_trajectory —
-    but here a genome holds a SUBSET of {bias, lag, shrink} and the
-    evaluator supplies defaults (bias=0, lag=1, shrink=1 = pure
-    persistence) for absent genes, so structure itself is searched.
-    Same Spark topology: cached evaluation base, one tiny aggregate job
-    per candidate, generations fan out concurrently."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    cutoff = F.lit(_CUTOFF).cast("timestamp")
-    base = (
-        ev.select("user_id", "ts", "value")
-        .withColumn("mu", F.avg(F.when(F.col("ts") < cutoff, F.col("value")))
-                    .over(Window.partitionBy("user_id")))
-        .withColumns({f"t{h}": F.lead("value", h).over(w) for h in (1, 2, 3)})
-        .filter(F.col("ts") >= cutoff)
-        .cache()
-    )
-    base.count()
-
-    def evaluate(params: dict) -> float:
-        lag = int(params.get("lag", 1))
-        shrink = float(params.get("shrink", 1.0))
-        bias = float(params.get("bias", 0.0))
-        pred = (1.0 - shrink) * F.col("mu") + shrink * F.col("value") + bias
-        row = base.filter(F.col(f"t{lag}").isNotNull()).agg(
-            F.avg(F.abs(pred - F.col(f"t{lag}"))).alias("mae")
-        ).collect()[0]
-        return float(row["mae"])
-
-    res = neat_search(
-        {"bias": (-0.5, 0.5), "lag": (1, 3), "shrink": (0.0, 1.0)},
-        evaluate, pop_size=8, n_generations=4, threshold=0.3,
-        add_prob=0.35, remove_prob=0.1, mutpb=0.3,
-        interspecies_rate=0.05, seed=13, max_parallel=8,
-    )
-    rows = [
-        (h["generation"], round(h["best_fitness"], 4), round(h["mean_fitness"], 4),
-         h["n_species"], round(h["mean_complexity"], 4),
-         ",".join(f"{k}={round(v, 4)}" for k, v in sorted(h["best_params"].items())))
-        for h in res.history
-    ]
-    return local_df(spark, 
-        rows, "generation int, best_fitness double, mean_fitness double, "
-              "n_species int, mean_complexity double, best_genome string",
     )
 
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
 
 _CMS_D, _CMS_W = 4, 64
 _BLOOM_M, _BLOOM_K = 512, 3
@@ -267,10 +267,16 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embedding contributes one i=1 row), so the separate emb.count()
     # job is gone; on the graded fixed-width embeddings it equals the
     # old emb.count() identically.
-    mu_rows = (pe.groupBy("i")
-               .agg(F.avg("x").alias("m"),
-                    F.count(F.lit(1)).alias("cnt"))
-               .orderBy("i").collect())  # bounded: 64
+    # bounds from the schema: _PCA_DIM positions, a _PCA_DIM^2 covariance
+    mu_rows = collect_bounded(
+        pe.groupBy("i").agg(F.avg("x").alias("m"),
+                            F.count(F.lit(1)).alias("cnt")).orderBy("i"),
+        _PCA_DIM, "pca mean vector")
+    if mu_rows and mu_rows[0]["i"] != 1:
+        raise ValueError(
+            "pca_power_iteration: no embedding has a position-1 element "
+            f"(first position {mu_rows[0]['i']}), so the row count n "
+            "cannot be read off the mean-vector aggregate")
     mu_arr = [r["m"] for r in mu_rows]
     n = int(mu_rows[0]["cnt"]) if mu_rows else 0
     mulit = F.array(*[F.lit(float(m)) for m in mu_arr])
@@ -297,8 +303,8 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov_rows = (prods.groupBy((F.col("i0") + 1).alias("i"),
                               (F.col("j0") + 1).alias("j"))
                 .agg((F.sum(F.col("ci") * F.col("cj")) / (n - 1))
-                     .alias("v"))
-                ).collect()
+                     .alias("v")))
+    cov_rows = collect_bounded(cov_rows, _PCA_DIM * _PCA_DIM, "pca covariance")
     import math
 
     def rnd(x: float, dp: int) -> float:

@@ -15,7 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.operators import dedup, similarity, text
 from predictor_spark.plans.catalog import query, _t
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded, local_df
+
+# from the query: kmeans_one_step seeds the 4 lowest-id vectors
+_KM_SEEDS = 4
 
 # ---------------------------------------------------------------------------
 # text analysis
@@ -508,8 +511,10 @@ def kmeans_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = [
-        list(r["v"]) for r in emb.orderBy("vec_id").limit(4)
-        .select(similarity.as_double_vec("embedding").alias("v")).collect()
+        list(r["v"]) for r in collect_bounded(
+            emb.orderBy("vec_id").limit(_KM_SEEDS)
+            .select(similarity.as_double_vec("embedding").alias("v")),
+            _KM_SEEDS, "kmeans_one_step seeds")
     ]
     assigned = kmeans.assign_clusters(emb, cents, round_dp=6)
     return assigned.groupBy("cluster").agg(
@@ -1029,11 +1034,10 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "transform(sequence(0, size(syms) - 2),"
                 " i -> struct(syms[i] AS l, syms[i + 1] AS r))")).alias("pr"),
         ).select("cnt", "pr.l", "pr.r")
-        won = (
+        won = collect_bounded(
             pairs.groupBy("l", "r").agg(F.sum("cnt").alias("pc"))
-            .orderBy(F.col("pc").desc(), "l", "r").limit(1)
-            .collect()
-        )
+            .orderBy(F.col("pc").desc(), "l", "r").limit(1),
+            ONE_ROW, "bpe argmax pair")
         if not won:
             # no adjacent pair anywhere: the pre-r14 chain produced
             # empty best frames from here on — stop identically

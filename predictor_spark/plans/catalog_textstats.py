@@ -30,7 +30,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.plans.catalog import query, _t
 from predictor_spark.operators.text import tokens_col
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the data: 1024-wide doc_id buckets (~2e11 docs at the bound)
+_MAX_DOC_BUCKETS = 200_000
 
 _TOKS = r"regexp_split_to_array(trim(text), '\s+')"
 
@@ -222,14 +225,11 @@ def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = docs.select("doc_id",
                       (F.col("doc_id") - F.col("doc_id") % 1024)
                       .alias("b"))
-    bcnt_rows = (ids.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
-                 .collect())
-    if len(bcnt_rows) > 200_000:
-        raise ValueError(
-            "heaps_vocab_growth: doc_id bucket histogram has "
-            f"{len(bcnt_rows)} rows > max 200000 (~2e11 docs at "
-            "1024-wide buckets) — the bounded-collect contract no "
-            "longer holds; widen the bucket stride before collecting")
+    bcnt_rows = collect_bounded(
+        ids.groupBy("b").agg(F.count(F.lit(1)).alias("c")),
+        _MAX_DOC_BUCKETS,
+        "heaps_vocab_growth doc_id bucket histogram (widen the bucket "
+        "stride before collecting)")
     bcnt = sorted((r["b"], r["c"]) for r in bcnt_rows)
     nd = sum(c for _, c in bcnt)
     target_rows = []

@@ -28,7 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from predictor_spark.models.estimator import nbeats_fit_predict_per_series
 from predictor_spark.plans.ga import ga_search
 from predictor_spark.plans.search import SearchResult, candidate_fitness
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
+
+# from the schema: is_train is a boolean, two slices
+_SLICES = 2
 
 #: hyperparameter bounds — int bounds inclusive, float bounds uniform
 #: (the log10-lr gene mirrors the reference's learning_rate search space)
@@ -44,10 +47,10 @@ def _candidate_metrics(scored: DataFrame) -> tuple[float, float, float, float]:
     """(train_mae, train_naive, val_mae, val_naive) — ONE aggregate job,
     4 scalars to the driver."""
     p, t, b = F.col("pred_h1"), F.col("target_h1"), F.col("baseline")
-    row = scored.groupBy("is_train").agg(
+    row = collect_bounded(scored.groupBy("is_train").agg(
         F.avg(F.abs(p - t)).alias("mae"),
         F.avg(F.abs(b - t)).alias("naive"),
-    ).collect()
+    ), _SLICES, "nbeats candidate metrics")
     by = {r["is_train"]: r for r in row}
     if True not in by or False not in by:
         raise ValueError("candidate produced no train or no val rows")

@@ -25,6 +25,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
+
+# from the schema: the scored frame splits into a val and a holdout slice
+_SLICES = 2
+
 
 def candidate_fitness(train_mae: float, train_naive: float,
                       val_mae: float, val_naive: float) -> float:
@@ -205,9 +210,9 @@ def ar_lag_search(
         t, p, b = F.col(f"target_h{h}"), F.col("pred"), F.col("baseline")
         row = {
             r["slice"]: r
-            for r in scored.groupBy("slice").agg(
+            for r in collect_bounded(scored.groupBy("slice").agg(
                 F.avg(F.abs(p - t)).alias("mae"), F.avg(F.abs(b - t)).alias("naive"),
-            ).collect()
+            ), _SLICES, "candidate val/holdout metrics")
         }
         val = row.get("val")
         if val is None:
@@ -217,10 +222,10 @@ def ar_lag_search(
             df, value_col=value_col, ts_col=ts_col, series_col=series_col,
             train_end=train_end, horizon=h, eval_on="train",
         )
-        tr = train_scored.agg(
+        tr = collect_bounded(train_scored.agg(
             F.avg(F.abs(F.col("pred") - F.col(f"target_h{h}"))).alias("mae"),
             F.avg(F.abs(F.col("baseline") - F.col(f"target_h{h}"))).alias("naive"),
-        ).collect()[0]
+        ), ONE_ROW, "candidate train metrics")[0]
         tr_mae = tr["mae"] if tr["mae"] is not None else math.inf
         tr_naive = tr["naive"] if tr["naive"] is not None else 0.0
         return candidate_fitness(tr_mae, tr_naive, val["mae"], val["naive"])

@@ -28,10 +28,10 @@ import hashlib
 import os
 import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
 from predictor_spark.sources.tables import load_table, table_fingerprint
 
 
@@ -53,7 +53,8 @@ def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> st
         # band over the ACTUAL id range, not [0, count): offset or sparse
         # doc_ids (e.g. the synthesized sf1 replicas) must still land every
         # row in exactly one chunk
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+        lo, hi = collect_bounded(docs.agg(F.min("doc_id"), F.max("doc_id")),
+                                 ONE_ROW, "stream-dedup doc_id range")[0]
         span = int(hi) - int(lo) + 1
         band = max(1, (span + n_chunks - 1) // n_chunks)
         # refetch ids start past max(doc_id) so they can never collide
@@ -84,7 +85,7 @@ def stream_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DataFrame of (lang, n_unique) — equal to batch
     COUNT(DISTINCT text) per lang, which is the oracle."""
     d = _chunked_docs_dir(spark, sf_dir)
-    from predictor_spark.streaming.windows import stream_clone
+    from predictor_spark.streaming.windows import run_memory_sink, stream_clone
 
     # complete-mode downstream agg: the trailing no-data batch re-emits
     # unchanged state, so it is skipped; state width footer-auto-sized
@@ -99,22 +100,6 @@ def stream_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ded = stream.withColumn("h", F.md5("text")).dropDuplicates(["lang", "h"])
     agg = ded.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_unique"))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n_batches = len(q.recentProgress)
-    finally:
-        q.stop()
-    from predictor_spark.streaming.windows import drain_to_caller
-
-    out = drain_to_caller(spark, ss, name, agg.schema)
     # the multi-batch contract is load-bearing for the cross-batch-state
     # claim; fail loudly if the source collapsed into one trigger
-    assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
-    return out
+    return run_memory_sink(agg, "complete", spark, min_batches=3)

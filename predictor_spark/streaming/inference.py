@@ -23,6 +23,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
+from predictor_spark.operators.localrel import collect_bounded
+
+# from the data: one model blob per series is broadcast to every
+# executor (~2 KB for a 1-layer TCN, so ~400 MB at the bound); series are
+# users, 15,000 per SF in the generator, so the bound is hit past SF ~13
+STORE_MAX_SERIES = 200_000
+
 
 def stream_score_ar1(
     spark: SparkSession,
@@ -126,12 +133,14 @@ def stream_score_model(
     from predictor_spark.models.registry import deserialize_params
     from predictor_spark.shiplib import ensure_workers_can_import
     from predictor_spark.streaming.stateful import _chunked_stream_dir
+    from predictor_spark.streaming.windows import run_memory_sink
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     core = core if core is not None else nbeats
     ensure_workers_can_import(spark)
-    blob_map = {r["user_id"]: bytes(r["params"])
-                for r in store.select("user_id", "params").collect()}
+    rows = collect_bounded(store.select("user_id", "params"),
+                           STORE_MAX_SERIES, "model store")
+    blob_map = {r["user_id"]: bytes(r["params"]) for r in rows}
     if not blob_map:
         raise ValueError("empty model store")
     _, stats0 = deserialize_params(next(iter(blob_map.values())))
@@ -193,11 +202,4 @@ def stream_score_model(
     upd = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"stream_model_{uuid.uuid4().hex[:8]}"
-    q = upd.writeStream.outputMode("update").format("memory") \
-        .queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).localCheckpoint()
+    return run_memory_sink(upd, "update", spark)

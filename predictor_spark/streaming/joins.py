@@ -21,10 +21,9 @@ import hashlib
 import os
 import shutil
 import time as _time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
 
 
 def _chronological_chunks(spark: SparkSession, sf_dir: str, n_bands: int = 3) -> str:
@@ -57,7 +56,8 @@ def _chronological_chunks(spark: SparkSession, sf_dir: str, n_bands: int = 3) ->
             (F.unix_micros("v_ts")
              + (F.unix_micros("p_ts") - F.unix_micros("v_ts")) / 2)
             .cast("long").alias("mid")
-        ).agg(F.min("mid").alias("lo"), F.max("mid").alias("hi")).collect()[0]
+        ).agg(F.min("mid").alias("lo"), F.max("mid").alias("hi"))
+        mids = collect_bounded(mids, ONE_ROW, "stream-join chunk cuts")[0]
         if mids.lo is None:
             cuts_us = [1704931200_000000, 1705795200_000000]  # Jan 11 / 21
         else:
@@ -117,6 +117,7 @@ def view_purchase_attribution(
     (ADVICE r5).
     """
     from predictor_spark.sources.tables import canonical_ts
+    from predictor_spark.streaming.windows import run_memory_sink
 
     # chunk materialization runs on the caller's session (batch writes);
     # the streaming query itself plans on the isolated clone below
@@ -177,25 +178,12 @@ def view_purchase_attribution(
             (F.unix_micros("p_ts") - F.unix_micros("v_ts")) / 60_000_000.0, 4
         ).alias("lag_min"),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (joined.writeStream.outputMode("append").format("memory")
-         .queryName(name).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # the memory-sink table lives in the clone's catalog; drain it there
-    # and hand back a local-relation frame on the CALLER's session so
-    # everything downstream plans under the caller's conf. BOUNDED: the
-    # memory sink is already driver-resident by construction (Spark's
-    # MemorySink buffers every batch on the driver), so this collect
-    # moves no data an unbounded sink wouldn't have — the bound is the
-    # join output itself, |views ⋈ purchases within horizon|, events-SF
-    # sized in every catalog use. A production stream would swap the
-    # memory sink for kafka/parquet and never materialize here.
-    rows = ss.table(name).collect()
-    ss.catalog.dropTempView(name)
-    return local_df(spark, rows, joined.schema)
+    # the memory-sink table lives in the clone's catalog and drains back
+    # onto the CALLER's session; its size is the join output itself,
+    # |views ⋈ purchases within horizon|, events-SF sized in every
+    # catalog use. A production stream would swap the memory sink for
+    # kafka/parquet and never materialize here.
+    return run_memory_sink(joined, "append", spark)
 
 
 def purchases_enriched_with_signup(
@@ -216,7 +204,7 @@ def purchases_enriched_with_signup(
     a new snapshot, or swap to a Delta table the batch job upserts.
     """
     from predictor_spark.sources.tables import load_table
-    from predictor_spark.streaming.windows import _events_stream, drain_memory_sink
+    from predictor_spark.streaming.windows import _events_stream, run_memory_sink
 
     signup = (
         load_table(spark, sf_dir, "events")
@@ -233,10 +221,4 @@ def purchases_enriched_with_signup(
             (F.unix_micros("ts") - F.unix_micros("signup_ts")) / 60_000_000.0, 4
         ).alias("min_since_signup"),
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return drain_memory_sink(spark, name, joined.schema)
+    return run_memory_sink(joined, "append", spark)

@@ -24,10 +24,11 @@ import hashlib
 import os
 import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
 
 
 def _chunked_stream_dir(
@@ -53,7 +54,8 @@ def _chunked_stream_dir(
         F.percentile(F.unix_micros("ts"), F.array(*[
             F.lit(i / n_chunks) for i in range(1, n_chunks)
         ])).alias("qs")
-    ).collect()[0]
+    )
+    row = collect_bounded(row, ONE_ROW, "stream chunk cuts")[0]
     cuts = [int(q) for q in row["qs"]]
     lo = [None] + cuts
     hi = cuts + [None]
@@ -141,20 +143,14 @@ def stateful_running_stats(
     upd = stream.groupBy("user_id").applyInPandasWithState(
         update, _OUT_SCHEMA, _STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = upd.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # one emission per (user, batch); the final state has the max n
     from pyspark.sql import Window
 
-    from predictor_spark.streaming.windows import drain_to_caller
+    from predictor_spark.streaming.windows import run_memory_sink
 
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     return (
-        drain_to_caller(spark, ss, name, _OUT_SCHEMA)
+        run_memory_sink(upd, "update", spark)
         .withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") == 1)
         .drop("__r")

@@ -19,7 +19,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from predictor_spark.operators.localrel import local_df
+from predictor_spark.operators.localrel import collect_bounded, local_df
 
 def stream_clone(spark: SparkSession, source_files: list[str],
                  skip_no_data: bool) -> SparkSession:
@@ -58,27 +58,48 @@ def stream_clone(spark: SparkSession, source_files: list[str],
     return ss
 
 
-def drain_to_caller(caller: SparkSession, ss: SparkSession, name: str,
-                    schema) -> DataFrame:
-    """Drain a clone-session memory sink back onto the CALLER session
-    (local relation), dropping the clone's temp view. The memory sink is
-    already driver-resident, so the collect moves nothing extra."""
-    rows = ss.table(name).collect()
-    ss.catalog.dropTempView(name)
-    return local_df(caller, rows, schema)
+# from the data: the drain copies the sink's rows into Python and back
+# into a local relation.  The largest sink, streaming_session_windows,
+# emits ~955,000 rows per SF (946 / 9,549 / 95,465 at sf0.001 / 0.01 /
+# 0.1), so this bound is first hit past SF ~52; the next largest,
+# streaming_static_enrichment, ~200,000 rows per SF, past SF ~250
+SINK_MAX_ROWS = 5_000_000
 
 
-def drain_memory_sink(spark: SparkSession, name: str, schema) -> DataFrame:
-    """Collect a completed memory-sink table and DROP the temp view.
+def run_memory_sink(stream: DataFrame, mode: str, caller: SparkSession,
+                    min_batches: int = 0) -> DataFrame:
+    """Run ``stream`` to completion into a memory sink and drain it.
 
-    The memory sink already holds its rows on the driver, so the collect
-    adds nothing; without the drop, every call leaves a uuid-named
-    in-memory table registered for the session lifetime (bench loops and
-    grading sweeps accumulate them). Returns a plain local-relation
-    DataFrame with the aggregation's schema."""
-    rows = spark.table(name).collect()
-    spark.catalog.dropTempView(name)
-    return local_df(spark, rows, schema)
+    The query starts on the stream's own session (a per-query clone
+    from :func:`stream_clone`, or the caller itself) under a uuid name
+    in output mode ``mode``; ``processAllAvailable`` drives it
+    synchronously and the query stops in ``finally``.  The sink's temp
+    view is then dropped, so no uuid-named table outlives the call, and
+    the rows come back as a local relation on ``caller``: everything
+    downstream plans under the caller's conf.  The drain is one Spark
+    job over the sink's rows, which already sit on the driver.
+
+    ``min_batches``: fail loudly when the source delivered fewer
+    micro-batches (a multi-batch replay that collapsed into one
+    trigger no longer exercises cross-batch state)."""
+    ss = stream.sparkSession
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    q = (stream.writeStream.outputMode(mode).format("memory")
+         .queryName(name).start())
+    try:
+        try:
+            q.processAllAvailable()
+            n_batches = len(q.recentProgress)
+        finally:
+            q.stop()
+        rows = collect_bounded(ss.table(name), SINK_MAX_ROWS,
+                               f"memory sink {name}")
+    finally:
+        ss.catalog.dropTempView(name)
+    if n_batches < min_batches:
+        raise AssertionError(
+            f"expected >={min_batches} micro-batches, got {n_batches}")
+    return local_df(caller, rows, stream.schema)
 
 
 def _stream_dir(sf_dir: str, table: str = "events") -> str:
@@ -141,18 +162,7 @@ def tumbling_event_counts(
         )
         .select(F.col("w.start").alias("hour"), "event_type", "n", "total_value")
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return drain_to_caller(spark, ss, name, agg.schema)
+    return run_memory_sink(agg, "complete", spark)
 
 
 def sessionized_stream_counts(
@@ -170,19 +180,8 @@ def sessionized_stream_counts(
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        drain_to_caller(spark, ss, name, agg.schema)
+        run_memory_sink(agg, "complete", spark)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
@@ -264,13 +263,7 @@ def late_data_drop_counts(
              F.round(F.sum("value"), 6).alias("total_value"))
         .select(F.col("w.start").alias("hour"), "event_type", "n", "total_value")
     )
-    name = f"stream_late_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return drain_to_caller(spark, ss, name, agg.schema)
+    return run_memory_sink(agg, "append", spark)
 
 
 def sliding_event_counts(
@@ -302,15 +295,4 @@ def sliding_event_counts(
         .select(F.col("w.start").alias("win_start"), "event_type", "n",
                 "total_value")
     )
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return drain_to_caller(spark, ss, name, agg.schema)
+    return run_memory_sink(agg, "complete", spark)

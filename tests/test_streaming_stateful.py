@@ -166,3 +166,33 @@ def test_streaming_dedup_state_survives_checkpoint_restart(spark, tmp_path):
         F.count_distinct("text").alias("n")).collect()}
     assert final == want                  # refetches dropped across restart
     assert sum(partial.values()) < sum(final.values())  # run 1 really stopped early
+
+
+def test_run_memory_sink_leaves_no_temp_view(spark, tmp_path):
+    """The one memory-sink run-and-drain: rows come back as a local
+    relation on the caller, no query keeps running, and neither the
+    clone nor the caller session keeps the uuid-named sink view; a
+    replay with too few micro-batches fails loudly after the drain."""
+    import pytest
+
+    from predictor_spark.streaming.windows import run_memory_sink
+
+    src = tmp_path / "src"
+    spark.range(0, 40, 1, 2).write.parquet(str(src))
+    ss = spark.newSession()
+    views_before = {t.name for t in spark.catalog.listTables()}
+    stream = (ss.readStream.schema("id long").parquet(str(src))
+              .groupBy((F.col("id") % 4).alias("k")).count())
+
+    out = run_memory_sink(stream, "complete", spark)
+
+    assert out.sparkSession is spark
+    assert sorted((r.k, r["count"]) for r in out.collect()) == [
+        (0, 10), (1, 10), (2, 10), (3, 10)]
+    assert not [t for t in ss.catalog.listTables() if t.isTemporary]
+    assert {t.name for t in spark.catalog.listTables()} == views_before
+    assert not ss.streams.active
+
+    with pytest.raises(AssertionError, match="micro-batches"):
+        run_memory_sink(stream, "complete", spark, min_batches=3)
+    assert not [t for t in ss.catalog.listTables() if t.isTemporary]
