@@ -18,6 +18,8 @@ pattern instead (operators/spectral.py) — windows there, model here.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,6 +33,76 @@ def _windows(v: np.ndarray, window: int) -> np.ndarray:
     if len(v) < window:
         return np.empty((0, window))
     return np.lib.stride_tricks.sliding_window_view(v, window)
+
+
+class SeriesWindows(NamedTuple):
+    """One series sorted by time and cut into complete windows. X is
+    (N, window), or the channels-last (N, window, C) stack with the value
+    channel first when there are feature columns; ends[i] is the index
+    of X[i]'s last step."""
+
+    v: np.ndarray
+    ts: pd.Series
+    chans: list[np.ndarray]
+    X: np.ndarray
+    ends: np.ndarray
+
+
+def series_windows(pdf: pd.DataFrame, value_col: str, ts_col: str,
+                   window: int, feature_cols: tuple[str, ...]) -> SeriesWindows:
+    pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+    v = pdf[value_col].to_numpy(dtype=np.float64)
+    chans = [v] + [pdf[c].to_numpy(dtype=np.float64) for c in feature_cols]
+    X = (np.stack([_windows(ch, window) for ch in chans], axis=-1)
+         if feature_cols else _windows(v, window))
+    return SeriesWindows(v, pdf[ts_col], chans, X,
+                         np.arange(window - 1, len(v)))
+
+
+def train_mask(sw: SeriesWindows, max_h: int, cutoff) -> np.ndarray:
+    """Train windows: every horizon target exists AND lands before the
+    cutoff (the same no-leakage guard as ar1_fit_predict)."""
+    n = len(sw.v)
+    tr = sw.ends + max_h < n
+    tr &= sw.ts.iloc[np.minimum(sw.ends + max_h, n - 1)].to_numpy() < cutoff
+    return tr
+
+
+def normalize(X: np.ndarray, stats: dict) -> np.ndarray:
+    """Z-score windows by train stats: one (mu, sd) for (N, window) X;
+    per channel for a channels-last (N, window, C) stack, flattened to
+    (N, window * C) afterwards when ``stats["flatten"]`` is set."""
+    if X.ndim == 2:
+        return (X - float(stats["mu"])) / float(stats["sd"])
+    Xn = (X - stats["ch_mu"]) / stats["ch_sd"]
+    return Xn.reshape(Xn.shape[0], -1) if int(stats.get("flatten", 0)) else Xn
+
+
+def fit_series(core, sw: SeriesWindows, tr: np.ndarray, cutoff,
+               horizons: tuple[int, ...], seed, train_kwargs: dict,
+               flatten: bool) -> tuple[dict, dict, np.ndarray]:
+    """Fit ``core`` on one series' train windows ``tr``. Inputs and
+    targets are z-normalized by stats of the values before ``cutoff``
+    (fit-on-train only, reference phase2_6_preprocessor.py:346-349; a
+    near-zero std becomes 1). Returns (params, stats, normalized train
+    windows); ``stats`` is what ``normalize`` and the denormalization
+    need."""
+    cut = int(np.searchsorted(sw.ts.to_numpy(), cutoff))
+    mu = float(sw.v[:cut].mean())
+    sd = float(sw.v[:cut].std())
+    sd = sd if abs(sd) > 1e-8 else 1.0   # N1 std guard
+    stats = {"mu": mu, "sd": sd, "flatten": int(flatten)}
+    if sw.X.ndim == 3:
+        # per-channel train stats (channel 0 is the value channel)
+        ch_mu = np.array([ch[:cut].mean() for ch in sw.chans])
+        ch_sd = np.array([ch[:cut].std() for ch in sw.chans])
+        ch_sd[np.abs(ch_sd) < 1e-8] = 1.0
+        ch_mu[0], ch_sd[0] = mu, sd
+        stats["ch_mu"], stats["ch_sd"] = ch_mu, ch_sd
+    Xtr = normalize(sw.X[tr], stats)
+    tgts = {h: (sw.v[sw.ends[tr] + h] - mu) / sd for h in horizons}
+    params, _ = core.train(Xtr, tgts, horizons, seed=seed, **train_kwargs)
+    return params, stats, Xtr
 
 
 def fit_predict_per_series(
@@ -61,7 +133,9 @@ def fit_predict_per_series(
         -> (params, losses)
       predict_with_uncertainty(params, X, horizons, mc_samples,
         dropout_rate, seed) -> (means, stds)
-    Cores: models.nbeats (default), models.mlp, models.tcn.
+    Cores: models.nbeats (default), models.mlp, models.tcn, models.lstm,
+    models.transformer, models.tft, models.mimo, models.composite; each
+    binds the shared contract in models/layers.py.
 
     Returns one row per (series, test window end): value, baseline
     (persistence), and per horizon target_h / pred_h / unc_h. Inputs and
@@ -90,7 +164,7 @@ def fit_predict_per_series(
     train_kwargs = dict(train_kwargs or {})
     hs = tuple(int(h) for h in horizons)
     max_h = max(hs)
-    cutoff = pd.Timestamp(train_end)
+    cutoff = np.datetime64(pd.Timestamp(train_end))
 
     fields = [f"{series_col} long", f"{ts_col} timestamp",
               "value double", "baseline double"]
@@ -101,19 +175,9 @@ def fit_predict_per_series(
     schema = ", ".join(fields)
 
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
         sid = int(pdf[series_col].iloc[0])
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col]
-        n = len(v)
-        if feature_cols:
-            chans = [v] + [pdf[c].to_numpy(dtype=np.float64)
-                           for c in feature_cols]
-            # (N, window, C) channels-last stack of per-channel windows
-            X = np.stack([_windows(ch, window) for ch in chans], axis=-1)
-        else:
-            X = _windows(v, window)              # rows end at index window-1+i
-        ends = np.arange(window - 1, n)          # window-end index per X row
+        sw = series_windows(pdf, value_col, ts_col, window, feature_cols)
+        v, ts, ends = sw.v, sw.ts, sw.ends
         out_cols = {series_col: [], ts_col: [], "value": [], "baseline": []}
         for h in hs:
             out_cols[f"target_h{h}"] = []
@@ -121,39 +185,18 @@ def fit_predict_per_series(
             out_cols[f"unc_h{h}"] = []
         if emit_train:
             out_cols["is_train"] = []
-        # train rows: every horizon target exists AND lands before cutoff
-        tr = ends + max_h < n
-        tr_end_ts = ts.iloc[np.minimum(ends + max_h, n - 1)].to_numpy()
-        tr &= tr_end_ts < np.datetime64(cutoff)
+        tr = train_mask(sw, max_h, cutoff)
         # test rows: window end at/after cutoff, all targets exist
-        te = (ts.iloc[ends].to_numpy() >= np.datetime64(cutoff)) & (ends + max_h < n)
+        te = (ts.iloc[ends].to_numpy() >= cutoff) & (ends + max_h < len(v))
         if tr.sum() >= 4 and te.sum() > 0:
-            cut = int(np.searchsorted(ts.to_numpy(), np.datetime64(cutoff)))
-            mu = float(v[:cut].mean())
-            sd = float(v[:cut].std())
-            sd = sd if abs(sd) > 1e-8 else 1.0   # N1 std guard
-            if feature_cols:
-                # per-channel train stats (channel 0 is the value channel)
-                ch_mu = np.array([ch[:cut].mean() for ch in chans])
-                ch_sd = np.array([ch[:cut].std() for ch in chans])
-                ch_sd[np.abs(ch_sd) < 1e-8] = 1.0
-                ch_mu[0], ch_sd[0] = mu, sd
-                Xtr = (X[tr] - ch_mu) / ch_sd
-                Xte_norm = (X[te] - ch_mu) / ch_sd
-                if flatten_features:
-                    # per-channel norm FIRST, then (N, window * C) for the
-                    # dense cores
-                    Xtr = Xtr.reshape(Xtr.shape[0], -1)
-                    Xte_norm = Xte_norm.reshape(Xte_norm.shape[0], -1)
-            else:
-                Xtr = (X[tr] - mu) / sd
-                Xte_norm = (X[te] - mu) / sd
-            tgts = {h: (v[ends[tr] + h] - mu) / sd for h in hs}
-            params, _ = core.train(Xtr, tgts, hs, seed=(seed, sid),
-                                   **train_kwargs)
+            params, stats, Xtr = fit_series(
+                core, sw, tr, cutoff, hs, (seed, sid), train_kwargs,
+                flatten_features)
+            mu, sd = stats["mu"], stats["sd"]
             preds, uncs = core.predict_with_uncertainty(
-                params, Xte_norm, hs, mc_samples=mc_samples,
-                dropout_rate=dropout_rate, seed=(seed, sid, 1),
+                params, normalize(sw.X[te], stats), hs,
+                mc_samples=mc_samples, dropout_rate=dropout_rate,
+                seed=(seed, sid, 1),
             )
             e_te = ends[te]
             k = len(e_te)

@@ -1,7 +1,7 @@
 """The reference's morphological / composite loss family as numpy
 (value, d/dy_pred) pairs, pluggable into every model core's training loop
-(models/nbeats.py, models/transformer.py, models/tft.py accept
-``loss_fn=``).
+(every core's ``train`` accepts ``loss_fn=``; models/layers.head_loss
+applies it).
 
 Reference: predictor_plugins/common/losses.py —
   _trend_sigma_loss:134-151, _pearson_structural_loss:154-172,

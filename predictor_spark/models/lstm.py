@@ -18,8 +18,9 @@ every other core.
 
 Full backward pass (attention, layer norm, BPTT through both LSTM
 directions) is hand-derived and finite-difference checked
-(tests/test_models_family.py). Estimator-contract surface matches
-models/nbeats.py, so fit_predict_per_series distributes it unchanged.
+(tests/test_models_family.py). train / predict /
+predict_with_uncertainty bind the family contract in models/layers.py,
+so fit_predict_per_series distributes it unchanged.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from __future__ import annotations
 import numpy as np
 
 from predictor_spark.models import layers as L
-from predictor_spark.models.nbeats import adam_init, adam_step
 
 __all__ = ["init_params", "forward", "loss_and_grads", "train",
            "predict", "predict_with_uncertainty"]
@@ -147,27 +147,17 @@ def forward(p, X, horizons, want_cache=False,
 
 def loss_and_grads(p, X, targets, horizons, loss_fn=None):
     input_dim, dm, H, units = (int(v) for v in p["__meta"])
-    N, T = X.shape
-    nh = len(horizons)
     ys, cache = forward(p, X, horizons, want_cache=True)
     E, heads, acaches, ln1c, E1, cf, cb, ctx = cache
+    loss, dys = L.head_loss(ys, targets, horizons, loss_fn)
     g = {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"}
 
-    loss = 0.0
     dctx = np.zeros_like(ctx)
     for hz in horizons:
-        if loss_fn is None:
-            e = ys[hz] - targets[hz]
-            loss += float(L.huber(e).mean())
-            de = L.huber_grad(e) / (N * nh)
-        else:
-            val, gy = loss_fn(targets[hz], ys[hz])
-            loss += float(val)
-            de = gy / nh
+        de = dys[hz]
         g[f"Wh{hz}"] = ctx.T @ de
         g[f"ch{hz}"] = np.array(de.sum())
         dctx += de[:, None] * p[f"Wh{hz}"][None, :]
-    loss /= nh
 
     dE1 = np.zeros_like(E1)
     dEf, dWfx, dWfh, dbf = _lstm_backward(dctx[:, :units], E1, cf,
@@ -199,37 +189,11 @@ def loss_and_grads(p, X, targets, horizons, loss_fn=None):
 
 def train(X, targets, horizons=(1,), seed=0, d_model=8, n_heads=2,
           units=8, epochs=60, lr=5e-3, weight_decay=1e-2, loss_fn=None):
-    """Full-batch AdamW; deterministic for a given seed."""
-    rng = np.random.default_rng(seed)
-    p = init_params(rng, X.shape[1], tuple(horizons), d_model, n_heads, units)
-    st = adam_init(p)
-    losses = []
-    for _ in range(epochs):
-        loss, g = loss_and_grads(p, X, targets, tuple(horizons), loss_fn=loss_fn)
-        adam_step(p, g, st, lr=lr, weight_decay=weight_decay)
-        losses.append(loss)
-    return p, losses
+    """Full-batch AdamW (layers.fit); deterministic for a given seed."""
+    return L.fit(lambda rng: init_params(rng, X.shape[1], tuple(horizons),
+                                         d_model, n_heads, units),
+                 loss_and_grads, X, targets, horizons, seed, epochs, lr,
+                 weight_decay, loss_fn)
 
 
-def predict(p, X, horizons):
-    ys, _ = forward(p, X, tuple(horizons))
-    return ys
-
-
-def predict_with_uncertainty(p, X, horizons, mc_samples=1,
-                             dropout_rate=0.1, seed=0):
-    hs = tuple(horizons)
-    if mc_samples <= 1 or dropout_rate <= 0.0:
-        ys = predict(p, X, hs)
-        return ys, {h: np.zeros_like(y) for h, y in ys.items()}
-    mean = {h: np.zeros(X.shape[0]) for h in hs}
-    m2 = {h: np.zeros(X.shape[0]) for h in hs}
-    for s in range(mc_samples):
-        rng = np.random.default_rng((seed, s))
-        ys, _ = forward(p, X, hs, dropout_rate=dropout_rate, dropout_rng=rng)
-        for h in hs:
-            d = ys[h] - mean[h]
-            mean[h] += d / (s + 1)
-            m2[h] += d * (ys[h] - mean[h])
-    std = {h: np.sqrt(m2[h] / mc_samples) for h in hs}
-    return mean, std
+predict, predict_with_uncertainty = L.bind(forward)

@@ -27,7 +27,6 @@ from __future__ import annotations
 import numpy as np
 
 from predictor_spark.models import layers as L
-from predictor_spark.models.nbeats import adam_init, adam_step
 
 __all__ = ["init_params", "forward", "loss_and_grads", "train",
            "predict", "predict_with_uncertainty"]
@@ -61,19 +60,11 @@ def init_params(
     return p
 
 
-def _shift(x: np.ndarray, k: int) -> np.ndarray:
-    if k == 0:
-        return x
-    out = np.zeros_like(x)
-    out[:, k:, :] = x[:, :-k, :]
-    return out
-
-
 def forward(p, X, horizons, want_cache=False,
             dropout_rate=0.0, dropout_rng=None):
     input_dim, dm, taps, dff = (int(v) for v in p["__meta"])
     E = X[:, :, None] @ p["We"] + p["be"]
-    Zc = sum(_shift(E, k) @ p[f"Wc{k}"] for k in range(taps)) + p["bc"]
+    Zc = sum(L.shift(E, k) @ p[f"Wc{k}"] for k in range(taps)) + p["bc"]
     C = L.elu(Zc)
     K = C @ p["Wk"]
     V = C @ p["Wv"]
@@ -97,24 +88,15 @@ def forward(p, X, horizons, want_cache=False,
 
 def loss_and_grads(p, X, targets, horizons, loss_fn=None):
     input_dim, dm, taps, dff = (int(v) for v in p["__meta"])
-    N, T = X.shape
-    nh = len(horizons)
     ys, cache = forward(p, X, horizons, want_cache=True)
     E, Zc, C, K, V, scale, hc = cache
+    loss, dys = L.head_loss(ys, targets, horizons, loss_fn)
     g = {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"}
 
-    loss = 0.0
     dK = np.zeros_like(K)
     dV = np.zeros_like(V)
     for hz in horizons:
-        if loss_fn is None:
-            e = ys[hz] - targets[hz]
-            loss += float(L.huber(e).mean())
-            de = L.huber_grad(e) / (N * nh)
-        else:
-            val, gy = loss_fn(targets[hz], ys[hz])
-            loss += float(val)
-            de = gy / nh
+        de = dys[hz]
         s, a, ctx, Z1, A1 = hc[hz]
         g[f"Wh{hz}"] += A1.T @ de
         g[f"ch{hz}"] += np.array(de.sum())
@@ -128,7 +110,6 @@ def loss_and_grads(p, X, targets, horizons, loss_fn=None):
         ds = L.softmax_back(da, a) * scale
         g[f"q{hz}"] += np.einsum("nt,ntd->d", ds, K)
         dK += ds[:, :, None] * p[f"q{hz}"][None, None, :]
-    loss /= nh
 
     dC = dK @ p["Wk"].T + dV @ p["Wv"].T
     g["Wk"] += C.reshape(-1, dm).T @ dK.reshape(-1, dm)
@@ -136,7 +117,7 @@ def loss_and_grads(p, X, targets, horizons, loss_fn=None):
     dZc = dC * L.elu_grad(Zc)
     dE = np.zeros_like(E)
     for k in range(taps):
-        sh = _shift(E, k)
+        sh = L.shift(E, k)
         g[f"Wc{k}"] += sh.reshape(-1, dm).T @ dZc.reshape(-1, dm)
         back = dZc @ p[f"Wc{k}"].T
         if k == 0:
@@ -151,38 +132,13 @@ def loss_and_grads(p, X, targets, horizons, loss_fn=None):
 
 def train(X, targets, horizons=(1,), seed=0, d_model=8, conv_taps=3,
           d_ff=16, epochs=60, lr=5e-3, weight_decay=1e-2, loss_fn=None):
-    """Full-batch AdamW; deterministic for a given seed. Every horizon is
-    decoded jointly from the shared encoder — the MIMO contract."""
-    rng = np.random.default_rng(seed)
-    p = init_params(rng, X.shape[1], tuple(horizons), d_model, conv_taps, d_ff)
-    st = adam_init(p)
-    losses = []
-    for _ in range(epochs):
-        loss, g = loss_and_grads(p, X, targets, tuple(horizons), loss_fn=loss_fn)
-        adam_step(p, g, st, lr=lr, weight_decay=weight_decay)
-        losses.append(loss)
-    return p, losses
+    """Full-batch AdamW (layers.fit); deterministic for a given seed.
+    Every horizon is decoded jointly from the shared encoder — the MIMO
+    contract."""
+    return L.fit(lambda rng: init_params(rng, X.shape[1], tuple(horizons),
+                                         d_model, conv_taps, d_ff),
+                 loss_and_grads, X, targets, horizons, seed, epochs, lr,
+                 weight_decay, loss_fn)
 
 
-def predict(p, X, horizons):
-    ys, _ = forward(p, X, tuple(horizons))
-    return ys
-
-
-def predict_with_uncertainty(p, X, horizons, mc_samples=1,
-                             dropout_rate=0.1, seed=0):
-    hs = tuple(horizons)
-    if mc_samples <= 1 or dropout_rate <= 0.0:
-        ys = predict(p, X, hs)
-        return ys, {h: np.zeros_like(y) for h, y in ys.items()}
-    mean = {h: np.zeros(X.shape[0]) for h in hs}
-    m2 = {h: np.zeros(X.shape[0]) for h in hs}
-    for s in range(mc_samples):
-        rng = np.random.default_rng((seed, s))
-        ys, _ = forward(p, X, hs, dropout_rate=dropout_rate, dropout_rng=rng)
-        for h in hs:
-            d = ys[h] - mean[h]
-            mean[h] += d / (s + 1)
-            m2[h] += d * (ys[h] - mean[h])
-    std = {h: np.sqrt(m2[h] / mc_samples) for h in hs}
-    return mean, std
+predict, predict_with_uncertainty = L.bind(forward)

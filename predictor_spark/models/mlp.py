@@ -1,33 +1,26 @@
 """Deterministic pure-numpy MLP forecaster — the engine's analog of the
 reference's dense-ANN predictor plugin (predictor_plugins/
 predictor_plugin_ann.py:21-106: stacked Dense layers + one output head
-per horizon, Huber loss, Adam). Same family contract as models/nbeats.py
-(train / predict / predict_with_uncertainty), so it drops into
-models/estimator.fit_predict_per_series unchanged.
+per horizon, Huber loss, Adam). Same family contract as every core,
+models/layers.py (train / predict / predict_with_uncertainty), so it
+drops into models/estimator.fit_predict_per_series unchanged.
 
 Architecture (batch X of shape (N, D)):
     h_0 = X
     per layer l:   h_{l+1} = swish(h_l @ W_l + c_l)
     per horizon H: y_H = h_L @ Wh_H + ch_H        (linear head)
 
-Optimizer/loss/uncertainty are shared with the N-BEATS core (AdamW,
-mean Huber over samples and horizons, seeded MC dropout) — one numeric
-stack for the whole model family, mirrored on the reference side where
-all plugins inherit common/base.py.
+Optimizer/loss/uncertainty are the family's shared contract in
+models/layers.py (AdamW, mean Huber over samples and horizons, seeded MC
+dropout) — one numeric stack for the whole model family, mirrored on the
+reference side where all plugins inherit common/base.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from predictor_spark.models.nbeats import (
-    _huber,
-    _huber_grad,
-    _swish,
-    _swish_grad,
-    adam_init,
-    adam_step,
-)
+from predictor_spark.models import layers as L
 
 __all__ = ["init_params", "forward", "loss_and_grads", "train",
            "predict", "predict_with_uncertainty"]
@@ -70,7 +63,7 @@ def forward(
     zs, hs = [], [h]
     for layer in range(layers):
         z = h @ p[f"W{layer}"] + p[f"c{layer}"]
-        h = _swish(z)
+        h = L.swish(z)
         if dropout_rate > 0.0 and dropout_rng is not None:
             mask = (dropout_rng.random(h.shape) >= dropout_rate)
             h = h * mask / (1.0 - dropout_rate)
@@ -92,34 +85,24 @@ def loss_and_grads(
     """Full-batch Huber loss + analytic gradients (finite-difference-
     checked in tests/test_models_family.py::test_mlp_gradcheck).
     ``loss_fn`` swaps in a models/losses.py objective: (y_true, y_pred)
-    -> (value, dvalue/dy_pred); None keeps the default Huber path
-    bit-identical (same contract as models/nbeats.py)."""
+    -> (value, dvalue/dy_pred); None keeps the default Huber
+    (layers.head_loss)."""
     layers, units, input_dim = (int(x) for x in p["__meta"])
-    N = X.shape[0]
-    H = len(horizons)
     ys, (hs, zs) = forward(p, X, horizons, want_cache=True)
+    loss, dys = L.head_loss(ys, targets, horizons, loss_fn)
 
     g = {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"}
-    loss = 0.0
     top = hs[-1]
     dtop = np.zeros_like(top)
     for hz in horizons:
-        if loss_fn is None:
-            e = ys[hz] - targets[hz]
-            loss += float(_huber(e).mean())
-            de = _huber_grad(e) / (N * H)
-        else:
-            val, gy = loss_fn(targets[hz], ys[hz])
-            loss += float(val)
-            de = gy / H
+        de = dys[hz]
         g[f"Wh{hz}"] = top.T @ de
         g[f"ch{hz}"] = np.array(de.sum())
         dtop += de[:, None] * p[f"Wh{hz}"][None, :]
-    loss /= H
 
     dx = dtop
     for layer in reversed(range(layers)):
-        dz = dx * _swish_grad(zs[layer])
+        dz = dx * L.swish_grad(zs[layer])
         g[f"W{layer}"] = hs[layer].T @ dz
         g[f"c{layer}"] = dz.sum(axis=0)
         dx = dz @ p[f"W{layer}"].T
@@ -139,55 +122,14 @@ def train(
     loss_fn=None,
     on_epoch_end=None,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
-    """Full-batch AdamW training; deterministic given (data, seed).
-    ``loss_fn``: optional models/losses.py objective (default Huber).
-    ``on_epoch_end(epoch, logs)``: optional per-epoch callback — the seam
-    the S12 resource loggers (sources/resource_log.py) attach to, the
-    analog of Keras callbacks in the reference
-    (predictor_plugins/common/callbacks.py)."""
-    rng = np.random.default_rng(seed)
-    p = init_params(rng, X.shape[1], tuple(horizons), layers, units)
-    st = adam_init(p)
-    losses = []
-    for epoch in range(epochs):
-        loss, g = loss_and_grads(p, X, targets, tuple(horizons),
-                                 loss_fn=loss_fn)
-        adam_step(p, g, st, lr=lr, weight_decay=weight_decay)
-        losses.append(loss)
-        if on_epoch_end is not None:
-            on_epoch_end(epoch, {"loss": loss})
-    return p, losses
+    """Full-batch AdamW training (layers.fit); deterministic given
+    (data, seed). ``loss_fn``: optional models/losses.py objective
+    (default Huber). ``on_epoch_end(epoch, logs)``: optional per-epoch
+    callback (the resource loggers' seam, see layers.fit)."""
+    return L.fit(lambda rng: init_params(rng, X.shape[1], tuple(horizons),
+                                         layers, units),
+                 loss_and_grads, X, targets, horizons, seed, epochs, lr,
+                 weight_decay, loss_fn, on_epoch_end)
 
 
-def predict(p: dict[str, np.ndarray], X: np.ndarray,
-            horizons: tuple[int, ...]) -> dict[int, np.ndarray]:
-    ys, _ = forward(p, X, tuple(horizons))
-    return ys
-
-
-def predict_with_uncertainty(
-    p: dict[str, np.ndarray],
-    X: np.ndarray,
-    horizons: tuple[int, ...],
-    mc_samples: int = 1,
-    dropout_rate: float = 0.1,
-    seed: int | tuple = 0,
-) -> tuple[dict[int, np.ndarray], dict[int, np.ndarray]]:
-    """(means, stds) per horizon; seeded MC-dropout passes folded by
-    Welford, deterministic path when mc_samples<=1 (same contract as
-    models/nbeats.py)."""
-    hs = tuple(horizons)
-    if mc_samples <= 1 or dropout_rate <= 0.0:
-        ys = predict(p, X, hs)
-        return ys, {h: np.zeros_like(y) for h, y in ys.items()}
-    mean = {h: np.zeros(X.shape[0]) for h in hs}
-    m2 = {h: np.zeros(X.shape[0]) for h in hs}
-    for s in range(mc_samples):
-        rng = np.random.default_rng((seed, s))
-        ys, _ = forward(p, X, hs, dropout_rate=dropout_rate, dropout_rng=rng)
-        for h in hs:                      # Welford update
-            d = ys[h] - mean[h]
-            mean[h] += d / (s + 1)
-            m2[h] += d * (ys[h] - mean[h])
-    std = {h: np.sqrt(m2[h] / mc_samples) for h in hs}
-    return mean, std
+predict, predict_with_uncertainty = L.bind(forward)

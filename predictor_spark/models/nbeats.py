@@ -23,27 +23,19 @@ reference fits with shuffle=False; full-batch removes order effects
 entirely). Uncertainty: MC dropout at predict time (seeded masks on the
 hidden activations) -> per-sample mean/std, the numpy analog of the
 reference's predict_mc_welford (common/base.py:350-352); mc_samples<=1
-returns zero uncertainty like the deterministic plugin variant.
+returns zero uncertainty like the deterministic plugin variant. The loop,
+the optimizer, the head loss and both predict paths are the family's
+shared contract in models/layers.py; this module holds the architecture.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = [
-    "init_params", "forward", "loss_and_grads", "adam_init", "adam_step",
-    "train", "predict", "predict_with_uncertainty",
-]
+from predictor_spark.models import layers as L
 
-
-def _swish(z: np.ndarray) -> np.ndarray:
-    s = 1.0 / (1.0 + np.exp(-z))
-    return z * s
-
-
-def _swish_grad(z: np.ndarray) -> np.ndarray:
-    s = 1.0 / (1.0 + np.exp(-z))
-    return s * (1.0 + z * (1.0 - s))
+__all__ = ["init_params", "forward", "loss_and_grads", "train",
+           "predict", "predict_with_uncertainty"]
 
 
 def init_params(
@@ -97,7 +89,7 @@ def forward(
         zs, hs = [], [h]
         for layer in range(layers):
             z = h @ p[f"W{b}_{layer}"] + p[f"c{b}_{layer}"]
-            h = _swish(z)
+            h = L.swish(z)
             if dropout_rate > 0.0 and dropout_rng is not None:
                 mask = (dropout_rng.random(h.shape) >= dropout_rate)
                 h = h * mask / (1.0 - dropout_rate)
@@ -114,15 +106,6 @@ def forward(
     return ys, None
 
 
-def _huber(e: np.ndarray, delta: float = 1.0) -> np.ndarray:
-    a = np.abs(e)
-    return np.where(a <= delta, 0.5 * e * e, delta * (a - 0.5 * delta))
-
-
-def _huber_grad(e: np.ndarray, delta: float = 1.0) -> np.ndarray:
-    return np.clip(e, -delta, delta)
-
-
 def loss_and_grads(
     p: dict[str, np.ndarray],
     X: np.ndarray,
@@ -136,25 +119,16 @@ def loss_and_grads(
     None keeps the default Huber path bit-identical."""
     blocks, layers, units, input_dim = (int(x) for x in p["__meta"])
     N = X.shape[0]
-    H = len(horizons)
     ys, (cache, facc) = forward(p, X, horizons, want_cache=True)
+    loss, dys = L.head_loss(ys, targets, horizons, loss_fn)
 
     g = {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"}
-    loss = 0.0
     dfacc = np.zeros_like(facc)
     for h in horizons:
-        if loss_fn is None:
-            e = ys[h] - targets[h]
-            loss += float(_huber(e).mean())
-            de = _huber_grad(e) / (N * H)      # d(loss)/d(y_h), (N,)
-        else:
-            val, gy = loss_fn(targets[h], ys[h])
-            loss += float(val)
-            de = gy / H
+        de = dys[h]                        # d(loss)/d(y_h), (N,)
         g[f"Wh{h}"] = facc.T @ de
         g[f"ch{h}"] = np.array(de.sum())
         dfacc += de[:, None] * p[f"Wh{h}"][None, :]
-    loss /= H
 
     dr_next = np.zeros((N, input_dim))          # d(loss)/d(r_{B}) — unused output
     for b in reversed(range(blocks)):
@@ -170,44 +144,13 @@ def loss_and_grads(
         g[f"cb{b}"] = dback.sum(axis=0)
         dx = dx + dback @ p[f"Wb{b}"].T
         for layer in reversed(range(layers)):
-            dz = dx * _swish_grad(zs[layer])
+            dz = dx * L.swish_grad(zs[layer])
             g[f"W{b}_{layer}"] = hs[layer].T @ dz
             g[f"c{b}_{layer}"] = dz.sum(axis=0)
             dx = dz @ p[f"W{b}_{layer}"].T
         # r_b feeds both the block MLP input and (identity) r_{b+1}
         dr_next = dx + dr_next
     return loss, g
-
-
-def adam_init(p: dict[str, np.ndarray]) -> dict:
-    return {
-        "m": {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"},
-        "v": {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"},
-        "t": 0,
-    }
-
-
-def adam_step(
-    p: dict[str, np.ndarray],
-    g: dict[str, np.ndarray],
-    state: dict,
-    lr: float = 1e-2,
-    beta1: float = 0.9,
-    beta2: float = 0.999,
-    eps: float = 1e-8,
-    weight_decay: float = 0.0,
-) -> None:
-    """In-place AdamW step (decoupled decay, the reference's optimizer)."""
-    state["t"] += 1
-    t = state["t"]
-    for k, gk in g.items():
-        state["m"][k] = beta1 * state["m"][k] + (1 - beta1) * gk
-        state["v"][k] = beta2 * state["v"][k] + (1 - beta2) * (gk * gk)
-        mhat = state["m"][k] / (1 - beta1 ** t)
-        vhat = state["v"][k] / (1 - beta2 ** t)
-        if weight_decay > 0.0:
-            p[k] = p[k] - lr * weight_decay * p[k]
-        p[k] = p[k] - lr * mhat / (np.sqrt(vhat) + eps)
 
 
 def train(
@@ -223,49 +166,13 @@ def train(
     weight_decay: float = 0.0,
     loss_fn=None,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
-    """Full-batch AdamW training; returns (params, per-epoch losses).
-    Deterministic: same (data, seed, hyperparams) -> same weights.
-    ``loss_fn``: optional models/losses.py objective (default Huber)."""
-    rng = np.random.default_rng(seed)
-    p = init_params(rng, X.shape[1], tuple(horizons), blocks, layers, units)
-    st = adam_init(p)
-    losses = []
-    for _ in range(epochs):
-        loss, g = loss_and_grads(p, X, targets, tuple(horizons), loss_fn=loss_fn)
-        adam_step(p, g, st, lr=lr, weight_decay=weight_decay)
-        losses.append(loss)
-    return p, losses
+    """Full-batch AdamW training (layers.fit); returns (params,
+    per-epoch losses). ``loss_fn``: optional models/losses.py objective
+    (default Huber)."""
+    return L.fit(lambda rng: init_params(rng, X.shape[1], tuple(horizons),
+                                         blocks, layers, units),
+                 loss_and_grads, X, targets, horizons, seed, epochs, lr,
+                 weight_decay, loss_fn)
 
 
-def predict(p: dict[str, np.ndarray], X: np.ndarray, horizons: tuple[int, ...]) -> dict[int, np.ndarray]:
-    ys, _ = forward(p, X, tuple(horizons))
-    return ys
-
-
-def predict_with_uncertainty(
-    p: dict[str, np.ndarray],
-    X: np.ndarray,
-    horizons: tuple[int, ...],
-    mc_samples: int = 1,
-    dropout_rate: float = 0.1,
-    seed: int | tuple = 0,
-) -> tuple[dict[int, np.ndarray], dict[int, np.ndarray]]:
-    """(means, stds) per horizon. mc_samples<=1 or dropout 0 -> exact
-    deterministic forward with zero uncertainty (the reference's
-    deterministic-plugin contract, predictor_plugin_n_beats.py:127-135);
-    otherwise seeded MC-dropout passes folded by Welford."""
-    hs = tuple(horizons)
-    if mc_samples <= 1 or dropout_rate <= 0.0:
-        ys = predict(p, X, hs)
-        return ys, {h: np.zeros_like(y) for h, y in ys.items()}
-    mean = {h: np.zeros(X.shape[0]) for h in hs}
-    m2 = {h: np.zeros(X.shape[0]) for h in hs}
-    for s in range(mc_samples):
-        rng = np.random.default_rng((seed, s))
-        ys, _ = forward(p, X, hs, dropout_rate=dropout_rate, dropout_rng=rng)
-        for h in hs:                      # Welford update
-            d = ys[h] - mean[h]
-            mean[h] += d / (s + 1)
-            m2[h] += d * (ys[h] - mean[h])
-    std = {h: np.sqrt(m2[h] / mc_samples) for h in hs}
-    return mean, std
+predict, predict_with_uncertainty = L.bind(forward)

@@ -30,7 +30,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from predictor_spark.models import nbeats
-from predictor_spark.models.estimator import _windows
+from predictor_spark.models.estimator import (
+    fit_series,
+    normalize,
+    series_windows,
+    train_mask,
+)
 
 
 def serialize_params(params: dict, stats: dict) -> bytes:
@@ -50,24 +55,6 @@ def deserialize_params(blob: bytes) -> tuple[dict, dict]:
     return params, stats
 
 
-def _series_windows(pdf: pd.DataFrame, value_col: str, ts_col: str,
-                    window: int, feature_cols: tuple[str, ...]):
-    """Sorted series -> (pdf, v, ts, X, ends). X is (N, window) or the
-    channels-last (N, window, C) stack — the same construction as
-    estimator.fit_group (pinned bit-identical by tests)."""
-    pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-    v = pdf[value_col].to_numpy(dtype=np.float64)
-    if feature_cols:
-        chans = [v] + [pdf[c].to_numpy(dtype=np.float64)
-                       for c in feature_cols]
-        X = np.stack([_windows(ch, window) for ch in chans], axis=-1)
-    else:
-        chans = [v]
-        X = _windows(v, window)
-    ends = np.arange(window - 1, len(v))
-    return pdf, v, chans, X, ends
-
-
 def fit_per_series(
     df: DataFrame,
     core=None,
@@ -82,9 +69,9 @@ def fit_per_series(
     feature_cols: tuple[str, ...] = (),
     flatten_features: bool = False,
 ) -> DataFrame:
-    """Train one model per series (same guards, normalization, and
-    seeding as estimator.fit_predict_per_series) and return the MODEL
-    STORE: one row per trainable series —
+    """Train one model per series (estimator.fit_series: the same train
+    windows, normalization and seeding as fit_predict_per_series) and
+    return the MODEL STORE: one row per trainable series —
     ``(series, n_train, params binary)``. Series failing the train
     guards (too few windows) emit no row."""
     core = core if core is not None else nbeats
@@ -96,36 +83,13 @@ def fit_per_series(
 
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf[series_col].iloc[0])
-        pdf, v, chans, X, ends = _series_windows(
-            pdf, value_col, ts_col, window, feature_cols)
-        ts = pdf[ts_col]
-        n = len(v)
-        tr = ends + max_h < n
-        tr_end_ts = ts.iloc[np.minimum(ends + max_h, n - 1)].to_numpy()
-        tr &= tr_end_ts < cutoff
+        sw = series_windows(pdf, value_col, ts_col, window, feature_cols)
+        tr = train_mask(sw, max_h, cutoff)
         if tr.sum() < 4:
             return pd.DataFrame(columns=[series_col, "n_train", "params"])
-        cut = int(np.searchsorted(ts.to_numpy(), cutoff))
-        mu = float(v[:cut].mean())
-        sd = float(v[:cut].std())
-        sd = sd if abs(sd) > 1e-8 else 1.0
-        stats = {"mu": mu, "sd": sd, "window": window,
-                 "horizons": np.array(hs),
-                 "flatten": int(flatten_features)}
-        if feature_cols:
-            ch_mu = np.array([ch[:cut].mean() for ch in chans])
-            ch_sd = np.array([ch[:cut].std() for ch in chans])
-            ch_sd[np.abs(ch_sd) < 1e-8] = 1.0
-            ch_mu[0], ch_sd[0] = mu, sd
-            Xtr = (X[tr] - ch_mu) / ch_sd
-            if flatten_features:
-                Xtr = Xtr.reshape(Xtr.shape[0], -1)
-            stats["ch_mu"], stats["ch_sd"] = ch_mu, ch_sd
-        else:
-            Xtr = (X[tr] - mu) / sd
-        tgts = {h: (v[ends[tr] + h] - mu) / sd for h in hs}
-        params, _ = core.train(Xtr, tgts, hs, seed=(seed, sid),
-                               **train_kwargs)
+        params, stats, _ = fit_series(core, sw, tr, cutoff, hs, (seed, sid),
+                                      train_kwargs, flatten_features)
+        stats.update(window=window, horizons=np.array(hs))
         return pd.DataFrame([{
             series_col: sid,
             "n_train": int(tr.sum()),
@@ -186,27 +150,20 @@ def predict_from_weights(
         if len(data_pdf) == 0 or len(w_pdf) == 0:
             return pd.DataFrame(columns=cols)
         params, stats = deserialize_params(w_pdf["params"].iloc[0])
-        window = int(stats["window"])
         mu, sd = float(stats["mu"]), float(stats["sd"])
         sid = int(data_pdf[series_col].iloc[0])
-        pdf, v, chans, X, ends = _series_windows(
-            data_pdf, value_col, ts_col, window, feature_cols)
+        sw = series_windows(data_pdf, value_col, ts_col,
+                            int(stats["window"]), feature_cols)
+        v, ts, ends = sw.v, sw.ts, sw.ends
         if len(ends) == 0:
             return pd.DataFrame(columns=cols)
-        ts = pdf[ts_col]
         keep = np.ones(len(ends), dtype=bool)
         if from_np is not None:
             keep &= ts.iloc[ends].to_numpy() >= from_np
         if not keep.any():
             return pd.DataFrame(columns=cols)
-        if feature_cols:
-            Xn = (X[keep] - stats["ch_mu"]) / stats["ch_sd"]
-            if int(stats.get("flatten", 0)):
-                Xn = Xn.reshape(Xn.shape[0], -1)
-        else:
-            Xn = (X[keep] - mu) / sd
         preds, uncs = core.predict_with_uncertainty(
-            params, Xn, hs, mc_samples=mc_samples,
+            params, normalize(sw.X[keep], stats), hs, mc_samples=mc_samples,
             dropout_rate=dropout_rate, seed=(seed, sid, 1),
         )
         e = ends[keep]

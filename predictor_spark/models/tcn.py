@@ -2,8 +2,8 @@
 reference's temporal-convolutional predictor plugin
 (predictor_plugins/predictor_plugin_tcn.py:50-236: stacked causal
 dilated Conv1D blocks, exponentially growing dilation, per-horizon
-output heads). Same family contract as models/nbeats.py / models/mlp.py
-(train / predict / predict_with_uncertainty) so it drops into
+output heads). Same family contract as every core, models/layers.py
+(train / predict / predict_with_uncertainty), so it drops into
 models/estimator.fit_predict_per_series unchanged.
 
 Architecture (batch X of shape (N, D) viewed as a 1-channel length-D
@@ -21,22 +21,16 @@ The dilated causal convolution is expressed as K shifted dense matmuls
 pass a mirror image (scatter the gradient back through the same shifts).
 The reference's residual skip connections are dropped — at these depths
 (2-3 layers) they change nothing measurable and the plain stack keeps
-the gradient check tight. Optimizer/loss/uncertainty shared with the
-family (AdamW, mean Huber, seeded MC dropout).
+the gradient check tight. Optimizer/loss/uncertainty are the family's
+shared contract in models/layers.py (AdamW, mean Huber, seeded MC
+dropout).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from predictor_spark.models.nbeats import (
-    _huber,
-    _huber_grad,
-    _swish,
-    _swish_grad,
-    adam_init,
-    adam_step,
-)
+from predictor_spark.models import layers as L
 
 __all__ = ["init_params", "forward", "loss_and_grads", "train",
            "predict", "predict_with_uncertainty"]
@@ -100,7 +94,7 @@ def forward(
                 z += h @ p[f"W{layer}"][j]
             elif s < h.shape[1]:
                 z[:, s:, :] += h[:, :-s, :] @ p[f"W{layer}"][j]
-        h = _swish(z)
+        h = L.swish(z)
         if dropout_rate > 0.0 and dropout_rng is not None:
             mask = (dropout_rng.random(h.shape) >= dropout_rate)
             h = h * mask / (1.0 - dropout_rate)
@@ -123,35 +117,25 @@ def loss_and_grads(
     """Full-batch Huber loss + analytic gradients (finite-difference-
     checked in tests/test_models_family.py::test_tcn_gradcheck).
     ``loss_fn`` swaps in a models/losses.py objective: (y_true, y_pred)
-    -> (value, dvalue/dy_pred); None keeps the default Huber path
-    bit-identical (same contract as models/nbeats.py)."""
+    -> (value, dvalue/dy_pred); None keeps the default Huber
+    (layers.head_loss)."""
     layers, channels, kernel = (int(x) for x in p["__meta"][:3])
-    N = X.shape[0]
-    H = len(horizons)
     ys, (hs, zs, top) = forward(p, X, horizons, want_cache=True)
+    loss, dys = L.head_loss(ys, targets, horizons, loss_fn)
 
     g = {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"}
-    loss = 0.0
     dtop = np.zeros_like(top)
     for hz in horizons:
-        if loss_fn is None:
-            e = ys[hz] - targets[hz]
-            loss += float(_huber(e).mean())
-            de = _huber_grad(e) / (N * H)
-        else:
-            val, gy = loss_fn(targets[hz], ys[hz])
-            loss += float(val)
-            de = gy / H
+        de = dys[hz]
         g[f"Wh{hz}"] = top.T @ de
         g[f"ch{hz}"] = np.array(de.sum())
         dtop += de[:, None] * p[f"Wh{hz}"][None, :]
-    loss /= H
 
     dh = np.zeros_like(hs[-1])
     dh[:, -1, :] = dtop                     # only the last step feeds heads
     for layer in reversed(range(layers)):
         d = 2 ** layer
-        dz = dh * _swish_grad(zs[layer])    # (N, T, C)
+        dz = dh * L.swish_grad(zs[layer])    # (N, T, C)
         g[f"c{layer}"] = dz.sum(axis=(0, 1))
         x_in = hs[layer]                    # (N, T, c_in)
         dh = np.zeros_like(x_in)
@@ -185,51 +169,16 @@ def train(
     weight_decay: float = 0.0,
     loss_fn=None,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
-    """Full-batch AdamW training; deterministic given (data, seed).
-    X: (N, T) univariate or (N, T, C0) multivariate channels-last.
-    ``loss_fn``: optional models/losses.py objective (default Huber)."""
-    rng = np.random.default_rng(seed)
+    """Full-batch AdamW training (layers.fit); deterministic given
+    (data, seed). X: (N, T) univariate or (N, T, C0) multivariate
+    channels-last. ``loss_fn``: optional models/losses.py objective
+    (default Huber)."""
     in_ch = X.shape[2] if X.ndim == 3 else 1
-    p = init_params(rng, X.shape[1], tuple(horizons), layers, channels,
-                    kernel, in_channels=in_ch)
-    st = adam_init(p)
-    losses = []
-    for _ in range(epochs):
-        loss, g = loss_and_grads(p, X, targets, tuple(horizons),
-                                 loss_fn=loss_fn)
-        adam_step(p, g, st, lr=lr, weight_decay=weight_decay)
-        losses.append(loss)
-    return p, losses
+    return L.fit(lambda rng: init_params(rng, X.shape[1], tuple(horizons),
+                                         layers, channels, kernel,
+                                         in_channels=in_ch),
+                 loss_and_grads, X, targets, horizons, seed, epochs, lr,
+                 weight_decay, loss_fn)
 
 
-def predict(p: dict[str, np.ndarray], X: np.ndarray,
-            horizons: tuple[int, ...]) -> dict[int, np.ndarray]:
-    ys, _ = forward(p, X, tuple(horizons))
-    return ys
-
-
-def predict_with_uncertainty(
-    p: dict[str, np.ndarray],
-    X: np.ndarray,
-    horizons: tuple[int, ...],
-    mc_samples: int = 1,
-    dropout_rate: float = 0.1,
-    seed: int | tuple = 0,
-) -> tuple[dict[int, np.ndarray], dict[int, np.ndarray]]:
-    """(means, stds) per horizon; same MC-dropout contract as the rest
-    of the family."""
-    hs = tuple(horizons)
-    if mc_samples <= 1 or dropout_rate <= 0.0:
-        ys = predict(p, X, hs)
-        return ys, {h: np.zeros_like(y) for h, y in ys.items()}
-    mean = {h: np.zeros(X.shape[0]) for h in hs}
-    m2 = {h: np.zeros(X.shape[0]) for h in hs}
-    for s in range(mc_samples):
-        rng = np.random.default_rng((seed, s))
-        ys, _ = forward(p, X, hs, dropout_rate=dropout_rate, dropout_rng=rng)
-        for h in hs:                      # Welford update
-            d = ys[h] - mean[h]
-            mean[h] += d / (s + 1)
-            m2[h] += d * (ys[h] - mean[h])
-    std = {h: np.sqrt(m2[h] / mc_samples) for h in hs}
-    return mean, std
+predict, predict_with_uncertainty = L.bind(forward)

@@ -14,10 +14,9 @@ the same local-temporal-pattern role (tft.py:115 comment), chosen because
 a recurrent backward pass in numpy is the one piece that is expensive to
 keep exactly differentiable; the causal-conv precedent is models/tcn.py.
 
-Estimator-contract surface (train / predict / predict_with_uncertainty)
-matches models/nbeats.py, so fit_predict_per_series distributes it
-unchanged. Gradients finite-difference checked in
-tests/test_models_family.py.
+train / predict / predict_with_uncertainty bind the family contract in
+models/layers.py, so fit_predict_per_series distributes it unchanged.
+Gradients finite-difference checked in tests/test_models_family.py.
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ from __future__ import annotations
 import numpy as np
 
 from predictor_spark.models import layers as L
-from predictor_spark.models.nbeats import adam_init, adam_step
 
 __all__ = ["init_params", "forward", "loss_and_grads", "train",
            "predict", "predict_with_uncertainty"]
@@ -117,21 +115,12 @@ def init_params(
     return p
 
 
-def _shift(x: np.ndarray, k: int) -> np.ndarray:
-    """x delayed by k along the time axis, zero-padded at the front."""
-    if k == 0:
-        return x
-    out = np.zeros_like(x)
-    out[:, k:, :] = x[:, :-k, :]
-    return out
-
-
 def forward(p, X, horizons, want_cache=False,
             dropout_rate=0.0, dropout_rng=None):
     input_dim, dm, taps = (int(v) for v in p["__meta"])
     E = X[:, :, None] @ p["We"] + p["be"]
     G1, c1 = _grn_forward(p, "g1_", E)
-    Zc = sum(_shift(G1, k) @ p[f"Wc{k}"] for k in range(taps)) + p["bc"]
+    Zc = sum(L.shift(G1, k) @ p[f"Wc{k}"] for k in range(taps)) + p["bc"]
     C = L.elu(Zc)
     if dropout_rate > 0.0 and dropout_rng is not None:
         mask = (dropout_rng.random(C.shape) >= dropout_rate)
@@ -154,29 +143,19 @@ def forward(p, X, horizons, want_cache=False,
 
 def loss_and_grads(p, X, targets, horizons, loss_fn=None):
     input_dim, dm, taps = (int(v) for v in p["__meta"])
-    N, T = X.shape
-    nh = len(horizons)
     ys, cache = forward(p, X, horizons, want_cache=True)
     E, G1, c1, Zc, C, G2, c2, ca, O, G3, c3, lnc, R, ctx, hcaches = cache
+    loss, dys = L.head_loss(ys, targets, horizons, loss_fn, default=L.MAE)
     g = {k: np.zeros_like(v) for k, v in p.items() if k != "__meta"}
 
-    loss = 0.0
     dctx = np.zeros_like(ctx)
     for hz in horizons:
-        if loss_fn is None:
-            e = ys[hz] - targets[hz]
-            loss += float(np.abs(e).mean())
-            de = L.mae_grad(e) / (N * nh)
-        else:
-            val, gy = loss_fn(targets[hz], ys[hz])
-            loss += float(val)
-            de = gy / nh
+        de = dys[hz]
         Hh, ch = hcaches[hz]
         g[f"Wh{hz}"] += Hh.T @ de
         g[f"ch{hz}"] += np.array(de.sum())
         dHh = de[:, None] * p[f"Wh{hz}"][None, :]
         dctx += _grn_back(p, g, f"gh{hz}_", dHh, ch)
-    loss /= nh
 
     dR = np.zeros_like(R)
     dR[:, -1, :] = dctx
@@ -194,7 +173,7 @@ def loss_and_grads(p, X, targets, horizons, loss_fn=None):
     dZc = dC * L.elu_grad(Zc)
     dG1 = np.zeros_like(G1)
     for k in range(taps):
-        sh = _shift(G1, k)
+        sh = L.shift(G1, k)
         g[f"Wc{k}"] += sh.reshape(-1, dm).T @ dZc.reshape(-1, dm)
         back = dZc @ p[f"Wc{k}"].T
         if k == 0:
@@ -210,39 +189,13 @@ def loss_and_grads(p, X, targets, horizons, loss_fn=None):
 
 def train(X, targets, horizons=(1,), seed=0, d_model=8, conv_taps=3,
           epochs=60, lr=5e-3, weight_decay=1e-2, loss_fn=None):
-    """Full-batch AdamW, MAE loss (the reference TFT compiles MAE,
-    tft.py:148); deterministic for a given seed. ``loss_fn``: optional
-    models/losses.py objective (default MAE)."""
-    rng = np.random.default_rng(seed)
-    p = init_params(rng, X.shape[1], tuple(horizons), d_model, conv_taps)
-    st = adam_init(p)
-    losses = []
-    for _ in range(epochs):
-        loss, g = loss_and_grads(p, X, targets, tuple(horizons), loss_fn=loss_fn)
-        adam_step(p, g, st, lr=lr, weight_decay=weight_decay)
-        losses.append(loss)
-    return p, losses
+    """Full-batch AdamW (layers.fit), MAE loss (the reference TFT compiles
+    MAE, tft.py:148); deterministic for a given seed. ``loss_fn``:
+    optional models/losses.py objective (default MAE)."""
+    return L.fit(lambda rng: init_params(rng, X.shape[1], tuple(horizons),
+                                         d_model, conv_taps),
+                 loss_and_grads, X, targets, horizons, seed, epochs, lr,
+                 weight_decay, loss_fn)
 
 
-def predict(p, X, horizons):
-    ys, _ = forward(p, X, tuple(horizons))
-    return ys
-
-
-def predict_with_uncertainty(p, X, horizons, mc_samples=1,
-                             dropout_rate=0.1, seed=0):
-    hs = tuple(horizons)
-    if mc_samples <= 1 or dropout_rate <= 0.0:
-        ys = predict(p, X, hs)
-        return ys, {h: np.zeros_like(y) for h, y in ys.items()}
-    mean = {h: np.zeros(X.shape[0]) for h in hs}
-    m2 = {h: np.zeros(X.shape[0]) for h in hs}
-    for s in range(mc_samples):
-        rng = np.random.default_rng((seed, s))
-        ys, _ = forward(p, X, hs, dropout_rate=dropout_rate, dropout_rng=rng)
-        for h in hs:
-            d = ys[h] - mean[h]
-            mean[h] += d / (s + 1)
-            m2[h] += d * (ys[h] - mean[h])
-    std = {h: np.sqrt(m2[h] / mc_samples) for h in hs}
-    return mean, std
+predict, predict_with_uncertainty = L.bind(forward)

@@ -100,6 +100,7 @@ def _kf_fold_rows(pdf):
 
 
 def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(sid, day, bar): exact integer daily cents per event type."""
     ev = _t(spark, sf_dir, "events")
     return (ev.select(F.col("event_type").alias("sid"),
                       F.col("ts").cast("date").alias("day"),

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from predictor_spark.plans.catalog import query, _t
+from predictor_spark.plans.catalog_r12_statefilter import _bars
 
 _SES_A = 0.3    # SES smoothing
 _THETA_A = 0.5  # SES smoothing inside the theta method
@@ -52,16 +53,6 @@ _BARS = """
         FROM base GROUP BY sid HAVING count(*) >= 3
     )
 """
-
-
-def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(sid, day, bar): exact integer daily cents per event type."""
-    ev = _t(spark, sf_dir, "events")
-    return (ev.select(F.col("event_type").alias("sid"),
-                      F.col("ts").cast("date").alias("day"),
-                      F.round(F.col("value") * 100).cast("long")
-                      .alias("cents"))
-            .groupBy("sid", "day").agg(F.sum("cents").alias("bar")))
 
 
 @query(

@@ -25,19 +25,11 @@ import numpy as np
 from predictor_spark.plans.catalog import query
 from predictor_spark.plans.catalog_models import (_expr_forward_oracle,
                                                   _expr_forward_query)
-
-
-def _lit(x) -> str:
-    return repr(float(x))
-
-
-def _dot(terms: list[tuple[str, float]], bias: float = 0.0) -> str:
-    s = " + ".join(f"{c} * {_lit(w)}" for c, w in terms)
-    return f"{s} + {_lit(bias)}" if bias != 0.0 else s
+from predictor_spark.plans.model_exprs import _dot
 
 
 def _swish(col: str) -> str:
-    # models/nbeats.py _swish: z * sigmoid(z); both engines share the string
+    # models/layers.py swish: z * sigmoid(z); both engines share the string
     return f"{col} * (1.0 / (1.0 + exp(-{col})))"
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from predictor_spark.operators import dedup, similarity, text
 from predictor_spark.plans.catalog import query, _t
+from predictor_spark.plans.catalog_parity import _sig_sql
 from predictor_spark.operators.localrel import ONE_ROW, collect_bounded, local_df
 
 # from the query: kmeans_one_step seeds the 4 lowest-id vectors
@@ -524,19 +525,12 @@ def kmeans_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_knn_oracle(n_planes: int = 6, dim: int = 64) -> str:
-    def sig(side: str) -> str:
-        bits = []
-        for p in range(n_planes):
-            plane = f"list_transform(range(0, {dim}), d -> sin({1000.0 * (p + 1)} + d))"
-            bits.append(f"(CASE WHEN list_dot_product({side}, {plane}) > 0 THEN '1' ELSE '0' END)")
-        return " || ".join(bits)
-
     return f"""
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
                FROM embeddings WHERE vec_id < 10),
-    qs AS (SELECT query_id, qv, {sig('qv')} AS sig FROM q),
+    qs AS (SELECT query_id, qv, {_sig_sql('qv', n_planes, dim)} AS sig FROM q),
     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-    cs AS (SELECT neighbor_id, cv, {sig('cv')} AS sig FROM c)
+    cs AS (SELECT neighbor_id, cv, {_sig_sql('cv', n_planes, dim)} AS sig FROM c)
     SELECT query_id, neighbor_id, cosine, rank FROM (
         SELECT query_id, neighbor_id, round({_COS}, 6) AS cosine,
                row_number() OVER (PARTITION BY query_id

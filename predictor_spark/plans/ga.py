@@ -48,6 +48,7 @@ import os
 
 from predictor_spark.plans.search import (
     SearchResult,
+    _is_int,
     _params_key,
     append_meta_log,
     evaluate_candidates,
@@ -59,10 +60,6 @@ Bounds = Mapping[str, tuple[float, float]]
 
 def _gene_keys(bounds: Bounds) -> list[str]:
     return sorted(bounds)
-
-
-def _is_int(lo, hi) -> bool:
-    return isinstance(lo, int) and isinstance(hi, int)
 
 
 def init_population(rng: np.random.Generator, bounds: Bounds, n: int) -> list[list]:

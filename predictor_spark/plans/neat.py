@@ -73,6 +73,7 @@ import numpy as np
 
 from predictor_spark.plans.search import (
     SearchResult,
+    _is_int,
     _params_key,
     append_meta_log,
     evaluate_candidates,
@@ -107,10 +108,6 @@ class Genome:
             lo, hi = bounds[name]
             out[name] = int(round(val)) if _is_int(lo, hi) else float(val)
         return out
-
-
-def _is_int(lo, hi) -> bool:
-    return isinstance(lo, int) and isinstance(hi, int)
 
 
 def _draw_value(rng: np.random.Generator, lo, hi) -> float:

@@ -70,6 +70,11 @@ def evaluate_candidates(
         return list(pool.map(safe, candidates))
 
 
+def _is_int(lo, hi) -> bool:
+    """An integer search dimension: both bounds are ints."""
+    return isinstance(lo, int) and isinstance(hi, int)
+
+
 def _params_key(params: dict) -> str:
     """Canonical identity of a candidate for resume de-duplication."""
     return json.dumps(params, sort_keys=True, default=str)

@@ -130,6 +130,7 @@ def stream_score_model(
     import pandas as pd
 
     from predictor_spark.models import nbeats
+    from predictor_spark.models.estimator import normalize
     from predictor_spark.models.registry import deserialize_params
     from predictor_spark.shiplib import ensure_workers_can_import
     from predictor_spark.streaming.stateful import _chunked_stream_dir
@@ -181,7 +182,7 @@ def stream_score_model(
             ends = np.arange(window - 1, len(seq))
             new_mask = ends >= len(buf)     # rows that arrived THIS batch
             if new_mask.any():
-                preds = core.predict(params, (X[new_mask] - mu) / sd, hs)
+                preds = core.predict(params, normalize(X[new_mask], stats), hs)
                 e = ends[new_mask] - len(buf)
                 out = {"user_id": sid, "ts": allpdf["ts"].iloc[e],
                        "value": new_v[e]}

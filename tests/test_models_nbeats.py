@@ -57,17 +57,29 @@ def test_training_is_deterministic_and_converges():
     assert l1[-1] < l1[0]  # loss decreases
 
 
-def test_mc_uncertainty_contract():
+@pytest.mark.parametrize("name", ["composite", "lstm", "mimo", "mlp",
+                                  "nbeats", "tcn", "tft", "transformer"])
+def test_mc_uncertainty_contract(name):
+    """Every core's predict_with_uncertainty (models/layers.py, bound to
+    the core's forward): deterministic with zero std at mc_samples<=1,
+    a seeded MC-dropout draw otherwise."""
+    import importlib
+
+    core = importlib.import_module(f"predictor_spark.models.{name}")
     X, tgts, hs = _toy(n=30)
-    p, _ = nbeats.train(X, tgts, hs, seed=5, epochs=20)
-    det, z = nbeats.predict_with_uncertainty(p, X, hs, mc_samples=0)
-    assert all((z[h] == 0).all() for h in hs)
-    mean, std = nbeats.predict_with_uncertainty(p, X, hs, mc_samples=8,
-                                                dropout_rate=0.2, seed=9)
+    p, _ = core.train(X, tgts, hs, seed=5, epochs=20)
+    want = core.predict(p, X, hs)
+    for mc in (0, 1):
+        det, z = core.predict_with_uncertainty(p, X, hs, mc_samples=mc)
+        assert all((z[h] == 0).all() for h in hs)
+        assert all(np.array_equal(det[h], want[h]) for h in hs)
+    mean, std = core.predict_with_uncertainty(p, X, hs, mc_samples=8,
+                                              dropout_rate=0.2, seed=9)
     assert all((std[h] > 0).any() for h in hs)
     # same seed -> identical MC draw
-    mean2, std2 = nbeats.predict_with_uncertainty(p, X, hs, mc_samples=8,
-                                                  dropout_rate=0.2, seed=9)
+    mean2, std2 = core.predict_with_uncertainty(p, X, hs, mc_samples=8,
+                                                dropout_rate=0.2, seed=9)
+    assert all(np.array_equal(mean[h], mean2[h]) for h in hs)
     assert all(np.array_equal(std[h], std2[h]) for h in hs)
 
 

@@ -10,7 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from predictor_spark.models import mlp, tcn
+from predictor_spark.models import mlp, nbeats, tcn
 from predictor_spark.models.estimator import fit_predict_per_series
 from predictor_spark.models.registry import (
     deserialize_params,
@@ -53,6 +53,8 @@ def test_serialize_roundtrip():
     (tcn, dict(layers=2, channels=4, kernel=2), (), False),
     (tcn, dict(layers=2, channels=4, kernel=2), ("f1",), False),
     (mlp, dict(layers=1, units=6), ("f1",), True),
+    # the default core of the store and of streaming scoring
+    (nbeats, dict(blocks=1, layers=2, units=5), (), False),
 ])
 def test_store_matches_one_shot(spark, tmp_path, core, kw, feats, flat):
     """fit_per_series -> parquet -> predict_from_weights(score_from=cutoff)
