@@ -25,8 +25,6 @@ try_cast read); timestamps carry microseconds.
 from __future__ import annotations
 
 import glob
-import hashlib
-import os
 import shutil
 import uuid
 
@@ -39,12 +37,10 @@ _TYPES = ("click", "view", "purchase", "signup", "error")
 
 
 def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
-    from predictor_spark.sources.tables import load_table, table_fingerprint
+    from predictor_spark.sources.tables import fixture_dir, load_table
 
-    fp = table_fingerprint(sf_dir, "events")
-    key = hashlib.md5(f"{sf_dir}/e2e_csv/{fp}".encode()).hexdigest()[:12]
-    d = f"/tmp/predictor_spark_e2e/{key}"
-    if os.path.isdir(d) and glob.glob(f"{d}/*.csv"):
+    d = fixture_dir(sf_dir, "events", "e2e_csv")
+    if glob.glob(f"{d}/*.csv"):
         return d
     shutil.rmtree(d, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")

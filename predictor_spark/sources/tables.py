@@ -8,6 +8,9 @@ filters/projections expressible (no opaque UDF wrappers around filters).
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 TABLES = (
@@ -48,8 +51,6 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     sf_dir is regenerated, every cache keyed with this moves, instead of
     silently serving stale chunks while the oracle reads fresh data
     (ADVICE r3)."""
-    import os
-
     path = f"{sf_dir}/{name}.parquet"
     parts: list[str] = []
     if os.path.isdir(path):
@@ -63,14 +64,26 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     return "|".join(parts)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Some generators write TIMESTAMP(NANOS) parquet (pandas datetime64[ns]),
-    # which Spark rejects by default; nanosAsLong lets those read as long for
-    # canonical_ts to convert.
+def fixture_dir(sf_dir: str, name: str, tag: str) -> str:
+    """/tmp directory for the fixture ``tag`` derived from table ``name``
+    at ``sf_dir``, keyed by the table's content fingerprint."""
+    fp = table_fingerprint(sf_dir, name)
+    key = hashlib.md5(f"{sf_dir}/{tag}/{fp}".encode()).hexdigest()[:12]
+    return f"/tmp/predictor_spark_fixtures/{key}"
+
+
+def read_nanos_as_long(spark: SparkSession) -> None:
+    """Some generators write TIMESTAMP(NANOS) parquet (pandas
+    datetime64[ns]), which Spark rejects by default; this lets those
+    read as long for canonical_ts to convert."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:  # pragma: no cover - immutable conf on some builds
         pass
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    read_nanos_as_long(spark)
     return canonical_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
@@ -89,10 +102,7 @@ def load_events_range(
     a day and scanning 100 TB. Bounds are ``lo <= ts < hi`` (UTC)."""
     from datetime import datetime, timezone
 
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
-        pass
+    read_nanos_as_long(spark)
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     ts_type = dict(df.dtypes).get("ts")
 

@@ -23,16 +23,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import os
-import shutil
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
-from predictor_spark.sources.tables import load_table, table_fingerprint
+from predictor_spark.sources.tables import load_table
+from predictor_spark.streaming.windows import (
+    replay_stream, run_memory_sink, stage_chunks, stream_clone)
 
 
 def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> str:
@@ -43,12 +39,8 @@ def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> st
     has (almost) no exact duplicate texts, so without the injection the
     dedup would be a no-op; with it, first-seen-wins must drop rows whose
     original arrived two micro-batches earlier, proving the state store
-    carries across batches. Cache keyed by content fingerprint (ADVICE r3)."""
-    fp = table_fingerprint(sf_dir, "documents")
-    key = hashlib.md5(f"{sf_dir}/docs_chunks_v3/{fp}/{n_chunks}".encode()).hexdigest()[:12]
-    d = f"/tmp/predictor_spark_stream_docs/{key}"
-    if not (os.path.isdir(d) and len(glob.glob(f"{d}/chunk_*.parquet")) == n_chunks):
-        os.makedirs(d, exist_ok=True)
+    carries across batches."""
+    def parts() -> list[DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         # band over the ACTUAL id range, not [0, count): offset or sparse
         # doc_ids (e.g. the synthesized sf1 replicas) must still land every
@@ -63,20 +55,18 @@ def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> st
             docs.filter((F.col("doc_id") < lo + band) & (F.col("doc_id") % 10 == 0))
             .withColumn("doc_id", F.col("doc_id") - F.lit(int(lo)) + F.lit(int(hi) + 1))
         )
-        for i in range(n_chunks):
-            part = docs.filter(
+        out = [
+            docs.filter(
                 (F.col("doc_id") >= lo + i * band)
                 & ((F.col("doc_id") < lo + (i + 1) * band) | F.lit(i == n_chunks - 1))
             ).filter(F.col("doc_id") <= hi)
-            if i == n_chunks - 1:
-                part = part.unionByName(refetch)
-            tmp = f"{d}/__tmp_{i}"
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = glob.glob(f"{tmp}/part-*.parquet")[0]
-            shutil.move(src, f"{d}/chunk_{i}.parquet")
-            shutil.rmtree(tmp)
-            os.utime(f"{d}/chunk_{i}.parquet", (time.time() + i, time.time() + i))
-    return d
+            for i in range(n_chunks)
+        ]
+        out[-1] = out[-1].unionByName(refetch)
+        return out
+
+    return stage_chunks(spark, sf_dir, "documents", "docs_chunks_v3",
+                        n_chunks, parts)
 
 
 def stream_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,19 +75,9 @@ def stream_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DataFrame of (lang, n_unique) — equal to batch
     COUNT(DISTINCT text) per lang, which is the oracle."""
     d = _chunked_docs_dir(spark, sf_dir)
-    from predictor_spark.streaming.windows import run_memory_sink, stream_clone
-
     # complete-mode downstream agg: the trailing no-data batch re-emits
     # unchanged state, so it is skipped; state width footer-auto-sized
-    ss = stream_clone(spark, sorted(glob.glob(f"{d}/chunk_*.parquet")),
-                      skip_no_data=True)
-    schema = ss.read.parquet(f"{d}/chunk_0.parquet").schema
-    stream = (
-        ss.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(d)
-    )
+    stream = replay_stream(stream_clone(spark, d, skip_no_data=True), d)
     ded = stream.withColumn("h", F.md5("text")).dropDuplicates(["lang", "h"])
     agg = ded.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_unique"))
     # the multi-batch contract is load-bearing for the cross-batch-state

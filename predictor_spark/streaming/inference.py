@@ -24,6 +24,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from predictor_spark.operators.localrel import collect_bounded
+from predictor_spark.sources.tables import load_table
+from predictor_spark.streaming.stateful import _chunked_stream_dir
+from predictor_spark.streaming.windows import replay_stream, run_memory_sink
 
 # from the data: one model blob per series is broadcast to every
 # executor (~2 KB for a 1-layer TCN, so ~400 MB at the bound); series are
@@ -55,7 +58,8 @@ def stream_score_ar1(
     # cached (r14, guide §5): the foreachBatch closure broadcast-joins
     # coeffs in EVERY micro-batch — lazy, each of the n_chunks batches
     # re-ran the train scan + lead window + regression aggregate; the
-    # cache is |users| rows and fills once in batch 0
+    # cache is |users| rows, fills once in batch 0 and is released once
+    # the stream has stopped
     coeffs = (
         base.filter(F.col("ts") < cutoff)
         .groupBy("user_id")
@@ -69,18 +73,7 @@ def stream_score_ar1(
 
     src = _chunked_stream_dir(spark, sf_dir, n_chunks,
                               cols=("ts", "user_id", "value", "event_type"))
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("event_type", T.StringType()),
-    ])
-    stream = (
-        spark.readStream.schema(schema).format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-        .filter(F.col("ts") >= cutoff)
-    )
+    stream = replay_stream(spark, src).filter(F.col("ts") >= cutoff)
     out_dir = tempfile.mkdtemp(prefix=f"stream_score_{uuid.uuid4().hex[:8]}_")
 
     def score(batch_df: DataFrame, batch_id: int) -> None:
@@ -91,16 +84,17 @@ def stream_score_ar1(
         )
         scored.write.mode("append").parquet(out_dir)
 
-    q = stream.writeStream.foreachBatch(score).start()
     try:
-        q.processAllAvailable()
+        q = stream.writeStream.foreachBatch(score).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        # materialized: the result reads only out_dir, removed below
+        return spark.read.parquet(out_dir).localCheckpoint()
     finally:
-        q.stop()
-    out = spark.read.parquet(out_dir)
-    # materialize before the temp dir can be cleaned up by the caller
-    out = out.localCheckpoint()
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return out
+        coeffs.unpersist()
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def stream_score_model(
@@ -133,8 +127,6 @@ def stream_score_model(
     from predictor_spark.models.estimator import normalize
     from predictor_spark.models.registry import deserialize_params
     from predictor_spark.shiplib import ensure_workers_can_import
-    from predictor_spark.streaming.stateful import _chunked_stream_dir
-    from predictor_spark.streaming.windows import run_memory_sink
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     core = core if core is not None else nbeats
@@ -190,17 +182,7 @@ def stream_score_model(
                     out[f"pred_h{h}"] = preds[h] * sd + mu
                 yield pd.DataFrame(out)
 
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = (
-        spark.readStream.schema(schema).format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
-    upd = stream.groupBy("user_id").applyInPandasWithState(
+    upd = replay_stream(spark, src).groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
     return run_memory_sink(upd, "update", spark)

@@ -16,27 +16,17 @@ the state store uses — no per-batch re-shuffle.
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import os
-import shutil
-import time as _time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
+from predictor_spark.sources.tables import load_table
+from predictor_spark.streaming.windows import (
+    _stream_dir, replay_stream, run_memory_sink, stage_chunks, stream_clone)
 
 
 def _chronological_chunks(spark: SparkSession, sf_dir: str, n_bands: int = 3) -> str:
     """Split events into chronological single-file chunks under /tmp so
-    maxFilesPerTrigger=1 replays the month as ordered micro-batches
-    (content-fingerprinted cache key — stale-fixture guard, ADVICE r3)."""
-    from predictor_spark.sources.tables import load_table, table_fingerprint
-
-    fp = table_fingerprint(sf_dir, "events")
-    key = hashlib.md5(f"{sf_dir}/ssjoin_v2/{fp}".encode()).hexdigest()[:12]
-    d = f"/tmp/predictor_spark_stream_join/{key}"
-    if not (os.path.isdir(d) and len(glob.glob(f"{d}/chunk_*.parquet")) == n_bands):
-        os.makedirs(d, exist_ok=True)
+    maxFilesPerTrigger=1 replays the month as ordered micro-batches."""
+    def parts() -> list[DataFrame]:
         ev = load_table(spark, sf_dir, "events")
         # data-driven cutoffs: split INSIDE the earliest and latest
         # qualifying (view, purchase) interval so at least one pair
@@ -65,20 +55,11 @@ def _chronological_chunks(spark: SparkSession, sf_dir: str, n_bands: int = 3) ->
             if len(cuts_us) == 1:
                 cuts_us.append(cuts_us[0] + 3_600_000_000)
         c0, c1 = (F.timestamp_micros(F.lit(c)) for c in cuts_us)
-        bands = [
-            F.col("ts") < c0,
-            (F.col("ts") >= c0) & (F.col("ts") < c1),
-            F.col("ts") >= c1,
-        ]
-        for i, band in enumerate(bands):
-            tmp = f"{d}/__tmp_{i}"
-            ev.filter(band).coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = glob.glob(f"{tmp}/part-*.parquet")[0]
-            dst = f"{d}/chunk_{i}.parquet"
-            shutil.move(src, dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-    return d
+        return [ev.filter(F.col("ts") < c0),
+                ev.filter((F.col("ts") >= c0) & (F.col("ts") < c1)),
+                ev.filter(F.col("ts") >= c1)]
+
+    return stage_chunks(spark, sf_dir, "events", "ssjoin_v2", n_bands, parts)
 
 
 def view_purchase_attribution(
@@ -86,7 +67,6 @@ def view_purchase_attribution(
     sf_dir: str,
     horizon_hours: int = 2,
     watermark: str = "48 hours",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Inner stream-stream join: every (view, purchase) pair of the same
     user with the purchase inside (view.ts, view.ts + horizon].
@@ -99,65 +79,16 @@ def view_purchase_attribution(
     result is therefore the complete batch interval join, which is the
     oracle.  (Production would tighten the watermark to arrival lag;
     completeness here is what makes the row checkable.)
-
-    ``state_partitions`` sizes the state store to the buffered-state
-    volume (|users inside the watermark|) — stream-stream state
-    partitioning is captured at query START and a too-wide width pays
-    per-batch state-store task overhead 2.5x (10.9 s -> 4.5 s at 8 on
-    the sf0.1 bench), while a too-NARROW one serializes the per-batch
-    join at larger inputs (VERDICT r9 #4: the fixed 8 cost 3.94x wall
-    at 10x data).  Default None auto-sizes from the event count — one
-    state partition per ~50k events, clamped to [8, 32] — so sf0.1
-    keeps its tuned 8 and sf1 gets 20-way state parallelism; on a real
-    cluster the same rule tracks executor cores.  The whole query is
-    planned on a CLONED session (spark.newSession(): own SQLConf,
-    shared SparkContext), so the caller's batch
-    spark.sql.shuffle.partitions is never touched and concurrent
-    planning in other threads cannot capture the reduced width
-    (ADVICE r5).
     """
-    from predictor_spark.sources.tables import canonical_ts
-    from predictor_spark.streaming.windows import run_memory_sink
-
     # chunk materialization runs on the caller's session (batch writes);
-    # the streaming query itself plans on the isolated clone below
+    # the query plans on a clone.  After the last file-fed trigger an
+    # INNER stream-stream join's no-data batch can only evict buffered
+    # rows that no longer match, so skipping it cannot change the result
     d = _chronological_chunks(spark, sf_dir)
-
-    ss = spark.newSession()
-    try:
-        ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
-        pass
-    if state_partitions is None:
-        # r14 (guide §1.2/§6): the auto-sizing input is just the total
-        # chunk row count — read it from the parquet FOOTERS driver-side
-        # (microseconds) instead of the spark .count() job the pre-r14
-        # form ran over every chunk per invocation; identical integer,
-        # identical sizing rule
-        import pyarrow.parquet as _pq
-
-        n_events = sum(
-            _pq.ParquetFile(p).metadata.num_rows
-            for p in sorted(glob.glob(f"{d}/chunk_*.parquet")))
-        state_partitions = min(32, max(8, n_events // 50_000))
-    ss.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # r14 (guide §1.2 — don't compute things you throw away): after the
-    # last file-fed trigger, the engine schedules one extra NO-DATA
-    # micro-batch purely to advance the watermark and evict state.  For
-    # an INNER stream-stream join that batch can emit no rows (eviction
-    # only discards buffered rows that can no longer match), so skipping
-    # it cannot change the result set — it only skips one full round of
-    # state-store task overhead on a query that is torn down immediately
-    # after.  Per-clone conf: the caller's session is untouched.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    schema = ss.read.parquet(f"{d}/chunk_0.parquet").schema
+    ss = stream_clone(spark, d, skip_no_data=True)
 
     def side(kind: str, prefix: str) -> DataFrame:
-        s = (
-            ss.readStream.schema(schema).format("parquet")
-            .option("maxFilesPerTrigger", 1).load(d)
-        )
-        s = canonical_ts(s).filter(F.col("event_type") == kind)
+        s = replay_stream(ss, d).filter(F.col("event_type") == kind)
         return s.select(
             F.col("user_id").alias(f"{prefix}_user"),
             F.col("event_id").alias(f"{prefix}_id"),
@@ -203,16 +134,13 @@ def purchases_enriched_with_signup(
     refresh cadence is a deployment choice — re-plan the query to pick up
     a new snapshot, or swap to a Delta table the batch job upserts.
     """
-    from predictor_spark.sources.tables import load_table
-    from predictor_spark.streaming.windows import _events_stream, run_memory_sink
-
     signup = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("signup_ts"))
     )
-    stream = _events_stream(spark, sf_dir).filter(
+    stream = replay_stream(spark, _stream_dir(sf_dir)).filter(
         F.col("event_type") == "purchase")
     joined = stream.join(F.broadcast(signup), "user_id").select(
         "user_id",

@@ -19,16 +19,13 @@ micro-batch shuffles only its own rows to their key partitions.
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import os
-import shutil
-import time
-
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
+from predictor_spark.sources.tables import load_table
+from predictor_spark.streaming.windows import (
+    replay_stream, run_memory_sink, stage_chunks, stream_clone)
 
 
 def _chunked_stream_dir(
@@ -40,39 +37,29 @@ def _chunked_stream_dir(
     """Split the events table into ``n_chunks`` time-range parquet files in
     a /tmp dir, modification times increasing with time range, so the
     FileStreamSource replays history chronologically one file per trigger."""
-    from predictor_spark.sources.tables import load_table
+    def parts() -> list[DataFrame]:
+        ev = load_table(spark, sf_dir, "events").select(*cols)
+        # time cut points via percentile on epoch micros (driver receives
+        # n_chunks-1 numbers; at 100 TB swap in approxQuantile the same way)
+        row = ev.select(
+            F.percentile(F.unix_micros("ts"), F.array(*[
+                F.lit(i / n_chunks) for i in range(1, n_chunks)
+            ])).alias("qs")
+        )
+        row = collect_bounded(row, ONE_ROW, "stream chunk cuts")[0]
+        cuts = [int(q) for q in row["qs"]]
+        out = []
+        for a, b in zip([None] + cuts, cuts + [None]):
+            part = ev
+            if a is not None:
+                part = part.filter(F.unix_micros("ts") > a)
+            if b is not None:
+                part = part.filter(F.unix_micros("ts") <= b)
+            out.append(part)
+        return out
 
-    key = hashlib.md5(f"{sf_dir}/events/{n_chunks}/{','.join(cols)}".encode()).hexdigest()[:12]
-    d = f"/tmp/predictor_spark_stream_chunks/{key}"
-    if os.path.isdir(d) and len(glob.glob(f"{d}/chunk_*.parquet")) == n_chunks:
-        return d
-    os.makedirs(d, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").select(*cols)
-    # time cut points via percentile on epoch micros (driver receives
-    # n_chunks-1 numbers; at 100 TB swap in approxQuantile the same way)
-    row = ev.select(
-        F.percentile(F.unix_micros("ts"), F.array(*[
-            F.lit(i / n_chunks) for i in range(1, n_chunks)
-        ])).alias("qs")
-    )
-    row = collect_bounded(row, ONE_ROW, "stream chunk cuts")[0]
-    cuts = [int(q) for q in row["qs"]]
-    lo = [None] + cuts
-    hi = cuts + [None]
-    for i, (a, b) in enumerate(zip(lo, hi)):
-        part = ev
-        if a is not None:
-            part = part.filter(F.unix_micros("ts") > a)
-        if b is not None:
-            part = part.filter(F.unix_micros("ts") <= b)
-        tmp = f"{d}/__tmp_{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = f"{d}/chunk_{i}.parquet"
-        shutil.move(src, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (time.time() + i, time.time() + i))
-    return d
+    return stage_chunks(spark, sf_dir, "events",
+                        f"events_chunks/{','.join(cols)}", n_chunks, parts)
 
 
 _OUT_SCHEMA = T.StructType([
@@ -107,10 +94,7 @@ def stateful_running_stats(
     # skip_no_data is safe HERE because the state uses NoTimeout: a
     # no-data batch has no input groups and no timed-out state, so the
     # update function is never invoked and nothing can be emitted.
-    from predictor_spark.streaming.windows import stream_clone
-
-    ss = stream_clone(spark, sorted(glob.glob(f"{src}/chunk_*.parquet")),
-                      skip_no_data=True)
+    ss = stream_clone(spark, src, skip_no_data=True)
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -130,24 +114,10 @@ def stateful_running_stats(
         state.update((n, total, ema))
         yield pd.DataFrame([{"user_id": key[0], "n": n, "total": total, "ema": ema}])
 
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = (
-        ss.readStream.schema(schema).format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
-    upd = stream.groupBy("user_id").applyInPandasWithState(
+    upd = replay_stream(ss, src).groupBy("user_id").applyInPandasWithState(
         update, _OUT_SCHEMA, _STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
     )
     # one emission per (user, batch); the final state has the max n
-    from pyspark.sql import Window
-
-    from predictor_spark.streaming.windows import run_memory_sink
-
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     return (
         run_memory_sink(upd, "update", spark)

@@ -7,6 +7,13 @@ Kafka/files-on-arrival and the sink is an idempotent foreachBatch writer;
 the parquet-driven variant here exercises the identical logical plan
 synchronously (processAllAvailable) so a batch oracle can check it.
 
+This module is the one replay path every streaming row uses:
+:func:`stage_chunks` writes a table's bands as ordered ``chunk_i.parquet``
+files under a fingerprint-keyed /tmp dir (``_stream_dir`` links the raw
+events table instead), :func:`replay_stream` reads such a dir back one
+file per micro-batch, :func:`stream_clone` gives the query its own
+session and :func:`run_memory_sink` drains the result onto the caller.
+
 Scale: stateful agg state is partitioned by (window, group key); the
 watermark bounds state size to (max event lag / window slide) windows per
 key — without it, 100 TB of stream history would pin unbounded state.
@@ -14,17 +21,99 @@ key — without it, 100 TB of stream history would pin unbounded state.
 
 from __future__ import annotations
 
-import hashlib
+import glob
+import json
 import os
+import shutil
+import time
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from predictor_spark.operators.localrel import collect_bounded, local_df
+from predictor_spark.sources.tables import (
+    canonical_ts, fixture_dir, load_table, read_nanos_as_long)
 
-def stream_clone(spark: SparkSession, source_files: list[str],
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def stage_chunks(spark: SparkSession, sf_dir: str, table: str, tag: str,
+                 n: int, parts: Callable[[], list[DataFrame]]) -> str:
+    """Directory of ``n`` single-file chunks ``chunk_0..n-1.parquet``
+    derived from ``table``, with modification times increasing in chunk
+    order so a ``maxFilesPerTrigger=1`` replay delivers them as ordered
+    micro-batches.
+
+    The directory is keyed by ``tag``, ``n`` and the table's content
+    fingerprint (a regenerated table never serves stale chunks, ADVICE
+    r3).  A complete directory is returned as is, without a Spark job;
+    otherwise it is cleared and ``parts()`` — called only then, so a
+    row's cut-point collect stays lazy — gives the ``n`` bands, each
+    written as one file."""
+    d = fixture_dir(sf_dir, table, f"{tag}/{n}")
+    if len(glob.glob(f"{d}/chunk_*.parquet")) == n:
+        return d
+    shutil.rmtree(d, ignore_errors=True)
+    bands = parts()
+    if len(bands) != n:
+        raise ValueError(f"{tag}: {len(bands)} bands for {n} chunks")
+    t0 = time.time()
+    for i, band in enumerate(bands):
+        tmp = f"{d}/__tmp_{i}"
+        band.coalesce(1).write.mode("overwrite").parquet(tmp)
+        dst = f"{d}/chunk_{i}.parquet"
+        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (t0 + i, t0 + i))
+    return d
+
+
+def _stream_dir(sf_dir: str) -> str:
+    """FileStreamSource requires a DIRECTORY source; testdata is read-only
+    single files. Build (once) a /tmp dir holding a symlink to the events
+    parquet file."""
+    d = fixture_dir(sf_dir, "events", "link")
+    os.makedirs(d, exist_ok=True)
+    link = f"{d}/events.parquet"
+    if not os.path.exists(link):
+        os.symlink(f"{sf_dir}/events.parquet", link)
+    return d
+
+
+def replay_stream(ss: SparkSession, src: str) -> DataFrame:
+    """readStream over the parquet files in ``src``, one file per
+    micro-batch in modification-time order, ``ts`` canonicalized exactly
+    like the batch path (sources/tables.py canonical_ts).
+
+    FileStreamSource needs an explicit schema.  Chunk files from
+    :func:`stage_chunks` are Spark-written and carry their Spark schema
+    in the parquet footer, read driver-side without a job; a raw
+    generator table (a :func:`_stream_dir` link, whose physical
+    timestamp layout has changed across rounds) is resolved by Spark's
+    own footer read under nanosAsLong, the way load_table reads it.
+
+    ``ss`` may be a per-query clone from :func:`stream_clone` — the
+    stream then plans under the clone's conf."""
+    import pyarrow.parquet as pq
+
+    first = sorted(glob.glob(f"{src}/*.parquet"))[0]
+    spark_schema = (pq.read_schema(first).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_schema is not None:
+        schema = T.StructType.fromJson(json.loads(spark_schema))
+    else:
+        read_nanos_as_long(ss)
+        schema = ss.read.parquet(first).schema
+    return canonical_ts(
+        ss.readStream.schema(schema).format("parquet")
+        .option("maxFilesPerTrigger", 1).load(src))
+
+
+def stream_clone(spark: SparkSession, src: str,
                  skip_no_data: bool) -> SparkSession:
-    """Per-query session clone for a synchronous streaming run (r14,
-    guide §1.2/§2.2 — the pattern measured on streaming_stream_join):
+    """Per-query session clone for a synchronous streaming run over the
+    parquet files in ``src`` (r14, guide §1.2/§2.2 — the pattern
+    measured on streaming_stream_join):
 
     - state-store width = spark.sql.shuffle.partitions is captured at
       query start, and the caller session's batch width (local: one per
@@ -41,15 +130,11 @@ def stream_clone(spark: SparkSession, source_files: list[str],
       stream-stream joins only evict.  APPEND-mode windowed aggs MUST
       keep it — the last watermark advance is what flushes their final
       closed windows."""
-    import pyarrow.parquet as _pq
+    import pyarrow.parquet as pq
 
     ss = spark.newSession()
-    try:
-        ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
-        pass
-    n_rows = sum(_pq.ParquetFile(p).metadata.num_rows
-                 for p in source_files)
+    n_rows = sum(pq.ParquetFile(p).metadata.num_rows
+                 for p in glob.glob(f"{src}/*.parquet"))
     ss.conf.set("spark.sql.shuffle.partitions",
                 str(min(32, max(8, n_rows // 50_000))))
     if skip_no_data:
@@ -102,42 +187,6 @@ def run_memory_sink(stream: DataFrame, mode: str, caller: SparkSession,
     return local_df(caller, rows, stream.schema)
 
 
-def _stream_dir(sf_dir: str, table: str = "events") -> str:
-    """FileStreamSource requires a DIRECTORY source; testdata is read-only
-    single files. Build (once) a /tmp dir of symlinks to the parquet file."""
-    key = hashlib.md5(f"{sf_dir}/{table}".encode()).hexdigest()[:12]
-    d = f"/tmp/predictor_spark_stream/{key}"
-    os.makedirs(d, exist_ok=True)
-    link = f"{d}/{table}.parquet"
-    if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/{table}.parquet", link)
-    return d
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the schema taken from a
-    batch footer read (FileStreamSource needs an explicit schema, and the
-    generator's physical timestamp layout has changed across rounds —
-    nanos-as-long vs NTZ micros), then ts canonicalized to TIMESTAMP
-    exactly like the batch path (sources/tables.py canonical_ts).
-
-    ``spark`` may be a per-query clone from :func:`stream_clone` — the
-    stream then plans under the clone's conf."""
-    from predictor_spark.sources.tables import canonical_ts
-
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
-        pass
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_stream_dir(sf_dir, "events"))
-    )
-    return canonical_ts(stream)
-
-
 def tumbling_event_counts(
     spark: SparkSession,
     sf_dir: str,
@@ -150,9 +199,9 @@ def tumbling_event_counts(
     Uses outputMode('complete') + memory sink so every window (including
     ones the watermark hasn't closed) is emitted — matching the batch
     oracle GROUP BY date_trunc."""
-    ss = stream_clone(spark, [f"{sf_dir}/events.parquet"],
-                      skip_no_data=True)  # complete mode: re-emit only
-    stream = _events_stream(ss, sf_dir)
+    src = _stream_dir(sf_dir)
+    ss = stream_clone(spark, src, skip_no_data=True)  # complete: re-emit only
+    stream = replay_stream(ss, src)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window_len).alias("w"), "event_type")
@@ -172,9 +221,9 @@ def sessionized_stream_counts(
 ) -> DataFrame:
     """session_window (gap-based) per user — the streaming analog of the
     batch sessionize operator. Returns per-user session counts."""
-    ss = stream_clone(spark, [f"{sf_dir}/events.parquet"],
-                      skip_no_data=True)  # complete mode: re-emit only
-    stream = _events_stream(ss, sf_dir)
+    src = _stream_dir(sf_dir)
+    ss = stream_clone(spark, src, skip_no_data=True)  # complete: re-emit only
+    stream = replay_stream(ss, src)
     agg = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -188,6 +237,23 @@ def sessionized_stream_counts(
             F.sum("n_events").cast("bigint").alias("n_events"),
         )
     )
+
+
+def _late_drop_chunks(spark: SparkSession, sf_dir: str) -> str:
+    """The three files :func:`late_data_drop_counts` replays: everything
+    before Jan 19 except the Jan 10-12 band, the Jan 19-24 filler, then
+    the remainder plus the band."""
+    def parts() -> list[DataFrame]:
+        ev = load_table(spark, sf_dir, "events")
+        band = (F.col("ts") >= F.lit("2024-01-10").cast("timestamp")) & \
+               (F.col("ts") < F.lit("2024-01-12").cast("timestamp"))
+        early = F.col("ts") < F.lit("2024-01-19").cast("timestamp")
+        mid = (~early) & (F.col("ts") < F.lit("2024-01-24").cast("timestamp"))
+        late = F.col("ts") >= F.lit("2024-01-24").cast("timestamp")
+        return [ev.filter(early & ~band), ev.filter(mid),
+                ev.filter(late | band)]
+
+    return stage_chunks(spark, sf_dir, "events", "late_drop_v2", 3, parts)
 
 
 def late_data_drop_counts(
@@ -214,48 +280,10 @@ def late_data_drop_counts(
     broadcast watermark — no extra shuffle; state is bounded by
     (watermark / window) open windows per key, which is the entire point
     of watermarking at 100 TB."""
-    import glob
-    import shutil
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from predictor_spark.sources.tables import load_table, table_fingerprint
-
-    fp = table_fingerprint(sf_dir, "events")
-    key = hashlib.md5(f"{sf_dir}/late_drop_v2/{fp}".encode()).hexdigest()[:12]
-    d = f"/tmp/predictor_spark_stream_late/{key}"
-    if not (os.path.isdir(d) and len(glob.glob(f"{d}/chunk_*.parquet")) == 3):
-        os.makedirs(d, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events")
-        band = (F.col("ts") >= F.lit("2024-01-10").cast("timestamp")) & \
-               (F.col("ts") < F.lit("2024-01-12").cast("timestamp"))
-        early = F.col("ts") < F.lit("2024-01-19").cast("timestamp")
-        mid = (~early) & (F.col("ts") < F.lit("2024-01-24").cast("timestamp"))
-        late = F.col("ts") >= F.lit("2024-01-24").cast("timestamp")
-        parts = [ev.filter(early & ~band), ev.filter(mid), ev.filter(late | band)]
-        for i, part in enumerate(parts):
-            tmp = f"{d}/__tmp_{i}"
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = glob.glob(f"{tmp}/part-*.parquet")[0]
-            dst = f"{d}/chunk_{i}.parquet"
-            shutil.move(src, dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-
     # append mode: the trailing no-data batch flushes the final closed
     # windows, so ONLY the state width is tuned — never skip_no_data here
-    ss = stream_clone(spark, sorted(glob.glob(f"{d}/chunk_*.parquet")),
-                      skip_no_data=False)
-    schema = ss.read.parquet(f"{d}/chunk_0.parquet").schema
-    stream = (
-        ss.readStream.schema(schema).format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(d)
-    )
-    from predictor_spark.sources.tables import canonical_ts
-
-    stream = canonical_ts(stream)
+    src = _late_drop_chunks(spark, sf_dir)
+    stream = replay_stream(stream_clone(spark, src, skip_no_data=False), src)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -282,9 +310,9 @@ def sliding_event_counts(
     Scale: state per key is bounded by (watermark / slide) open windows;
     the map-side expansion factor is len/slide — the knob that trades
     freshness granularity against state size at 100 TB/day rates."""
-    ss = stream_clone(spark, [f"{sf_dir}/events.parquet"],
-                      skip_no_data=True)  # complete mode: re-emit only
-    stream = _events_stream(ss, sf_dir)
+    src = _stream_dir(sf_dir)
+    ss = stream_clone(spark, src, skip_no_data=True)  # complete: re-emit only
+    stream = replay_stream(ss, src)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window_len, slide).alias("w"), "event_type")

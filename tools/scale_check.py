@@ -96,7 +96,7 @@ def main() -> None:
         "  Wall ≈ fixed(session+state init) + linear(state rows): a",
         "  sub-10x sf1 ratio is the expected shape, not drift.  The",
         "  state-store width now scales with input",
-        "  (streaming/joins.py:state_partitions auto), keeping per-task",
+        "  (streaming/windows.py:stream_clone auto), keeping per-task",
         "  state in memory at any SF.",
         "- **distinct_ngram_ratios**: already ONE corpus scan — a single",
         "  generator projection emits all 1/2/3-grams tagged with n,",
