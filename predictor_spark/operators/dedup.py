@@ -14,6 +14,12 @@ Scale design (the whole point of these at 100 TB):
   100 TB dedup path.
 - SimHash: constant-size signature per doc; near-dup = small Hamming
   distance; bucket by bit-bands like MinHash.
+- connected components (pairs -> clusters): size-adaptive, the way AQE
+  picks a broadcast join.  The raw edges are checkpointed and counted
+  by one bounded fetch; up to ``MAX_CC_EDGES`` edges (the near-dup
+  graph below SF ~80) union-find on the driver labels them and the
+  result re-enters as an Arrow local relation, past it the distributed
+  rounds run on the same checkpoint.  Both paths are exact or raise.
 
 Hashes use the engine-portable md5-prefix scheme (operators/text.py) when
 ``portable=True`` so a DuckDB oracle reproduces results bit-for-bit;
@@ -24,9 +30,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from predictor_spark.operators.localrel import ONE_ROW, collect_bounded
+from predictor_spark.operators.localrel import (
+    ONE_ROW, arrow_df, collect_bounded, fetch_bounded)
 from predictor_spark.operators.text import portable_hash, shingles_col
 
 #: modulus for the universal-hash family (a*h + b) % MOD; prime, and small
@@ -320,6 +327,54 @@ def simhash(
     return doc.select(F.col(id_col), sim.alias("simhash"))
 
 
+# from the data: the LSH pair graph the near-dup rows cluster grows
+# ~2,540 edges per SF (25 / 254 at sf0.01 / 0.1), so past SF ~80 the
+# components come from the distributed rounds instead of the driver.
+# On the driver an edge costs ~750 bytes at peak (measured: 100,000
+# edges of two fresh vertices each; the fetched Row, its share of the
+# union-find map and of the output rows, and 32 bytes of Arrow buffers),
+# so the bound holds the driver finish to ~150 MB; the same value as
+# ranking.MAX_KEYS
+MAX_CC_EDGES = 200_000
+
+
+def _components_on_driver(raw: DataFrame, rows: list) -> DataFrame:
+    """Connected components of the fetched ``raw`` edge rows by
+    union-find on the driver, min id per component, as a local relation
+    with the schema the distributed rounds return.
+
+    Every endpoint is a vertex; a NULL endpoint is a vertex labelled
+    NULL that joins no component, as in the distributed rounds."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            # the larger root hangs under the smaller: roots are min ids
+            parent[max(ra, rb)] = min(ra, rb)
+    # the vertex field is what the distributed rounds' vertex union
+    # makes of the two endpoint fields (an int and a bigint widen)
+    a, b = raw.columns
+    vertex = raw.select(F.col(a).alias("vertex")).union(
+        raw.select(F.col(b).alias("vertex"))).schema["vertex"]
+    schema = T.StructType([vertex, T.StructField(
+        "component", vertex.dataType, vertex.nullable)])
+    return arrow_df(raw.sparkSession, [(v, find(v)) for v in parent], schema)
+
+
+def _unconverged(op: str, max_iter: int):
+    raise ValueError(f"{op}: labels not converged after max_iter={max_iter} "
+                     "rounds; raise max_iter")
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -334,17 +389,25 @@ def connected_components(
     labels, until a fixpoint. Rounds needed = cluster diameter, which for
     near-dup graphs is tiny (dups of a doc are dups of each other), so
     this converges in 2-4 rounds; pathological chain graphs are bounded
-    by ``max_iter``. Each round is one join + one aggregate on the edge
+    by ``max_iter``, and labels still changing in the last round raise
+    ``ValueError``. Each round is one join + one aggregate on the edge
     list; labels are localCheckpoint'ed to truncate lineage so the plan
     doesn't grow with iterations (the classic iterative-DataFrame trap).
     For graphs with whale-sized clusters (rounds = component DIAMETER
     here), use ``connected_components_star`` — same interface,
-    O(log) rounds."""
+    O(log) rounds.
+
+    The rounds run only past ``MAX_CC_EDGES`` edges; up to it the
+    fetched edges are labelled on the driver (``_components_on_driver``)
+    and ``max_iter`` is unused."""
     # r14 (guide §1.2/§5): checkpoint the RAW edge projection once —
     # without it the symmetrizing union evaluates the caller's edge
     # subtree (often a whole LSH candidate pipeline) twice in one job
     raw = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
+    rows = fetch_bounded(raw, MAX_CC_EDGES)
+    if len(rows) <= MAX_CC_EDGES:
+        return _components_on_driver(raw, rows)
     # LAZY checkpoints for sym and labels (r15, guide §1.2): both derive
     # from the eager raw checkpoint with one cheap shuffle each, so the
     # first round's convergence count materializes-and-persists them in
@@ -382,6 +445,8 @@ def connected_components(
         labels = new.drop("changed")
         if n_changed == 0:
             break
+    else:
+        _unconverged("connected_components", max_iter)
     return labels.select(F.col("vertex"), F.col("label").alias("component"))
 
 
@@ -408,7 +473,11 @@ def connected_components_star(
     The edge list contracts toward a star per component rooted at the
     component minimum; convergence is detected by an (edge-count,
     sum-of-hashes) signature reaching a fixpoint — one cheap aggregate,
-    no except() diff. localCheckpoint truncates lineage per round."""
+    no except() diff. localCheckpoint truncates lineage per round; no
+    fixpoint within ``max_iter`` rounds raises ``ValueError``.
+
+    As in ``connected_components``, the rounds run only past
+    ``MAX_CC_EDGES`` edges; up to it the driver labels the edges."""
     # r14 (guide §1.2/§5): checkpoint the raw (hi, lo) projection once —
     # cur and all_vertices both derive from it, so the caller's edge
     # subtree (often a whole LSH candidate pipeline) is computed exactly
@@ -419,6 +488,9 @@ def connected_components_star(
         F.greatest(F.col(src), F.col(dst)).alias("hi"),
         F.least(F.col(src), F.col(dst)).alias("lo"),
     ).localCheckpoint()
+    rows = fetch_bounded(raw, MAX_CC_EDGES)
+    if len(rows) <= MAX_CC_EDGES:
+        return _components_on_driver(raw, rows)
     # LAZY (r15): cur is one distinct over raw's cached blocks, so round
     # 1's signature aggregate materializes-and-persists it in the same
     # job — the eager form paid a dedicated setup job per invocation
@@ -484,6 +556,8 @@ def connected_components_star(
             if cur.exceptAll(prev).limit(1).count() == 0:
                 break
         sig = new_sig
+    else:
+        _unconverged("connected_components_star", max_iter)
     # converged: stars (hi -> root). Roots and isolated vertices label
     # themselves (the input has no isolated vertices, but keep it total).
     labels = cur.select(F.col("hi").alias("vertex"), F.col("lo").alias("label"))

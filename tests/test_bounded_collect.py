@@ -26,7 +26,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "predictor_spark"
 _FETCHES = {"collect", "toPandas", "take", "head", "toLocalIterator"}
@@ -63,18 +63,6 @@ def test_no_raw_row_fetch_outside_localrel():
         + ", ".join(hits))
 
 
-def _jobs(spark, fn):
-    """(number of Spark jobs ``fn`` launched, its result)."""
-    sc = spark.sparkContext
-    group = f"bounded_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 def test_collect_bounded_overflow_names_site_and_bound(spark):
     from predictor_spark.operators.localrel import collect_bounded
 
@@ -85,7 +73,8 @@ def test_collect_bounded_overflow_names_site_and_bound(spark):
 
 
 def test_collect_bounded_fetches_at_most_bound_plus_one(spark, monkeypatch):
-    from predictor_spark.operators.localrel import collect_bounded
+    from predictor_spark.operators.localrel import (collect_bounded,
+                                                    fetch_bounded)
 
     df = spark.range(0, 1000, 1, 4)
     seen = []
@@ -98,7 +87,9 @@ def test_collect_bounded_fetches_at_most_bound_plus_one(spark, monkeypatch):
     monkeypatch.setattr(type(df), "limit", spy)
     with pytest.raises(ValueError):
         collect_bounded(df, 5, "spy")
-    assert seen == [6]
+    # the non-raising form hands the caller the one row past the bound
+    assert len(fetch_bounded(df, 5)) == 6
+    assert seen == [6, 6]
 
 
 def test_collect_bounded_launches_the_same_jobs_as_collect(spark):
@@ -119,8 +110,8 @@ def test_collect_bounded_launches_the_same_jobs_as_collect(spark):
         "local relation": local_df(spark, rows, "k long, v double"),
     }
     for what, df in frames.items():
-        n_plain, plain = _jobs(spark, df.collect)
-        n_bounded, bounded = _jobs(
+        n_plain, plain = count_jobs(spark, df.collect)
+        n_bounded, bounded = count_jobs(
             spark, lambda: collect_bounded(df, 100, what))
         assert n_bounded == n_plain, what
         assert sorted(bounded) == sorted(plain), what

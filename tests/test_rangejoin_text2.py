@@ -77,8 +77,12 @@ def test_load_events_range_pushdown_equals_postfilter(spark):
     assert "PushedFilters: [" in plan and "GreaterThanOrEqual(ts" in plan
 
 
-def test_connected_components_chain_and_clusters(spark):
+def test_connected_components_chain_and_clusters(spark, monkeypatch):
+    from predictor_spark.operators import dedup
     from predictor_spark.operators.dedup import connected_components
+
+    # the label rounds, not the small-graph driver finish
+    monkeypatch.setattr(dedup, "MAX_CC_EDGES", -1)
 
     # chain 1-2-3-4 (diameter > 1 forces multiple rounds), triangle 10-11-12,
     # isolated pair 20-21
@@ -236,16 +240,20 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert len(bf & ivf) / len(bf) >= 0.9
 
 
-def test_connected_components_star_matches_min_label(spark):
+def test_connected_components_star_matches_min_label(spark, monkeypatch):
     """Large/small-star CC bit-matches min-label propagation on chain,
     triangle, isolated-pair and a random graph — and converges on a
-    200-vertex chain where min-label would need 199 rounds."""
+    200-vertex chain where min-label would need 199 rounds.  Both run
+    their distributed rounds here, not the small-graph driver finish."""
     import random
 
+    from predictor_spark.operators import dedup
     from predictor_spark.operators.dedup import (
         connected_components,
         connected_components_star,
     )
+
+    monkeypatch.setattr(dedup, "MAX_CC_EDGES", -1)
 
     edges = spark.createDataFrame(
         [Row(id_a=a, id_b=b) for a, b in

@@ -337,3 +337,23 @@ def test_jdbc_upsert_statements_execute_semantically(spark):
     assert con.execute('SELECT count(*) FROM "dim_project"').fetchone() \
         == (1,)
     con.close()
+
+
+def test_e2e_pipeline_metrics_leaves_no_warehouse_behind(spark):
+    """Each call writes its S10 warehouse under a per-call dir and removes
+    it once the facts are read back: two calls leave as many dirs as
+    there were before, and return the same facts."""
+    import glob
+
+    from predictor_spark.plans import catalog_e2e
+    from tests.conftest import SF_DIR
+
+    def n_dirs() -> int:
+        return len(glob.glob(f"{catalog_e2e.WAREHOUSE_ROOT}/*"))
+
+    before = n_dirs()
+    first = catalog_e2e.e2e_pipeline_metrics(spark, SF_DIR).collect()
+    second = catalog_e2e.e2e_pipeline_metrics(spark, SF_DIR).collect()
+    assert n_dirs() == before
+    assert 0 < len(first) <= 3 * len(catalog_e2e._TYPES)
+    assert sorted(first) == sorted(second)

@@ -19,11 +19,10 @@ import glob
 import os
 import pathlib
 import shutil
-import uuid
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "predictor_spark"
 _WINDOWS = "streaming/windows.py"
@@ -83,18 +82,6 @@ def test_each_replay_idiom_has_one_home():
             home + ":"), f"{idiom} belongs once in {home}: {hits[idiom]}"
 
 
-def _jobs(spark, fn):
-    """(number of Spark jobs ``fn`` launched, its result)."""
-    sc = spark.sparkContext
-    group = f"replay_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 def _mtimes(d: str, n: int) -> list[int]:
     return [os.stat(f"{d}/chunk_{i}.parquet").st_mtime_ns for i in range(n)]
 
@@ -116,13 +103,13 @@ def test_stager_reuses_a_complete_dir_and_restages_a_missing_chunk(
         first = _mtimes(d, 3)
         assert first[0] < first[1] < first[2]
 
-        n_jobs, again = _jobs(spark, lambda: _chunked_stream_dir(
+        n_jobs, again = count_jobs(spark, lambda: _chunked_stream_dir(
             spark, sf, n_chunks=3))
         assert again == d and n_jobs == 0
         assert _mtimes(d, 3) == first
 
         os.remove(f"{d}/chunk_1.parquet")
-        n_jobs, again = _jobs(spark, lambda: _chunked_stream_dir(
+        n_jobs, again = count_jobs(spark, lambda: _chunked_stream_dir(
             spark, sf, n_chunks=3))
         assert again == d and n_jobs > 0
         restaged = _mtimes(d, 3)
@@ -217,3 +204,30 @@ def test_failed_stream_score_ar1_leaves_nothing_behind(
     assert not list(tmp_path.glob("stream_score_*"))
     assert _cached_relations(spark) <= before
     assert not spark.streams.active
+
+
+def test_tumbling_counts_replay_a_directory_form_events_table(
+        spark, tmp_path):
+    """A directory-form ``events.parquet`` is its own stream source: the
+    replay reads its part file instead of opening the directory as one
+    parquet file."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from tools.check_correctness import normalize_pdf
+
+    table = tmp_path / "sf" / "events.parquet"
+    table.mkdir(parents=True)
+    shutil.copy(f"{SF_DIR}/events.parquet", table / "part-00000.parquet")
+    got = entry.queries()["streaming_tumbling_counts"](
+        spark, str(tmp_path / "sf"))
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{table}/*.parquet'")
+        want = con.execute(
+            entry.oracle_sql()["streaming_tumbling_counts"]).fetchdf()
+    finally:
+        con.close()
+    assert len(want) > 0
+    assert normalize_pdf(got.toPandas()).equals(normalize_pdf(want))
