@@ -14,8 +14,8 @@ terms for daily seasonality. No MCMC, no random init — pure linear
 algebra, so results are reproducible to the bit and differential-testable
 against a driver-side numpy replay.
 
-Scale: one series = one `applyInPandas` group (Arrow-batched); 10^6
-series saturate a cluster. Train-only fitting discipline as everywhere
+Scale: one series = one Arrow group (operators/series.py per_series);
+10^6 series saturate a cluster. Train-only fitting discipline as everywhere
 in the engine: the design matrix solve uses rows before ``train_end``
 only; all rows get scored.
 """
@@ -23,8 +23,9 @@ only; all rows get scored.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F  # noqa: F401 (F used by callers)
+from pyspark.sql import DataFrame
+
+from predictor_spark.operators.series import per_series
 
 
 def solve_normal_gauss(X: np.ndarray, y: np.ndarray, ridge: float = 0.0) -> np.ndarray:
@@ -86,31 +87,30 @@ def _design(ts_sec: np.ndarray, t0: float, span: float,
     return np.stack(cols, axis=1)
 
 
-def fit_predict_series(pdf: pd.DataFrame, value_col: str, ts_col: str,
+def fit_predict_series(ts: np.ndarray, y: np.ndarray,
                        train_end: np.datetime64, n_changepoints: int,
                        fourier_k: int, holidays: list[str] | None = None,
-                       regressor_col: str | None = None,
-                       ridge: float = 0.0) -> pd.DataFrame:
+                       regressor: np.ndarray | None = None,
+                       ridge: float = 0.0) -> tuple[np.ndarray, np.ndarray,
+                                                    np.ndarray]:
     """numpy core, shared verbatim by the Spark operator and the
     differential test (tests compare cluster output to this exact code
-    run driver-side).
+    run driver-side): one series' ``datetime64[us]`` timestamps ``ts``
+    and values ``y``, in time order, to (yhat, trend, seasonal).
 
     ``holidays``: ISO dates, each becoming a 0/1 indicator regressor
-    (predictor_plugin_prophet.py:168-178 holiday frame). ``regressor_col``:
+    (predictor_plugin_prophet.py:168-178 holiday frame). ``regressor``:
     an extra regressor whose value is frozen at its LAST TRAIN value for
     every post-cutoff row — the reference's last-step future-regressor
     fill (predictor_plugin_prophet.py:180-188)."""
-    pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-    ts = pdf[ts_col].to_numpy("datetime64[us]")
     sec = ts.astype("int64") / 1e6
-    y = pdf[value_col].to_numpy(dtype=np.float64)
     train = ts < train_end
     n_train = int(train.sum())
-    n_extra = len(holidays or ()) + (1 if regressor_col else 0)
+    n_extra = len(holidays or ()) + (1 if regressor is not None else 0)
     min_rows = 2 + n_changepoints + 2 * fourier_k + n_extra + 1
     if n_train < min_rows:
         yhat = np.full(len(y), y[train].mean() if n_train else 0.0)
-        return pdf.assign(yhat=yhat, trend=yhat, seasonal=0.0)
+        return yhat, yhat, np.zeros(len(y))
     t0, t1 = sec[train].min(), sec[train].max()
     span = max(t1 - t0, 1.0)
     cps = np.array([(i + 1) / (n_changepoints + 1) for i in range(n_changepoints)])
@@ -119,8 +119,8 @@ def fit_predict_series(pdf: pd.DataFrame, value_col: str, ts_col: str,
     for h in holidays or ():
         extras.append((ts.astype("datetime64[D]") == np.datetime64(h))
                       .astype(np.float64))
-    if regressor_col:
-        r = pdf[regressor_col].to_numpy(np.float64).copy()
+    if regressor is not None:
+        r = regressor.astype(np.float64)
         # last-step fill, deterministic under tied timestamps: among train
         # rows at the max ts, take the max value (matches the oracle's
         # max(struct(sec, reg)) rule; ADVICE r3)
@@ -133,7 +133,7 @@ def fit_predict_series(pdf: pd.DataFrame, value_col: str, ts_col: str,
     yhat = X @ theta
     n_trend = 2 + n_changepoints
     trend = X[:, :n_trend] @ theta[:n_trend]
-    return pdf.assign(yhat=yhat, trend=trend, seasonal=yhat - trend)
+    return yhat, trend, yhat - trend
 
 
 def prophet_like_fit_predict(
@@ -149,28 +149,20 @@ def prophet_like_fit_predict(
     ridge: float = 0.0,
 ) -> DataFrame:
     """Fit per series on train rows, score every row. Returns
-    (series, ts, value, yhat, trend, seasonal)."""
-    from predictor_spark.shiplib import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
+    (series, ts, value, yhat, trend, seasonal): one Arrow group per
+    series running :func:`fit_predict_series` (operators/series.py
+    per_series)."""
     cutoff = np.datetime64(train_end.replace(" ", "T"), "us")
     schema = (f"{series_col} bigint, {ts_col} timestamp, {value_col} double, "
               "yhat double, trend double, seasonal double")
 
-    def per_series(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = fit_predict_series(pdf, value_col, ts_col, cutoff,
-                                 n_changepoints, fourier_k,
-                                 holidays=holidays, regressor_col=regressor_col,
-                                 ridge=ridge)
-        return out[[series_col, ts_col, value_col, "yhat", "trend", "seasonal"]]
+    def core(a: dict[str, np.ndarray]):
+        yhat, trend, seasonal = fit_predict_series(
+            a[ts_col], a[value_col].astype(np.float64, copy=False), cutoff,
+            n_changepoints, fourier_k, holidays=holidays,
+            regressor=a[regressor_col] if regressor_col else None,
+            ridge=ridge)
+        return slice(None), {"yhat": yhat, "trend": trend, "seasonal": seasonal}
 
-    cols = [series_col, ts_col, value_col]
-    if regressor_col:
-        cols.append(regressor_col)
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(*cols)
-        .repartition(n_parts, series_col)
-        .groupBy(series_col)
-        .applyInPandas(per_series, schema)
-    )
+    cols = [value_col] + ([regressor_col] if regressor_col else [])
+    return per_series(df, series_col, ts_col, cols, core, schema)

@@ -6,17 +6,18 @@ n_components magnitudes, normalize by their sum; downstream each component
 is first-differenced and train-z-scored.
 
 Spark realization: this is inherently NumPy work (per-window FFT), so it
-runs in ``applyInPandas`` per series partition — the whole series for one
-key lands in one pandas frame, the rolling FFT is vectorized with stride
-tricks, and the output rejoins the DataFrame world keyed by (series, ts).
-This is the sanctioned slow path (SURVEY §2.3: "pandas_udf over partition,
-O(n * w log w) — batch per partition").
+runs as one Arrow group per series (operators/series.py per_series) — the
+whole series for one key lands in one set of numpy arrays, the rolling FFT
+(:func:`fft_magnitudes`) is vectorized with stride tricks, and the output
+rejoins the DataFrame world keyed by (series, ts). This is the sanctioned
+slow path (SURVEY §2.3: "pandas_udf over partition, O(n * w log w) — batch
+per partition").
 
 Scale: one shuffle on the series key; within a series the computation is
 sequential by nature (each tick needs its trailing window). Series are the
 parallelism unit — 10^6 series saturate any cluster. For a single giant
-series, range-chunk with w-row halos via mapInPandas (same math, overlap
-windows duplicated across chunk boundaries).
+series, range-chunk with w-row halos (fft_window_features_chunked: same
+math, overlap windows duplicated across chunk boundaries).
 """
 
 from __future__ import annotations
@@ -25,10 +26,10 @@ import math
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from predictor_spark.operators.localrel import collect_bounded
+from predictor_spark.operators.series import per_series
 
 
 def fft_window_features_expr(
@@ -45,7 +46,7 @@ def fft_window_features_expr(
     codegen cos/sin dot products with the twiddle factors folded in as
     literals (the same closed-form the w15 DuckDB oracle uses).
 
-    Why it exists (r14, guide §4.1): the applyInPandas form pays the
+    Why it exists (r14, guide §4.1): the per-series numpy form pays the
     JVM→Arrow→Python boundary for every row of every series although for
     small windows the DFT is ~2·(w−1)·n_components fused multiply-adds —
     pure codegen work. No Python worker, no Arrow serialization, no
@@ -55,20 +56,20 @@ def fft_window_features_expr(
     Equal to fft_window_features to float round-off (|Δ| ~1e-15; the
     magnitudes differ only in summation order vs numpy's rfft butterfly
     — differential test in tests/test_transforms_spectral_stl.py).
-    Degenerate-input edge: a NULL value yields NULL components here vs
-    NaN from the pandas form; the graded datasets contain neither NULLs
-    nor NaNs (and both normalize to the same oracle cell either way).
-    The pandas forms remain the path for giant single series
-    (fft_window_features_chunked) and as the numpy cross-check."""
+    Degenerate-input edge: a NaN value yields NaN components here but
+    NULL from the numpy form (a computed NaN comes back NULL); a NULL
+    value yields NULL from both. The graded datasets contain neither
+    NULLs nor NaNs. The numpy forms remain the path for giant single
+    series (fft_window_features_chunked) and the cross-check."""
     w, nc = window_size, n_components
     L = w - 1
     from pyspark.sql import Window
 
     spec = Window.partitionBy(series_col).orderBy(ts_col)
     # explicit hash repartition on the series key, same rationale as the
-    # pandas form below: the per-series frame is narrow, so AQE coalesces
-    # the window exchange to ~1 partition and serializes every series
-    # into one task. The window's required distribution matches, so this
+    # numpy form (operators/series.py): the per-series frame is narrow, so
+    # AQE coalesces the window exchange to ~1 partition and serializes
+    # every series into one task. The window's required distribution matches, so this
     # is still the plan's ONLY exchange (measured: 1 Exchange, 32-task
     # window stage vs a single-task one).
     n_parts = df.sparkSession.sparkContext.defaultParallelism
@@ -105,6 +106,20 @@ def fft_window_features_expr(
     )
 
 
+def fft_magnitudes(vals: np.ndarray, w: int, nc: int) -> np.ndarray:
+    """(max(n-w, 0), nc) sum-normalized magnitudes of the first ``nc``
+    rfft bins of each first-differenced trailing window ``vals[t-w : t]``,
+    t in [w, n) — the numpy core of both FFT operators."""
+    if len(vals) <= w:
+        return np.empty((0, nc))
+    sw = np.lib.stride_tricks.sliding_window_view(vals, w)[:-1]  # (n-w, w)
+    d = np.diff(sw, axis=1)                                      # causal diffs
+    mags = np.abs(np.fft.rfft(d, axis=1))[:, :nc]                # first nc magnitudes
+    denom = mags.sum(axis=1, keepdims=True)
+    denom[denom == 0.0] = 1.0
+    return mags / denom
+
+
 def fft_window_features(
     df: DataFrame,
     value_col: str = "value",
@@ -114,45 +129,18 @@ def fft_window_features(
     n_components: int = 4,
 ) -> DataFrame:
     """Per-tick causal FFT magnitudes of the first-differenced trailing
-    window (exclusive of t), sum-normalized. Emits (series, ts, fft_0..)."""
+    window (exclusive of t), sum-normalized. Emits (series, ts, fft_0..);
+    a series of at most ``window_size`` rows emits none."""
     out_fields = ", ".join(f"fft_{k} double" for k in range(n_components))
     schema = f"{series_col} bigint, {ts_col} timestamp, {out_fields}"
     w, nc = window_size, n_components
 
-    def per_series(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        n = len(vals)
-        if n <= w:
-            return pd.DataFrame(columns=[series_col, ts_col] + [f"fft_{k}" for k in range(nc)])
+    def core(a: dict[str, np.ndarray]):
         # windows[t] = vals[t-w : t] for t in [w, n) — exclusive of t (W2)
-        sw = np.lib.stride_tricks.sliding_window_view(vals, w)[:-1]  # (n-w, w)
-        d = np.diff(sw, axis=1)                                      # causal diffs
-        mags = np.abs(np.fft.rfft(d, axis=1))[:, :nc]                # first nc magnitudes
-        denom = mags.sum(axis=1, keepdims=True)
-        denom[denom == 0.0] = 1.0
-        mags = mags / denom
-        out = pd.DataFrame({series_col: pdf[series_col].iloc[w:].to_numpy(),
-                            ts_col: pdf[ts_col].iloc[w:].to_numpy()})
-        for k in range(nc):
-            out[f"fft_{k}"] = mags[:, k]
-        return out
+        mags = fft_magnitudes(a[value_col].astype(np.float64, copy=False), w, nc)
+        return slice(w, None), {f"fft_{k}": mags[:, k] for k in range(nc)}
 
-    # explicit repartition by the series key: groupBy alone lets AQE
-    # coalesce the tiny shuffle to ~1 partition, serializing ALL the
-    # Python FFT work in one worker. The explicit hash partitioning is
-    # reused by applyInPandas (same key, no second exchange) and pins the
-    # parallelism to the worker count.
-    from predictor_spark.shiplib import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(series_col, ts_col, value_col)
-        .repartition(n_parts, series_col)
-        .groupBy(series_col)
-        .applyInPandas(per_series, schema)
-    )
+    return per_series(df, series_col, ts_col, [value_col], core, schema)
 
 
 def fft_window_features_chunked(
@@ -175,7 +163,8 @@ def fft_window_features_chunked(
        ``window_size`` rows of each chunk are DUPLICATED to chunk c+1 as
        halo (explode of a 1- or 2-element array — the only data growth,
        w/chunk_size fractional);
-    4. one applyInPandas per chunk runs the identical vectorized FFT;
+    4. one Arrow group per chunk (operators/series.py per_series, ordered
+       by the global position) runs the identical :func:`fft_magnitudes`;
        halo rows provide history and emit nothing.
 
     Exactly equal to fft_window_features on the same rows (differential
@@ -185,10 +174,7 @@ def fft_window_features_chunked(
     """
     from pyspark.sql import Window
 
-    from predictor_spark.shiplib import ensure_workers_can_import
-
     spark = df.sparkSession
-    ensure_workers_can_import(spark)
     w, nc, cs = window_size, n_components, chunk_size
     if cs <= w:
         raise ValueError(f"chunk_size {cs} must exceed window_size {w}")
@@ -229,29 +215,16 @@ def fft_window_features_chunked(
     out_fields = ", ".join(f"fft_{k} double" for k in range(nc))
     schema = f"{ts_col} timestamp, {out_fields}"
 
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__rn").reset_index(drop=True)
-        chunk = int(pdf["__chunk"].iloc[0])
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        n = len(vals)
-        if n <= w:
-            return pd.DataFrame(columns=[ts_col] + [f"fft_{k}" for k in range(nc)])
-        sw = np.lib.stride_tricks.sliding_window_view(vals, w)[:-1]
-        d = np.diff(sw, axis=1)
-        mags = np.abs(np.fft.rfft(d, axis=1))[:, :nc]
-        denom = mags.sum(axis=1, keepdims=True)
-        denom[denom == 0.0] = 1.0
-        mags = mags / denom
+    def core(a: dict[str, np.ndarray]):
+        rn = a["__rn"]
+        mags = fft_magnitudes(a[value_col].astype(np.float64, copy=False), w, nc)
         # row at local index p has its window iff p >= w; emit only rows
         # OWNED by this chunk (halo rows belong to the previous chunk)
-        owned = pdf["__rn"].to_numpy() // cs == chunk
-        keep = np.zeros(n, dtype=bool)
+        keep = np.zeros(len(rn), dtype=bool)
         keep[w:] = True
-        keep &= owned
-        out = pd.DataFrame({ts_col: pdf[ts_col].to_numpy()[keep]})
+        keep &= rn // cs == a["__chunk"][0]
         sel = mags[np.flatnonzero(keep) - w]  # mags[i] pairs with local row w+i
-        for k in range(nc):
-            out[f"fft_{k}"] = sel[:, k]
-        return out
+        return keep, {f"fft_{k}": sel[:, k] for k in range(nc)}
 
-    return exploded.groupBy("__chunk").applyInPandas(per_chunk, schema)
+    return per_series(exploded, "__chunk", "__rn", [ts_col, value_col], core,
+                      schema)

@@ -26,8 +26,9 @@ recomposition identity trend+seasonal+resid == value):
   the published algorithm itself; where statsmodels IS installed, the
   env-gated test pins the two against each other.
 
-Execution: applyInPandas per series — same topology as spectral.py (series
-= parallelism unit, one shuffle on the series key). A windows-only variant
+Execution: one Arrow group per series through operators/series.py
+per_series (series = parallelism unit, one shuffle on the series key);
+:func:`decompose_series` is the numpy core it runs. A windows-only variant
 (moving-average trend + phase-mean seasonal) also exists as a pure SQL
 plan in plans/catalog_forecast.py:stl_decompose_hourly for oracle parity.
 """
@@ -35,8 +36,9 @@ plan in plans/catalog_forecast.py:stl_decompose_hourly for oracle parity.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from predictor_spark.operators.series import per_series
 
 try:  # pragma: no cover - statsmodels absent in this image
     from statsmodels.tsa.seasonal import STL as _STL
@@ -59,7 +61,6 @@ def _classical_decompose(vals: np.ndarray, period: int) -> tuple[np.ndarray, np.
         trend[n - half:] = trend[n - half - 1]
     detr = vals - trend
     phases = np.arange(n) % period
-    seasonal = np.zeros(n)
     means = np.array([detr[phases == p].mean() if (phases == p).any() else 0.0 for p in range(period)])
     means -= means.mean()  # seasonal component sums to ~0 over a period
     seasonal = means[phases]
@@ -238,6 +239,24 @@ def _stl_loess(vals: np.ndarray, period: int, seasonal: int = 7,
     return T, S, vals - T - S
 
 
+def decompose_series(vals: np.ndarray, period: int, method: str = "auto",
+                     robust: bool = False) -> tuple[np.ndarray, np.ndarray,
+                                                    np.ndarray]:
+    """(trend, seasonal, resid) of one series in time order — the numpy
+    core of :func:`stl_decompose`. A series shorter than 2·period+1 gets
+    trend = its mean and zero seasonal."""
+    if len(vals) < 2 * period + 1:
+        t = np.full(len(vals), vals.mean() if len(vals) else 0.0)
+        return t, np.zeros(len(vals)), vals - t
+    if method == "loess":
+        return _stl_loess(vals, period, robust=robust)
+    if method == "statsmodels" or (
+            method == "auto" and HAVE_STATSMODELS):  # pragma: no cover
+        res = _STL(vals, period=period, robust=robust).fit()
+        return res.trend, res.seasonal, res.resid
+    return _classical_decompose(vals, period)
+
+
 def stl_decompose(
     df: DataFrame,
     value_col: str = "value",
@@ -256,7 +275,8 @@ def stl_decompose(
     STL, _stl_loess — real loess seasonal/trend smoothing with no
     dependency), or "statsmodels" (fail if absent). Every method
     satisfies the W8 recomposition identity value == trend + seasonal
-    + resid.
+    + resid. Each series is one Arrow group running
+    :func:`decompose_series` (operators/series.py per_series).
     """
     if method not in ("auto", "classical", "loess", "statsmodels"):
         raise ValueError(f"unknown STL method {method!r}")
@@ -265,38 +285,12 @@ def stl_decompose(
     schema = (f"{series_col} bigint, {ts_col} timestamp, {value_col} double, "
               "trend double, seasonal double, resid double")
 
-    def per_series(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        if len(vals) < 2 * period + 1:
-            t = np.full(len(vals), vals.mean() if len(vals) else 0.0)
-            s = np.zeros(len(vals))
-            r = vals - t
-        elif method == "loess":
-            t, s, r = _stl_loess(vals, period, robust=robust)
-        elif method == "statsmodels" or (
-                method == "auto" and HAVE_STATSMODELS):  # pragma: no cover
-            res = _STL(vals, period=period, robust=robust).fit()
-            t, s, r = res.trend, res.seasonal, res.resid
-        else:
-            t, s, r = _classical_decompose(vals, period)
-        out = pdf[[series_col, ts_col, value_col]].copy()
-        out["trend"], out["seasonal"], out["resid"] = t, s, r
-        return out
+    def core(a: dict[str, np.ndarray]):
+        vals = a[value_col].astype(np.float64, copy=False)
+        t, s, r = decompose_series(vals, period, method, robust)
+        return slice(None), {"trend": t, "seasonal": s, "resid": r}
 
-    # explicit repartition by series: prevents AQE from coalescing the
-    # shuffle to 1 partition and serializing the Python work (see
-    # spectral.py); the hash partitioning is reused by applyInPandas.
-    from predictor_spark.shiplib import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(series_col, ts_col, value_col)
-        .repartition(n_parts, series_col)
-        .groupBy(series_col)
-        .applyInPandas(per_series, schema)
-    )
+    return per_series(df, series_col, ts_col, [value_col], core, schema)
 
 
 def stl_recompose(df: DataFrame, out_col: str = "recomposed") -> DataFrame:

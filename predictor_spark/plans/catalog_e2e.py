@@ -41,12 +41,13 @@ _TYPES = ("click", "view", "purchase", "signup", "error")
 
 
 def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
-    from predictor_spark.sources.tables import fixture_dir, load_table
+    from predictor_spark.sources.tables import (
+        fixture_dir, load_table, new_generation)
 
     d = fixture_dir(sf_dir, "events", "e2e_csv")
     if glob.glob(f"{d}/*.csv"):
         return d
-    shutil.rmtree(d, ignore_errors=True)
+    new_generation(d)
     ev = load_table(spark, sf_dir, "events")
     expr = None
     for i, t in enumerate(_TYPES):

@@ -426,7 +426,7 @@ def w15_fft_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (phase2_6_preprocessor.py:200-294). r14 (guide §4.1): the registered
     row runs the closed-form codegen DFT (fft_window_features_expr — one
     WindowExec of 16 lags, twiddle factors as literals, no Python
-    boundary); the applyInPandas numpy form stays as the giant-series /
+    boundary); the per-series numpy form stays as the giant-series /
     cross-check path (w15_fft_chunked row + the numpy differential test
     in tests/test_transforms_spectral_stl.py). Oracle: the DFT written
     out as explicit per-component cos/sin sums over the window list
@@ -500,16 +500,16 @@ def w15_fft_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stl_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W7 — per-series STL-style decomposition via applyInPandas
-    (statsmodels when present, classical fallback otherwise; this image
-    has no statsmodels, so the oracle replays the classical fallback
-    exactly: centered 25-tick MA trend computed as a windowed average
-    with edges clamped to the first/last full-window value
-    [stl.py:36-39], phase-mean seasonal centered to sum 0, resid the
-    remainder; series shorter than 2·period+1 get trend = series mean
-    and zero seasonal [stl.py:71-74]). The W8 recomposition identity is
-    asserted in tests; the windows-only SQL variant is
-    stl_decompose_hourly."""
+    """W7 — per-series STL-style decomposition, one Arrow group per series
+    through operators/series.py per_series (statsmodels when present,
+    classical fallback otherwise; this image has no statsmodels, so the
+    oracle replays the classical fallback exactly: centered 25-tick MA
+    trend computed as a windowed average with edges clamped to the
+    first/last full-window value [stl._classical_decompose], phase-mean
+    seasonal centered to sum 0, resid the remainder; series shorter than
+    2·period+1 get trend = series mean and zero seasonal
+    [stl.decompose_series]). The W8 recomposition identity is asserted
+    in tests; the windows-only SQL variant is stl_decompose_hourly."""
     from predictor_spark.operators.stl import stl_decompose
 
     ev = _t(spark, sf_dir, "events")
@@ -633,8 +633,8 @@ def stl_strength_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     family; neither → persistence/AR) upstream of
     model_select_per_series.
 
-    Scale: the decomposition cost IS stl_per_series (one applyInPandas
-    pass per series); the strengths add one var_samp aggregate over its
+    Scale: the decomposition cost IS stl_per_series (one Arrow group per
+    series through operators/series.py); the strengths add one var_samp aggregate over its
     output.  The oracle wraps the decomposition oracle as a subquery, so
     both layers stay in lockstep by construction.
     """

@@ -902,9 +902,11 @@ def _prophet_oracle(holidays: tuple[str, ...] = (),
 def prophet_like_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prophet-style per-series model (operators/prophet_like.py):
     piecewise-linear trend + daily Fourier seasonality by OLS normal
-    equations, fit on train, scored on held-out rows. The oracle unrolls
-    the identical Gaussian elimination in SQL (_prophet_oracle); the
-    pytest additionally replays the numpy core driver-side bit-for-bit."""
+    equations, fit on train, scored on held-out rows; each series is one
+    Arrow group running the numpy core (operators/series.py per_series).
+    The oracle unrolls the identical Gaussian elimination in SQL
+    (_prophet_oracle); the pytest additionally replays the numpy core
+    driver-side bit-for-bit."""
     from predictor_spark.operators.prophet_like import prophet_like_fit_predict
 
     ev = _t(spark, sf_dir, "events")

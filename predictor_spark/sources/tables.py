@@ -8,8 +8,10 @@ filters/projections expressible (no opaque UDF wrappers around filters).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -64,12 +66,25 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     return "|".join(parts)
 
 
+def _md5(text: str) -> str:
+    return hashlib.md5(text.encode()).hexdigest()[:12]
+
+
 def fixture_dir(sf_dir: str, name: str, tag: str) -> str:
     """/tmp directory for the fixture ``tag`` derived from table ``name``
-    at ``sf_dir``, keyed by the table's content fingerprint."""
-    fp = table_fingerprint(sf_dir, name)
-    key = hashlib.md5(f"{sf_dir}/{tag}/{fp}".encode()).hexdigest()[:12]
-    return f"/tmp/predictor_spark_fixtures/{key}"
+    at ``sf_dir``: ``<fixture key>/<generation>``, where the generation is
+    keyed by the table's content fingerprint."""
+    gen = _md5(table_fingerprint(sf_dir, name))
+    return f"/tmp/predictor_spark_fixtures/{_md5(f'{sf_dir}/{name}/{tag}')}/{gen}"
+
+
+def new_generation(d: str) -> None:
+    """Clear the fixture dir ``d`` (from :func:`fixture_dir`) before it is
+    staged, and remove the fixture's other generations: a regenerated
+    table leaves no stale copy behind."""
+    parent = os.path.dirname(d)
+    for old in glob.glob(f"{parent}/*"):
+        shutil.rmtree(old, ignore_errors=True)
 
 
 def read_nanos_as_long(spark: SparkSession) -> None:

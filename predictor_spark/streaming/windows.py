@@ -33,7 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from predictor_spark.operators.localrel import collect_bounded, local_df
 from predictor_spark.sources.tables import (
-    canonical_ts, fixture_dir, load_table, read_nanos_as_long)
+    canonical_ts, fixture_dir, load_table, new_generation, read_nanos_as_long)
 
 # footer key under which Spark's parquet writer stores the row schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -49,13 +49,13 @@ def stage_chunks(spark: SparkSession, sf_dir: str, table: str, tag: str,
     The directory is keyed by ``tag``, ``n`` and the table's content
     fingerprint (a regenerated table never serves stale chunks, ADVICE
     r3).  A complete directory is returned as is, without a Spark job;
-    otherwise it is cleared and ``parts()`` — called only then, so a
-    row's cut-point collect stays lazy — gives the ``n`` bands, each
-    written as one file."""
+    otherwise it is cleared, its older generations are removed, and
+    ``parts()`` — called only then, so a row's cut-point collect stays
+    lazy — gives the ``n`` bands, each written as one file."""
     d = fixture_dir(sf_dir, table, f"{tag}/{n}")
     if len(glob.glob(f"{d}/chunk_*.parquet")) == n:
         return d
-    shutil.rmtree(d, ignore_errors=True)
+    new_generation(d)
     bands = parts()
     if len(bands) != n:
         raise ValueError(f"{tag}: {len(bands)} bands for {n} chunks")
@@ -78,9 +78,10 @@ def _stream_dir(sf_dir: str) -> str:
     if os.path.isdir(table):
         return table
     d = fixture_dir(sf_dir, "events", "link")
-    os.makedirs(d, exist_ok=True)
     link = f"{d}/events.parquet"
     if not os.path.exists(link):
+        new_generation(d)
+        os.makedirs(d, exist_ok=True)
         os.symlink(table, link)
     return d
 

@@ -7,7 +7,7 @@ clone holds the per-query conf.
 - the stager's contract: a complete directory is reused without a Spark
   job, a directory missing a chunk is staged again, chunk mtimes rise in
   chunk order, and a regenerated source table is never served stale
-  chunks;
+  chunks and leaves no stale generation behind;
 - ``stream_score_ar1`` leaves no cached relation and no output
   directory behind, also when its stream fails.
 """
@@ -115,7 +115,7 @@ def test_stager_reuses_a_complete_dir_and_restages_a_missing_chunk(
         restaged = _mtimes(d, 3)
         assert restaged[0] < restaged[1] < restaged[2]
     finally:
-        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
 
 
 def _stager(name: str):
@@ -138,7 +138,7 @@ def test_stager_restages_a_regenerated_table(spark, tmp_path, name):
     """Rewrite the source parquet at the same path with every other row:
     the next staging must carry exactly the new table's rows (the dedup
     chunks also carry refetch copies, whose ids lie past the table's
-    largest doc_id)."""
+    largest doc_id), and only the new generation stays on disk."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -160,9 +160,10 @@ def test_stager_restages_a_regenerated_table(spark, tmp_path, name):
             hi = pc.max(fewer["doc_id"]).as_py()
             chunks = chunks.filter(F.col("doc_id") <= hi)
         assert chunks.count() == fewer.num_rows < full.num_rows
+        key_dir, gen = os.path.split(dirs[-1])
+        assert dirs[0] != dirs[-1] and os.listdir(key_dir) == [gen]
     finally:
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(os.path.dirname(dirs[0]), ignore_errors=True)
 
 
 def _cached_relations(spark) -> int:

@@ -177,9 +177,15 @@ def test_prophet_like_matches_numpy_and_recovers_structure(spark):
     cutoff = np.datetime64("2024-01-22T00:00:00", "us")
     import pandas as pd
 
+    def replay(g):
+        g = g.sort_values("ts").reset_index(drop=True)
+        yhat, _, _ = fit_predict_series(
+            g["ts"].to_numpy("datetime64[us]"), g["value"].to_numpy(np.float64),
+            cutoff, 3, 2)
+        return g.assign(yhat=yhat)
+
     want = (
-        pd.concat([fit_predict_series(g, "value", "ts", cutoff, 3, 2)
-                   for _, g in pdf.groupby("user_id")])
+        pd.concat([replay(g) for _, g in pdf.groupby("user_id")])
         .sort_values(["user_id", "ts"]).reset_index(drop=True)
     )
     assert np.array_equal(got["yhat"].to_numpy(), want["yhat"].to_numpy())
@@ -256,7 +262,7 @@ def test_loess_stl_robust_downweights_outliers():
 
 
 def test_stl_decompose_loess_method_on_spark(spark):
-    """method="loess" through the applyInPandas seam: distributed
+    """method="loess" through the per-series Arrow seam: distributed
     execution preserves the recomposition identity and beats the
     classical seasonal on a modulated series."""
     rng = np.random.default_rng(2)
