@@ -12,3 +12,6 @@ Architecture (see SURVEY.md):
 __version__ = "0.1.0"
 
 from predictor_spark.session import get_spark  # noqa: F401
+from predictor_spark.shiplib import install_worker_zip_guard
+
+install_worker_zip_guard()

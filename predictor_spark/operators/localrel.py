@@ -10,8 +10,11 @@ or ``arrow_df`` for a result whose schema is a StructType).
 ``arrow_df`` plans as a JVM ``LocalTableScan``: a collect over it runs
 no job and no action over it runs a Python worker.  ``local_df`` is a
 Python RDD, and every action over it pays a Python-worker round-trip.
-Median noop-write action at local[4], 8 runs: 70 / 96 ms for
-``arrow_df`` against 229 / 344 ms for ``local_df`` on 47 / 20,000 rows.
+Median noop-write action at local[4] on a 4-core VM, 8 runs after 2
+warm-ups, two runs each: 48-57 / 133-152 ms for ``arrow_df`` against
+100-138 / 149-174 ms for ``local_df`` on 47 / 20,000 rows, in workers
+that skip the per-task zip re-read (``shiplib.stat_guarded``);
+229-314 / 428 ms for ``local_df`` in workers that do not.
 
 ``local_df`` builds ONE slice.  ``spark.createDataFrame(rows)``
 parallelizes into ``defaultParallelism`` slices of a Python RDD, and

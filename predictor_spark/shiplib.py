@@ -8,6 +8,11 @@ may launch Spark from any cwd without the repo on PYTHONPATH; calling
 package once and registers it with ``sparkContext.addPyFile`` — the
 Spark-native way to ship a library to executors (works identically on a
 real cluster, where workers are remote machines).
+
+It also owns how a Python worker re-checks what it imports between
+tasks: ``install_worker_zip_guard`` (run by ``import predictor_spark``)
+keeps a reused worker from re-reading every zip archive on its
+``sys.path`` at the start of each task.
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ import os
 import shutil
 import tempfile
 import threading
+import zipimport
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -62,3 +68,63 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
             return
         sc.addPyFile(_build_zip())
         _shipped_apps.add(app_id)
+
+
+def _archive_stat(archive: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+def stat_guarded(invalidate):
+    """``zipimporter.invalidate_caches`` that re-reads an archive's
+    directory only when its ``(st_mtime_ns, st_size, st_ino)`` changed
+    since the last read.
+
+    pyspark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` before every task, and CPython
+    3.11's ``invalidate`` re-reads the whole archive directory once per
+    importer: a warm worker holds one importer per package it imported
+    from ``pyspark.zip`` (1,328 entries) and the shipped package zip:
+    0.14 s of a 0.35 s identity ``mapInArrow`` at local[4] (SCALING.md,
+    "The Python boundary").  An archive whose stat is unchanged has the
+    directory read last time; the importers of one archive share that
+    read.  Spark's own zips never change in place and
+    :func:`_build_zip` names the package zip by its content hash, so a
+    changed archive always shows a new path or a new stat.  A missing
+    archive stats as ``None`` and is read (and fails) as before."""
+    last: dict[str, tuple] = {}   # archive -> (stat, directory); one per zip on sys.path
+
+    def invalidate_caches(self):
+        stat = _archive_stat(self.archive)
+        seen = last.get(self.archive)
+        if stat is not None and seen is not None and seen[0] == stat:
+            self._files = seen[1]
+            return
+        invalidate(self)
+        if stat is not None:
+            last[self.archive] = (stat, self._files)
+
+    invalidate_caches.stat_guarded = True
+    return invalidate_caches
+
+
+def zip_guard_installed() -> bool:
+    return getattr(zipimport.zipimporter.invalidate_caches,
+                   "stat_guarded", False)
+
+
+def install_worker_zip_guard() -> None:
+    """Put :func:`stat_guarded` on ``zipimporter`` in a Python worker,
+    never on the driver, where ``invalidate_caches`` re-reads the archive
+    at once (CPython 3.11; later versions re-read lazily).  ``FileFinder``
+    invalidation, which makes new files on ``sys.path`` visible, is
+    untouched."""
+    from pyspark import SparkFiles
+
+    invalidate = zipimport.zipimporter.invalidate_caches
+    if (SparkFiles._is_running_on_worker and not zip_guard_installed()
+            and "_read_directory" in invalidate.__code__.co_names):
+        zipimport.zipimporter.invalidate_caches = stat_guarded(invalidate)

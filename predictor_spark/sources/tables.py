@@ -4,6 +4,11 @@ Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings. Parquet scans get predicate pushdown + column
 pruning from Catalyst for free — operators downstream must keep their
 filters/projections expressible (no opaque UDF wrappers around filters).
+
+Every table read goes through one reader, ``_read_parquet``, which
+memoizes the schema Spark infers from the parquet footers: a repeat read
+of an unchanged table plans with ``.schema(...)`` and starts no
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -12,8 +17,9 @@ import glob
 import hashlib
 import os
 import shutil
+import threading
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 TABLES = (
     "region",
@@ -87,19 +93,68 @@ def new_generation(d: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+#: the parquet read settings that change the schema Spark infers from a
+#: footer; their session values are part of the schema memo's key
+_SCHEMA_CONFS = (
+    NANOS_AS_LONG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
 def read_nanos_as_long(spark: SparkSession) -> None:
     """Some generators write TIMESTAMP(NANOS) parquet (pandas
     datetime64[ns]), which Spark rejects by default; this lets those
     read as long for canonical_ts to convert."""
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(NANOS_AS_LONG, "true")
     except Exception:  # pragma: no cover - immutable conf on some builds
         pass
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+#: ten tables at a few scales; a rewritten table replaces its own entry,
+#: and past the bound the oldest entry goes
+MAX_SCHEMAS = 64
+#: (absolute path, fingerprint, settings) -> inferred StructType.  It
+#: holds metadata only: a memoized DataFrame would hand two reads the
+#: same exprIds and break self-joins.  A StructType holds no JVM handle,
+#: so one application's entry is valid in the next.
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+_memo_lock = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``spark.read.parquet`` of table ``name`` under nanosAsLong, with
+    the schema from the memo when the table and the read settings are
+    unchanged.  A path this process cannot stat (a remote store) is
+    inferred on every read."""
     read_nanos_as_long(spark)
-    return canonical_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        key = (os.path.abspath(path), table_fingerprint(sf_dir, name),
+               tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    except OSError:
+        return spark.read.parquet(path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _memo_lock:
+        # a rewritten table's older generations
+        for stale in [k for k in _SCHEMA_MEMO
+                      if k[0] == key[0] and k[1] != key[1]]:
+            del _SCHEMA_MEMO[stale]
+        while len(_SCHEMA_MEMO) >= MAX_SCHEMAS:
+            del _SCHEMA_MEMO[next(iter(_SCHEMA_MEMO))]
+        _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return canonical_ts(_read_parquet(spark, sf_dir, name))
 
 
 def load_events_range(
@@ -117,8 +172,7 @@ def load_events_range(
     a day and scanning 100 TB. Bounds are ``lo <= ts < hi`` (UTC)."""
     from datetime import datetime, timezone
 
-    read_nanos_as_long(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, sf_dir, "events")
     ts_type = dict(df.dtypes).get("ts")
 
     def ns(bound: str) -> int:

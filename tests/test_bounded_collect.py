@@ -8,7 +8,8 @@ that invariant at three levels:
 - a lint over ``plans/``, ``operators/`` and ``streaming/`` that fails
   on any raw row fetch (``.collect()``, ``.toPandas()``, ``.take()``,
   ``.head()``, ``.toLocalIterator()``, argument-less ``.first()``)
-  outside localrel.py;
+  outside localrel.py; a ``take``/``head`` on a pyarrow object is
+  worker-side and does not count;
 - the helper's own contract: overflow raises with the site and the
   bound, and it launches exactly the Spark jobs a plain ``.collect()``
   launches;
@@ -32,26 +33,96 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "predictor_spark"
 _FETCHES = {"collect", "toPandas", "take", "head", "toLocalIterator"}
 
 
+def _rooted(expr: ast.expr, names: set[str]) -> bool:
+    """Whether ``expr`` is an attribute, call or subscript chain whose
+    root is one of ``names`` (``tbl.column(c)``, ``pc.sort_indices(a)``)."""
+    while isinstance(expr, (ast.Attribute, ast.Call, ast.Subscript)):
+        expr = expr.func if isinstance(expr, ast.Call) else expr.value
+    return isinstance(expr, ast.Name) and expr.id in names
+
+
+def _own_nodes(scope: ast.AST):
+    """The nodes of ``scope``'s body, not entering nested functions."""
+    todo = list(ast.iter_child_nodes(scope))
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.Lambda)):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _arrow_scope(fn: ast.AST, outer: set[str]) -> set[str]:
+    """The names that hold pyarrow objects inside function ``fn``: a
+    parameter annotated with a pyarrow type, or a name every binding of
+    which is a plain assignment rooted in a pyarrow module or another
+    such name. Any other binding shadows an outer Arrow name."""
+    arrow: dict[str, bool] = {}
+    a = fn.args
+    for arg in (*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg):
+        if arg is not None:
+            arrow[arg.arg] = (arg.annotation is not None
+                              and _rooted(arg.annotation, outer))
+    nodes = sorted(_own_nodes(fn), key=lambda n: (getattr(n, "lineno", 0),
+                                                  getattr(n, "col_offset", 0)))
+    assigned = {id(t) for n in nodes if isinstance(n, ast.Assign)
+                for t in n.targets if isinstance(t, ast.Name)}
+    for node in nodes:
+        if isinstance(node, ast.Assign):
+            known = (outer - arrow.keys()) | {n for n, ok in arrow.items() if ok}
+            ok = _rooted(node.value, known)
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    arrow[t.id] = arrow.get(t.id, True) and ok
+        elif (isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store)
+              and id(node) not in assigned):
+            arrow[node.id] = False
+    return (outer - arrow.keys()) | {n for n, ok in arrow.items() if ok}
+
+
+def row_fetches(source: str) -> list[tuple[int, str]]:
+    """``(line, attr)`` of every raw row fetch in ``source``.
+    ``F.first(col)`` is an aggregate, not a fetch: ``first`` counts only
+    without arguments. A ``take``/``head`` on a pyarrow object (a
+    worker-side ``ChunkedArray.take``) fetches nothing to the driver and
+    does not count."""
+    tree = ast.parse(source)
+    modules = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            modules |= {al.asname or al.name.split(".")[0] for al in node.names
+                        if al.name.split(".")[0] == "pyarrow"}
+        elif isinstance(node, ast.ImportFrom) and \
+                (node.module or "").split(".")[0] == "pyarrow":
+            modules |= {al.asname or al.name for al in node.names}
+    hits = []
+
+    def visit(node: ast.AST, arrow: set[str]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.Lambda)):
+            arrow = _arrow_scope(node, arrow)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            attr = node.func.attr
+            if (attr in _FETCHES and not _rooted(node.func.value, arrow)) or (
+                    attr == "first" and not node.args and not node.keywords):
+                hits.append((node.lineno, attr))
+        for child in ast.iter_child_nodes(node):
+            visit(child, arrow)
+
+    visit(tree, modules)
+    return sorted(hits)
+
+
 def raw_row_fetches(root: pathlib.Path) -> list[str]:
     """``path:line .attr()`` for every raw row fetch under the three
-    driver-finish packages, localrel.py excepted.  ``F.first(col)`` is
-    an aggregate, not a fetch: ``first`` counts only without
-    arguments."""
+    driver-finish packages, localrel.py excepted."""
     hits = []
     for sub in ("plans", "operators", "streaming"):
         for path in sorted((root / sub).rglob("*.py")):
             if path.name == "localrel.py" and sub == "operators":
                 continue
-            for node in ast.walk(ast.parse(path.read_text())):
-                if not (isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)):
-                    continue
-                attr = node.func.attr
-                if attr in _FETCHES or (
-                        attr == "first" and not node.args
-                        and not node.keywords):
-                    hits.append(f"{path.relative_to(root)}:{node.lineno} "
-                                f".{attr}()")
+            hits += [f"{path.relative_to(root)}:{line} .{attr}()"
+                     for line, attr in row_fetches(path.read_text())]
     return hits
 
 
@@ -61,6 +132,50 @@ def test_no_raw_row_fetch_outside_localrel():
         "rows reach the driver only through "
         "operators.localrel.collect_bounded (a named bound per site): "
         + ", ".join(hits))
+
+
+#: every line that ends ``# fetch`` holds one raw row fetch; no other does
+_LINT_CASES = """
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import functions as F
+
+
+def driver_side(spark, df):
+    df.take(5)  # fetch
+    df.head()  # fetch
+    spark.range(3).take(1)  # fetch
+    df.select(F.first("v"))
+    df.first()  # fetch
+
+
+def worker_side(tbl: pa.Table, order):
+    col = tbl.column("v")
+    col.take(order)
+    tbl.take(order)
+    pc.sort_indices(col).take(order)
+    pa.chunked_array([[1, 2]]).take([0])
+
+
+def rebound(tbl: pa.Table, df):
+    col = tbl.column("v")
+    col = df
+    col.take(5)  # fetch
+    for tbl in df:
+        tbl.take(1)  # fetch
+
+
+def shadowed(tbl: pa.Table):
+    def inner(tbl):
+        return tbl.head()  # fetch
+    return tbl.take([0]), (lambda tbl: tbl.head())  # fetch
+"""
+
+
+def test_lint_tells_an_arrow_receiver_from_a_dataframe():
+    want = [i for i, line in enumerate(_LINT_CASES.splitlines(), 1)
+            if line.endswith("# fetch")]
+    assert [line for line, _ in row_fetches(_LINT_CASES)] == want
 
 
 def test_collect_bounded_overflow_names_site_and_bound(spark):
