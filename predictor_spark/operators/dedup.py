@@ -18,7 +18,7 @@ Scale design (the whole point of these at 100 TB):
   picks a broadcast join.  The raw edges are checkpointed and counted
   by one bounded fetch; up to ``MAX_CC_EDGES`` edges (the near-dup
   graph below SF ~80) union-find on the driver labels them and the
-  result re-enters as an Arrow local relation, past it the distributed
+  result re-enters through ``local_df``, past it the distributed
   rounds run on the same checkpoint.  Both paths are exact or raise.
 
 Hashes use the engine-portable md5-prefix scheme (operators/text.py) when
@@ -33,7 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from predictor_spark.operators.localrel import (
-    ONE_ROW, arrow_df, collect_bounded, fetch_bounded)
+    ONE_ROW, collect_bounded, fetch_bounded, local_df)
 from predictor_spark.operators.text import portable_hash, shingles_col
 
 #: modulus for the universal-hash family (a*h + b) % MOD; prime, and small
@@ -367,7 +367,7 @@ def _components_on_driver(raw: DataFrame, rows: list) -> DataFrame:
         raw.select(F.col(b).alias("vertex"))).schema["vertex"]
     schema = T.StructType([vertex, T.StructField(
         "component", vertex.dataType, vertex.nullable)])
-    return arrow_df(raw.sparkSession, [(v, find(v)) for v in parent], schema)
+    return local_df(raw.sparkSession, [(v, find(v)) for v in parent], schema)
 
 
 def _unconverged(op: str, max_iter: int):

@@ -5,26 +5,21 @@ bounded by design (``collect_bounded``, the only row fetch under
 non-raising form for a caller with a distributed path past the bound),
 finishes on the driver (``spark_round`` where Spark's rounding must be
 replayed), and re-enters the result as a local relation (``local_df``,
-or ``arrow_df`` for a result whose schema is a StructType).
+the only way driver-side rows re-enter Spark).
 
-``arrow_df`` plans as a JVM ``LocalTableScan``: a collect over it runs
-no job and no action over it runs a Python worker.  ``local_df`` is a
-Python RDD, and every action over it pays a Python-worker round-trip.
-Median noop-write action at local[4] on a 4-core VM, 8 runs after 2
-warm-ups, two runs each: 48-57 / 133-152 ms for ``arrow_df`` against
-100-138 / 149-174 ms for ``local_df`` on 47 / 20,000 rows, in workers
-that skip the per-task zip re-read (``shiplib.stat_guarded``);
-229-314 / 428 ms for ``local_df`` in workers that do not.
-
-``local_df`` builds ONE slice.  ``spark.createDataFrame(rows)``
-parallelizes into ``defaultParallelism`` slices of a Python RDD, and
-every action then pays one task and one Python-worker round-trip per
-slice: measured at local[32], a 1-row frame cost ~0.58 s per noop
-materialization against ~0.03 s in one slice.  The rows are the same
-pickled values and keep their order; the only layout difference is one
-partition instead of N, which matters ONLY to a float aggregation's
-partial-sum grouping (every caller either selects/joins per row or
-aggregates exact integers/decimals).
+``local_df`` checks and converts the rows on the driver and hands Spark
+one ``pyarrow.Table``, so no action over the frame starts a Python
+worker.  Up to ``spark.sql.execution.arrow.localRelationThreshold``
+bytes of Arrow batches (``session.get_spark`` sets 256 KiB, ~8k rows of
+four columns) it plans as a JVM ``LocalTableScan``, whose collect runs
+no job; past it Spark ships the batches as an RDD, one partition per
+``maxRecordsPerBatch`` rows.  Build plus one join-aggregate action at
+local[4] on a 4-core VM, medians of 7 interleaved runs, for 47 / 20k /
+100k / 300k / 1M rows of four columns: 0.27 / 0.33 / 0.83 / 1.61 /
+5.53 s, against 0.35 / 0.40 / 0.97 / 1.66 / 5.16 s (quartiles 4.92-5.44)
+for the one-slice Python RDD it replaced.  A float aggregate over the
+frame may sum partials from several partitions, so every caller either
+selects/joins per row, aggregates exact integers/decimals or rounds.
 """
 
 from __future__ import annotations
@@ -44,7 +39,11 @@ def fetch_bounded(df: DataFrame, max_rows: int) -> list:
     It launches the same Spark jobs as ``.collect()``: a plain
     ``limit(n).collect()`` is Spark's incremental take (a second job
     when the first partition holds fewer than n rows), so the limited
-    plan is read in one pass through ``.rdd``."""
+    plan is read in one pass through ``.rdd``.  A frame that is itself
+    a local relation (``isLocal()``) is limited and collected on the
+    driver, with no job, as its ``.collect()`` is."""
+    if df.isLocal():
+        return df.limit(max_rows + 1).collect()
     return df.limit(max_rows + 1).rdd.collect()
 
 
@@ -73,28 +72,24 @@ def spark_round(x: float, dp: int) -> float:
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` as a ONE-slice frame.
-
-    ``rows``: a list (empty lists fall back to the plain path, which
-    handles the no-partition edge).  ``schema``: DDL string or
-    StructType, exactly as createDataFrame takes it.
-    """
-    rows = list(rows)
-    if not rows:
-        return spark.createDataFrame(rows, schema)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def arrow_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
-    """``rows`` (tuples in ``schema``'s field order) as a local relation
-    built from a ``pyarrow.Table``: it keeps ``schema``'s types and
-    nullability, collecting it runs no Spark job, and no action over it
-    starts a Python worker."""
+    """``spark.createDataFrame(rows, schema)`` built from one
+    ``pyarrow.Table``.  ``rows``: tuples, lists, dicts or ``Row``s;
+    ``schema``: DDL string or StructType.  Each row passes
+    createDataFrame's type verifier (a bad value raises here) and its
+    ``toInternal`` conversion (a naive datetime reads in the process's
+    local zone), both on the driver."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    cols = list(zip(*rows)) or [()] * len(schema.fields)
-    return spark.createDataFrame(pa.Table.from_pydict(
-        dict(zip(schema.names, map(list, cols))),
-        schema=to_arrow_schema(schema)))
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    verify = T._make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*internal)) or [()] * len(schema.fields)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema), schema)

@@ -126,9 +126,8 @@ def two_phase_row_number(df: DataFrame, part_cols: list[str],
         for b in sorted(bmap):
             offs.append((*p, b, run))
             run += bmap[b]
-    # explicit schema: RDD input (single-slice local relation) must not
-    # trigger a driver-side inference pass; types mirror the old
-    # inference (part cols as in df, Python ints -> long)
+    # explicit schema: local_df takes no inference pass; types mirror
+    # the old inference (part cols as in df, Python ints -> long)
     from pyspark.sql import types as T
     off_df = local_df(
         spark, offs,

@@ -30,7 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from predictor_spark.operators.localrel import arrow_df, collect_bounded
+from predictor_spark.operators.localrel import collect_bounded, local_df
 from predictor_spark.plans.catalog import query
 
 _CUTOFF = "2024-01-22 00:00:00"
@@ -224,4 +224,4 @@ def e2e_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "fact_performance"):
             spark.catalog.dropTempView(view)
         shutil.rmtree(root, ignore_errors=True)
-    return arrow_df(spark, rows, out.schema)
+    return local_df(spark, rows, out.schema)

@@ -85,8 +85,7 @@ def _bt_iter_sql() -> str:
 
 def _bt_strengths(spark: SparkSession, sf_dir: str):
     """((t, p) strengths after the unrolled MM iterations (sum 1),
-    directed-win-count frame (i, j, w) as a single-slice LOCAL
-    relation).
+    directed-win-count frame (i, j, w) as a LOCAL relation).
 
     r15 (guide §1.2/§2.4): the model state is 5 strengths driven by at
     most 20 directed pair counts, so ONE distributed job collects the
