@@ -247,34 +247,6 @@ def main() -> None:
 
     qs = entry_mod.queries()
 
-    # drift attribution (VERDICT r10 #5): SPARK_GRAFT_BENCH_SUBSET=<path
-    # to a prior BENCH_r*.json> restricts the sweep to that round's rows,
-    # so a per-row cost drift can be split into "sweep grew" (contention)
-    # vs "rows regressed" by comparing the same row set across trees.
-    # Subset runs write BENCH_SUBSET.json and never touch BENCH_FULL.json.
-    subset_src = os.environ.get("SPARK_GRAFT_BENCH_SUBSET")
-    subset: set[str] | None = None
-    if subset_src:
-        with open(subset_src) as fh:
-            rec = json.load(fh)
-        parsed = (rec.get("parsed") or rec)
-        subset = set(parsed.get("queries", rec.get("queries", {})))
-        # a driver-emitted BENCH_r*.json truncates its queries map to the
-        # slowest rows and records only a COUNT under queries_omitted (the
-        # omitted names live in that round's committed BENCH_FULL.json) —
-        # restricting to the truncated map would silently cover only the
-        # slowest ~30% of rows while reading as "same row set" (ADVICE
-        # r11: a silent cap the repo's own discipline says to surface)
-        omitted = parsed.get("queries_omitted") or rec.get("queries_omitted")
-        if omitted:
-            print(f"WARNING: subset source {subset_src} truncated its "
-                  f"queries map ({omitted} rows omitted; covering only "
-                  f"the {len(subset)} slowest). The attribution record "
-                  f"is PARTIAL — point SPARK_GRAFT_BENCH_SUBSET at that "
-                  f"round's BENCH_FULL.json for the complete row set.",
-                  file=sys.stderr)
-        HEADLINE[:] = [n for n in HEADLINE if n in subset]
-
     # warm-up: every benched table's footer + ts-conversion path, then one
     # query for JVM/codegen
     for t in TABLES:
@@ -328,9 +300,7 @@ def main() -> None:
     # 2x "cold regressions" (r8 driver: champion cold 18.1 s contended
     # vs 8.2 s on the identical tree measured clean).
     cold_warm: dict[str, dict[str, float]] = {}
-    single_run = {n: f for n, f in SINGLE_RUN.items()
-                  if subset is None or n in subset}
-    for name, fn in single_run.items():
+    for name, fn in SINGLE_RUN.items():
         runs = []
         for _ in range(2):
             t0 = time.perf_counter()
@@ -394,7 +364,7 @@ def main() -> None:
     # FASTEST rows are dropped first (the heavy rows are the perf signal;
     # `value` stays the total over ALL rows either way).
     here = os.path.dirname(os.path.abspath(__file__))
-    out_name = "BENCH_SUBSET.json" if subset is not None else "BENCH_FULL.json"
+    out_name = "BENCH_FULL.json"
     with open(os.path.join(here, out_name), "w") as fh:
         json.dump(full, fh, indent=1, sort_keys=True)
 

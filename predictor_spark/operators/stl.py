@@ -293,15 +293,6 @@ def stl_decompose(
     return per_series(df, series_col, ts_col, [value_col], core, schema)
 
 
-def stl_recompose(df: DataFrame, out_col: str = "recomposed") -> DataFrame:
-    """W8 — prediction recomposition trend+seasonal+resid
-    (stl_decomposition_pipeline.py:202-219); uncertainty composes as
-    sqrt(sum of squares) — see recompose_uncertainty."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn(out_col, F.col("trend") + F.col("seasonal") + F.col("resid"))
-
-
 def recompose_uncertainty(df: DataFrame, cols: list[str], out_col: str = "uncertainty") -> DataFrame:
     """W8 — component uncertainties compose as sqrt(Σ u²)
     (stl_decomposition_pipeline.py:214-219)."""

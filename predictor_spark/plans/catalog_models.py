@@ -7,19 +7,18 @@ a deterministic pure-numpy N-BEATS (models/nbeats.py) trained PER SERIES
 inside one applyInPandas stage (models/estimator.py) — N series = N
 models, one shuffle.
 
-Training is not SQL-expressible, so these entries are rows-only for the
-driver; the strong check is the differential pytest
+Training is not SQL-expressible, so the registered rows here are the
+families' forward passes with literal seeded weights and the loss
+family, each replayed by its DuckDB oracle. Training is checked by the differential pytest
 (tests/test_models_nbeats.py::test_spark_matches_local_numpy: the Spark
-path reproduces a local numpy run bit-for-bit given the seed) plus the
-beats-naive criterion asserted both in pytest and by the n_beats_naive
-flag column below.
+path reproduces a local numpy run bit-for-bit given the seed) and its
+beats-naive criterion.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from predictor_spark.models.estimator import nbeats_fit_predict_per_series
 from predictor_spark.plans.catalog import _t, query
 
 _CUTOFF = "2024-01-22 00:00:00"
@@ -196,30 +195,6 @@ def _register_forward_companions() -> None:
 
 
 _register_forward_companions()
-
-
-# NOT @query-registered: full Adam training trajectories are not
-# SQL-replayable, so these rows could never be value-verified (VERDICT r2:
-# de-register; nbeats_forward_pass above is the family's hard-gate row and
-# tests/test_models_nbeats.py holds bit-equality training coverage).
-def nbeats_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series N-BEATS trained distributedly (applyInPandas, seeded per
-    series), scored on held-out windows vs the persistence baseline,
-    aggregated like flagship_persistence_metrics. beats_naive must be true
-    for the model family to count as working (VERDICT r1 #2)."""
-    ev = _t(spark, sf_dir, "events")
-    scored = nbeats_fit_predict_per_series(
-        ev, train_end=_CUTOFF, window=8, horizons=(1,), seed=0,
-    )
-    p, t, b = F.col("pred_h1"), F.col("target_h1"), F.col("baseline")
-    return (
-        scored.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(F.abs(p - t)), 4).alias("mae"),
-            F.round(F.avg(F.abs(b - t)), 4).alias("naive_mae"),
-        )
-        .withColumn("beats_naive", F.col("mae") < F.col("naive_mae"))
-    )
 
 
 @query(

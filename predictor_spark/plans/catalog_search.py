@@ -1,20 +1,16 @@
-"""Catalog part 9 — evolutionary search queries (GA over Spark-evaluated
-candidates).
+"""Catalog part 9 — ARIMA(p,d,q) order selection by AIC.
 
-The GA loop (plans/ga.py) is driver-side genome bookkeeping; every
-candidate evaluation is a Spark job over the cluster. Trajectories are
-rows-only for the driver gate (a SQL oracle cannot replay a generational
-GA); the machinery itself is pinned by the pure-Python differential
-oracle in tests/test_ga.py.
+The GA family's registered row is a12_ga_fitness (the fitness scalar).
+The GA loop over Spark-evaluated candidates runs in plans/model_search.py
+(bench.py's ga_nbeats_search row) and is pinned by the pure-Python
+differential oracle in tests/test_ga.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from predictor_spark.plans.catalog import _t, query
-from predictor_spark.plans.ga import ga_search
-from predictor_spark.operators.localrel import ONE_ROW, collect_bounded, local_df
+from predictor_spark.plans.catalog import query
 
 _CUTOFF = "2024-01-22 00:00:00"
 
@@ -91,60 +87,6 @@ def _arima_oracle() -> str:
     SELECT user_id, n_d0, n_d1, {', '.join(aic_select_exprs())}
     FROM sm0 JOIN sm1 USING (user_id)
     """)
-
-
-# NOT @query-registered: the generational trajectory depends on numpy PCG64
-# draws (selection/crossover/mutation), which no SQL oracle can replay, so a
-# registry row could never be value-verified (VERDICT r2: de-register the
-# unverifiable rows; the GA family's hard-gate row is a12_ga_fitness and the
-# search loop itself is pure-Python-oracle pytest-verified in tests/test_ga.py).
-def ga_fitness_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded GA (pop 6, 3 generations, cxTwoPoint + Gaussian mutate +
-    tournament-3) minimizing held-out MAE of a shrunk-persistence
-    forecaster: pred = (1-shrink)*series_train_mean + shrink*value at
-    horizon `lag`. The genome is the reference's bounds-dict shape
-    (default_optimizer.py:72-88) with one int and one float gene.
-
-    The evaluation base (per-series train means + multi-lag targets) is
-    computed ONCE and cached; each candidate is then a single aggregate
-    job, so a generation of candidates fans out as concurrent tiny jobs —
-    the 100 TB shape, where each candidate would be a full train/score
-    program instead."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    cutoff = F.lit(_CUTOFF).cast("timestamp")
-    base = (
-        ev.select("user_id", "ts", "value")
-        .withColumn("mu", F.avg(F.when(F.col("ts") < cutoff, F.col("value")))
-                    .over(Window.partitionBy("user_id")))
-        .withColumns({f"t{h}": F.lead("value", h).over(w) for h in (1, 2, 3)})
-        .filter(F.col("ts") >= cutoff)
-        .cache()
-    )
-    base.count()
-
-    def evaluate(params: dict) -> float:
-        lag, shrink = int(params["lag"]), float(params["shrink"])
-        pred = (1.0 - shrink) * F.col("mu") + shrink * F.col("value")
-        row = collect_bounded(base.filter(F.col(f"t{lag}").isNotNull()).agg(
-            F.avg(F.abs(pred - F.col(f"t{lag}"))).alias("mae")
-        ), ONE_ROW, "ga candidate mae")[0]
-        return float(row["mae"])
-
-    res = ga_search(
-        {"lag": (1, 3), "shrink": (0.0, 1.0)}, evaluate,
-        pop_size=6, n_generations=3, cxpb=0.5, mutpb=0.4, indpb=0.5,
-        seed=7, max_parallel=6,
-    )
-    rows = [
-        (h["generation"], round(h["best_fitness"], 4), round(h["mean_fitness"], 4),
-         int(h["best_params"]["lag"]), round(h["best_params"]["shrink"], 6))
-        for h in res.history
-    ]
-    return local_df(spark, 
-        rows, "generation int, best_fitness double, mean_fitness double, "
-              "best_lag int, best_shrink double",
-    )
 
 
 @query("arima_order_select_aic", oracle=_arima_oracle())

@@ -12,6 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ceiling of the default driver heap
+MAX_DRIVER_MEM = 16 << 30
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set (a
+    deployment setting), else a quarter of physical memory capped at
+    16g. The driver JVM grows its heap toward its cap before it
+    collects, so a cap equal to the box's memory lets two engine
+    processes on one box get OOM-killed."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 4, MAX_DRIVER_MEM) >> 20}m"
+
 
 def get_spark(app_name: str = "predictor_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
@@ -52,7 +67,7 @@ def get_spark(app_name: str = "predictor_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.execution.arrow.localRelationThreshold",
                 str(256 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS",

@@ -139,14 +139,3 @@ def _auto_recover_path(path: str) -> str:
             if isinstance(v, str) and v.endswith(ALLOWED_EXTENSIONS):
                 return v
     return path
-
-
-def load_normalization_json(path: str) -> dict[str, dict[str, float]]:
-    """S4 — {col: {mean,std}} / {col: {min,max}} sidecar
-    (preprocessor_plugins/helpers.py:88-101). Tiny: plain driver-side dict,
-    broadcast by literal-folding into column expressions."""
-    with open(path) as fh:
-        stats = json.load(fh)
-    if not isinstance(stats, dict):
-        raise ValueError("normalization JSON must be an object of per-column stats")
-    return stats

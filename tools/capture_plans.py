@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from predictor_spark.session import get_spark  # noqa: E402
 
@@ -25,7 +26,7 @@ def main() -> None:
     spark = get_spark("capture_plans")
     import __spark_entry__ as entry_mod
     qs = entry_mod.queries()
-    out_dir = "/root/repo/plans/r15"
+    out_dir = os.path.join(ROOT, "plans", "r15")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         if name not in qs:

@@ -18,10 +18,11 @@ Usage: python tools/determinism_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from predictor_spark.session import get_spark  # noqa: E402
 from tools.check_correctness import normalize_pdf  # noqa: E402

@@ -15,10 +15,12 @@ Writes SCALING.md (or out_md) with one table, and prints it.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF1_DIR = "/tmp/predictor_spark_sf1"
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1",
@@ -139,7 +141,7 @@ def main() -> None:
         "  ~1.5; the join, now genuinely, is what remains.",
     ]
     out = "\n".join(lines) + "\n"
-    path = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/SCALING.md"
+    path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "SCALING.md")
     with open(path, "w") as f:
         f.write(out)
     print(out)

@@ -32,10 +32,11 @@ held set is a judgment call recorded in PARALLELISM_AUDIT.md.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from predictor_spark.session import get_spark  # noqa: E402
 
